@@ -1,0 +1,1 @@
+"""Helpers of the repository benchmark (see perfbench/README.md)."""
