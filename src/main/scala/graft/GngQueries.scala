@@ -150,7 +150,7 @@ object GngQueries {
       val rows = m.nodes.toSeq.zipWithIndex.map { case (p, i) =>
         val cList = p.centroid.map(v => s"CAST($v AS DOUBLE)").mkString("[", ", ", "]")
         s"($i, ${p.id}, CAST(${m.clusterWeights(i)} AS DOUBLE), " +
-          s"CAST(${m.errors(i)} AS DOUBLE), ${p.assignedIds.size}, $cList)"
+          s"CAST(${m.errors(i)} AS DOUBLE), ${p.nAssigned}, $cList)"
       }.mkString(",\n  ")
       s"""WITH p(node_idx, node_id, weight, error_raw, n_assigned, c) AS (VALUES
          |  $rows)
@@ -203,7 +203,7 @@ object GngQueries {
       import s.implicits._
       m.nodes.toSeq.zipWithIndex.map { case (p, i) =>
         (i, p.id, m.clusterWeights(i), math.round(m.errors(i) * 1e4) / 1e4,
-          p.assignedIds.size,
+          math.toIntExact(p.nAssigned), // served as int; overflow fails loud
           p.centroid.map(v =>
             java.math.BigDecimal.valueOf(math.round(v * 1e6), 6).toPlainString)
             .mkString(", "))
@@ -347,7 +347,7 @@ object GngQueries {
       while (model.nodeCount <= cap && kk < 200) {
         kk += 1
         val pts = Array.tabulate(growBatch)(x => mkPoint(kk.toLong * growBatch + x))
-        val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids)
+        val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids, model.seedWatch)
         if (stats.nonEmpty) model.update(stats, kk)
       }
       val growBatches = kk
@@ -361,7 +361,7 @@ object GngQueries {
           mkPoint(1000000L + (b.toLong + 2) * batchPts + x))
         val ds = s.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(local))
         val t0 = System.nanoTime()
-        val stats = graft.operators.GngOps.assignAggregate(ds, model.centroids)
+        val stats = graft.operators.GngOps.assignAggregate(ds, model.centroids, model.seedWatch)
         val t1 = System.nanoTime()
         if (stats.nonEmpty) model.update(stats, kk)
         if (b >= 0) {

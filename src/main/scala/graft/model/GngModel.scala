@@ -5,21 +5,24 @@ import scala.collection.mutable.ArrayBuffer
 /** Per-winner-node aggregated statistics for one micro-batch: the output
   * of the distributed assign+aggregate step and the input of the driver
   * update rule. Mirrors the reference's aggregateByKey value tuple
-  * `(one-hot bmu2 votes, Σdist², Σx, n, ids)` (batchStreamModel.scala:66-78).
+  * `(one-hot bmu2 votes, Σdist², Σx, n, ids)` (batchStreamModel.scala:66-78),
+  * with the id set replaced by the count it is read through.
   *
-  * @param votes  per-node second-BMU vote counts (length = node count at
-  *               assignment time)
-  * @param errSum Σ squared distance of the points this node won
-  * @param vecSum elementwise Σ of the winning points' feature vectors
-  * @param count  number of points won
-  * @param ids    ids of the points won
+  * @param votes     per-node second-BMU vote counts (length = node count
+  *                  at assignment time)
+  * @param errSum    Σ squared distance of the points this node won
+  * @param vecSum    elementwise Σ of the winning points' feature vectors
+  * @param count     number of points won
+  * @param nAssigned what this batch adds to the winner's
+  *                  [[Prototype.nAssigned]]: `count` less the winner's
+  *                  re-wins of its own bootstrap point ([[SeedWatch]])
   */
 final case class NodeStats(
     votes: Array[Long],
     errSum: Double,
     vecSum: Array[Double],
     count: Long,
-    ids: Set[Long]) {
+    nAssigned: Long) {
 
   def merge(o: NodeStats): NodeStats = {
     val v = new Array[Long](votes.length)
@@ -28,8 +31,31 @@ final case class NodeStats(
     val s = new Array[Double](vecSum.length)
     i = 0
     while (i < s.length) { s(i) = vecSum(i) + o.vecSum(i); i += 1 }
-    NodeStats(v, errSum + o.errSum, s, count + o.count, ids union o.ids)
+    NodeStats(v, errSum + o.errSum, s, count + o.count, nAssigned + o.nAssigned)
   }
+}
+
+/** The bootstrap points the assign step must not count twice: node
+  * index → seed point id for the (≤ 2) live bootstrap nodes. Each seed
+  * point is counted at [[GngModel.init2Nodes]]; when the stream later
+  * delivers it again and its own node wins it, the reference's id-set
+  * union absorbed the duplicate, and this watch lets a plain count do
+  * the same. A seed point won by any other node counts there as usual.
+  */
+final case class SeedWatch(nodeIdx: Array[Int], pointIds: Array[Long]) {
+  /** True when point `id` is node `bmu`'s own, already counted, seed. */
+  def hit(bmu: Int, id: Long): Boolean = {
+    var k = 0
+    while (k < nodeIdx.length) {
+      if (nodeIdx(k) == bmu && pointIds(k) == id) return true
+      k += 1
+    }
+    false
+  }
+}
+
+object SeedWatch {
+  val empty: SeedWatch = SeedWatch(Array.empty, Array.empty)
 }
 
 /** The evolving G-Stream graph: nodes (prototypes), 0/1 adjacency matrix,
@@ -37,10 +63,12 @@ final case class NodeStats(
   * decayed weight — driver-held state, exactly the reference's
   * `batchStreamModel` fields (batchStreamModel.scala:13-21).
   *
-  * The matrices are O(N²) with N ≤ `params.maxNodes` (300) — a few KB;
+  * The in-memory matrices are O(N²) with N ≤ `params.maxNodes` (300);
   * the driver update is O(N² + stats) per batch and never touches the
   * distributed data (SURVEY §7.4.8: only ≤N stat rows reach the driver,
-  * which is what makes the design scale).
+  * which is what makes the design scale). Every per-node field is a
+  * fixed-size value, so the persisted form ([[GngModel.toBytes]]) is
+  * bounded by model size, never by stream length.
   *
   * Semantics ported from SURVEY.md §2.9 T2-T10 / §3.3 with the §7.4
   * decisions: canonical stats order (sorted by node index), monotonic
@@ -61,14 +89,19 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
   private var nextId: Int = 0
   private def freshId(): Int = { nextId += 1; nextId }
 
+  /** Bootstrap node id → its seed point id (≤ 2 entries, fixed at
+    * [[init2Nodes]]); see [[SeedWatch]]. */
+  private var seeds: Array[(Int, Long)] = Array.empty
+
   def nodeCount: Int = nodes.length
 
   /** Bootstrap: a 2-node graph from the first two points
     * (batchStream.scala:72-78 → batchStreamModel.scala:35-43). */
   def init2Nodes(p1: Point, p2: Point): this.type = {
     require(nodes.isEmpty, "model already initialized")
-    nodes += Prototype(freshId(), p1.features.clone(), Set(p1.id))
-    nodes += Prototype(freshId(), p2.features.clone(), Set(p2.id))
+    nodes += Prototype(freshId(), p1.features.clone(), 1L)
+    nodes += Prototype(freshId(), p2.features.clone(), 1L)
+    seeds = Array(nodes(0).id -> p1.id, nodes(1).id -> p2.id)
     edges += ArrayBuffer(0, 1) += ArrayBuffer(1, 0)
     ages += ArrayBuffer(Double.NaN, 0.0) += ArrayBuffer(0.0, Double.NaN)
     errors += 0.0 += 0.0
@@ -77,6 +110,16 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
   }
 
   def centroids: Array[Array[Double]] = nodes.map(_.centroid).toArray
+
+  /** The seed points of the bootstrap nodes still live, by current node
+    * index — pass it with [[centroids]] to the assign step. */
+  def seedWatch: SeedWatch = {
+    val live = seeds.flatMap { case (nodeId, pointId) =>
+      val i = nodes.indexWhere(_.id == nodeId)
+      if (i >= 0) Some(i -> pointId) else None
+    }
+    SeedWatch(live.map(_._1), live.map(_._2))
+  }
 
   private def neighborsOf(i: Int): Seq[Int] =
     edges(i).zipWithIndex.filter(_._1 == 1).map(_._2).toSeq
@@ -141,7 +184,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       while (d < dim) { cent(d) = num(d) / denSafe; d += 1 }
       nodes(s1) = nodes(s1).copy(
         centroid = cent,
-        assignedIds = nodes(s1).assignedIds union st.ids) // U1 (:163)
+        nAssigned = nodes(s1).nAssigned + st.nAssigned) // U1 (:163)
       clusterWeights(s1) += st.count.toDouble
       errors(s1) += st.errSum // A4 (:205)
 
@@ -235,7 +278,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     var d = 0
     while (d < dim) { mid(d) = (nodes(q).centroid(d) + nodes(f).centroid(d)) / 2.0; d += 1 }
     val r = nodes.length
-    appendNode(Prototype(freshId(), mid, Set.empty), weight = 0.0)
+    appendNode(Prototype(freshId(), mid, 0L), weight = 0.0)
     // rewire: q–r, r–f created (age 0); q–f dropped
     edges(q)(r) = 1; edges(r)(q) = 1; ages(q)(r) = 0.0; ages(r)(q) = 0.0
     edges(f)(r) = 1; edges(r)(f) = 1; ages(f)(r) = 0.0; ages(r)(f) = 0.0
@@ -287,45 +330,149 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       j <- (i + 1) until nodes.length
       if edges(i)(j) == 1
     } yield (i, j, ages(i)(j))).toSeq
-
-  /** Checkpoint the full model state (the reference has no model
-    * recovery — SURVEY §7.4.7 adds it so a foreachBatch loop can restart
-    * from the last completed batch). Plain Java serialization: the model
-    * is a few KB of driver state, not data. */
-  def save(path: java.nio.file.Path): Unit = {
-    val out = new java.io.ObjectOutputStream(
-      java.nio.file.Files.newOutputStream(path))
-    try out.writeObject(this) finally out.close()
-  }
 }
 
 object GngModel {
-  /** Restore a checkpointed model (inverse of [[GngModel.save]]). */
-  def load(path: java.nio.file.Path): GngModel = {
-    val in = new java.io.ObjectInputStream(
-      java.nio.file.Files.newInputStream(path))
-    try in.readObject().asInstanceOf[GngModel] finally in.close()
-  }
+
+  /** "GNGS" — the first word of every model recovery point. */
+  private val Magic = 0x474e4753
+  /** Layout version; bump it with every change to [[write]]/[[read]]. */
+  private val Version = 1
 
   /** Training-loop recovery point: the model PLUS the 1-based non-empty
     * batch counter `kk`, in ONE file so the pair can never tear. kk is
     * loop state, not model state — but fading (kk % 3), the snapshot
     * cadence, and node insertion all key off it, so a restart that
     * reset kk to 0 would silently diverge from the never-killed run
-    * (the restart spec asserts the two runs end bit-identical). */
+    * (the restart spec asserts the two runs end bit-identical). The
+    * payload is [[toBytes]]'s layout. */
   def saveState(path: java.nio.file.Path, model: GngModel, kk: Int): Unit = {
-    val out = new java.io.ObjectOutputStream(
-      java.nio.file.Files.newOutputStream(path))
-    try { out.writeInt(kk); out.writeObject(model) } finally out.close()
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      java.nio.file.Files.newOutputStream(path)))
+    try write(model, kk, out) finally out.close()
   }
 
-  /** Inverse of [[saveState]] → (model, kk). */
+  /** Inverse of [[saveState]] → (model, kk). A file in any other layout
+    * (a foreign or older format, a truncated or padded payload) fails
+    * with an IllegalArgumentException naming the path. */
   def loadState(path: java.nio.file.Path): (GngModel, Int) = {
-    val in = new java.io.ObjectInputStream(
-      java.nio.file.Files.newInputStream(path))
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+      java.nio.file.Files.newInputStream(path)))
+    try read(in, path.toString, java.nio.file.Files.size(path)) finally in.close()
+  }
+
+  /** The versioned primitive layout of (model, kk), all big-endian:
+    * {{{
+    * magic:i32 version:i32 kk:i32 params dim:i32 nextId:i32
+    * seeds:     n:i32 (nodeId:i32 pointId:i64)*n
+    * nodes:     n:i32 (id:i32 centroid:f64*dim nAssigned:i64)*n
+    * outdated:  the same shape
+    * isolated:  the same shape
+    * edges:     e:i32 (i:i32 j:i32 age:f64)*e     i < j, upper triangle
+    * errors:    f64 * nodes
+    * weights:   f64 * nodes
+    * }}}
+    * `params` is GngParams' fields in declaration order (f64 or i32).
+    * Size: 144 bytes of header (with both bootstrap seeds), 8·(dim+3)+4
+    * per live node, 16 per edge and 8·(dim+1)+4 per archived node — the
+    * model's size, not the stream's. Absent matrix cells are rebuilt as
+    * "no edge" (0, age NaN), so the round trip is bit-identical. */
+  def toBytes(model: GngModel, kk: Int): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    write(model, kk, out)
+    out.flush()
+    bos.toByteArray
+  }
+
+  /** Inverse of [[toBytes]] → (model, kk); rejects foreign bytes like
+    * [[loadState]]. */
+  def fromBytes(bytes: Array[Byte]): (GngModel, Int) =
+    read(new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)),
+      "model bytes", bytes.length.toLong)
+
+  private def write(m: GngModel, kk: Int, out: java.io.DataOutputStream): Unit = {
+    out.writeInt(Magic); out.writeInt(Version); out.writeInt(kk)
+    val p = m.params
+    out.writeDouble(p.decayFactor); out.writeDouble(p.lambdaAge)
+    out.writeDouble(p.maxAge); out.writeInt(p.nbNodesToAdd)
+    out.writeDouble(p.minWeight); out.writeDouble(p.alphaErr)
+    out.writeDouble(p.errorDecay); out.writeInt(p.voisinage)
+    out.writeDouble(p.temperature); out.writeInt(p.fadeEvery)
+    out.writeInt(p.fadeMinNodes); out.writeInt(p.growEvery)
+    out.writeInt(p.maxNodes)
+    out.writeInt(m.dim); out.writeInt(m.nextId)
+    out.writeInt(m.seeds.length)
+    for ((nodeId, pointId) <- m.seeds) { out.writeInt(nodeId); out.writeLong(pointId) }
+    for (group <- Seq(m.nodes, m.outdatedNodes, m.isolatedNodes)) {
+      out.writeInt(group.length)
+      for (n <- group) {
+        out.writeInt(n.id)
+        n.centroid.foreach(out.writeDouble)
+        out.writeLong(n.nAssigned)
+      }
+    }
+    val edges = m.edgeList
+    out.writeInt(edges.length)
+    for ((i, j, age) <- edges) { out.writeInt(i); out.writeInt(j); out.writeDouble(age) }
+    m.errors.foreach(out.writeDouble)
+    m.clusterWeights.foreach(out.writeDouble)
+  }
+
+  private def read(in: java.io.DataInputStream, source: String, size: Long): (GngModel, Int) = {
+    var found = "no version"
+    def fail(what: String): Nothing = throw new IllegalArgumentException(
+      s"$source: $what; found $found, this build reads G-Stream recovery point version $Version")
+    // a count is plausible only if its items fit in the payload — a
+    // corrupt count fails here instead of allocating gigabytes
+    def count(what: String, itemBytes: Long): Int = {
+      val n = in.readInt()
+      if (n < 0 || n * itemBytes > size) fail(s"implausible $what count $n")
+      n
+    }
     try {
+      val magic = in.readInt()
+      if (magic != Magic) fail(f"not a G-Stream recovery point (magic 0x$magic%08x)")
+      val version = in.readInt()
+      found = s"version $version"
+      if (version != Version) fail("unknown layout version")
       val kk = in.readInt()
-      (in.readObject().asInstanceOf[GngModel], kk)
-    } finally in.close()
+      val params = GngParams(
+        decayFactor = in.readDouble(), lambdaAge = in.readDouble(),
+        maxAge = in.readDouble(), nbNodesToAdd = in.readInt(),
+        minWeight = in.readDouble(), alphaErr = in.readDouble(),
+        errorDecay = in.readDouble(), voisinage = in.readInt(),
+        temperature = in.readDouble(), fadeEvery = in.readInt(),
+        fadeMinNodes = in.readInt(), growEvery = in.readInt(),
+        maxNodes = in.readInt())
+      val dim = count("dimension", 8)
+      val m = new GngModel(params, dim)
+      m.nextId = in.readInt()
+      m.seeds = Array.fill(count("seed", 12))(in.readInt() -> in.readLong())
+      for (group <- Seq(m.nodes, m.outdatedNodes, m.isolatedNodes)) {
+        val n = count("node", 12L + 8L * dim)
+        for (_ <- 0 until n)
+          group += Prototype(in.readInt(), Array.fill(dim)(in.readDouble()), in.readLong())
+      }
+      val n = m.nodes.length
+      for (i <- 0 until n) {
+        m.edges += ArrayBuffer.fill(n)(0)
+        m.ages += ArrayBuffer.fill(n)(Double.NaN)
+      }
+      for (_ <- 0 until count("edge", 16)) {
+        val i = in.readInt()
+        val j = in.readInt()
+        val age = in.readDouble()
+        if (i < 0 || i >= j || j >= n) fail(s"edge ($i, $j) outside the upper triangle of $n nodes")
+        m.edges(i)(j) = 1; m.edges(j)(i) = 1
+        m.ages(i)(j) = age; m.ages(j)(i) = age
+      }
+      for (_ <- 0 until n) m.errors += in.readDouble()
+      for (_ <- 0 until n) m.clusterWeights += in.readDouble()
+      if (in.read() != -1) fail("trailing bytes after the model")
+      (m, kk)
+    } catch {
+      case _: java.io.EOFException => fail("truncated payload")
+    }
   }
 }

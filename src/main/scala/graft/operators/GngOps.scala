@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 import scala.collection.mutable
-import graft.model.{NodeStats, Point}
+import graft.model.{NodeStats, Point, SeedWatch}
 
 /** The distributed half of the G-Stream micro-batch update: nearest-
   * prototype assignment + per-winner statistics aggregation
@@ -43,49 +43,60 @@ object GngOps {
     (b1, if (b2 >= 0) b2 else b1, d1)
   }
 
+  /** One winner node's running sums within a partition. */
+  private final class Cell(nNodes: Int, dim: Int) extends Serializable {
+    val votes = new Array[Long](nNodes)
+    var errSum = 0.0
+    val vecSum = new Array[Double](dim)
+    var count = 0L
+    var seedHits = 0L
+
+    def merge(o: Cell): Unit = {
+      var i = 0
+      while (i < votes.length) { votes(i) += o.votes(i); i += 1 }
+      errSum += o.errSum
+      i = 0
+      while (i < vecSum.length) { vecSum(i) += o.vecSum(i); i += 1 }
+      count += o.count
+      seedHits += o.seedHits
+    }
+  }
+
   /** Mutable per-partition accumulator keyed by winner node. */
-  private final class Acc(nNodes: Int, dim: Int) extends Serializable {
-    val map: mutable.HashMap[Int, (Array[Long], Array[Double], Array[Double], Array[Long], mutable.Set[Long])] =
-      mutable.HashMap.empty
-    // value = (votes, [errSum], vecSum, [count], ids) — boxed scalars in
-    // single-cell arrays to keep everything mutable in place.
+  private final class Acc(nNodes: Int, dim: Int, seeds: SeedWatch) extends Serializable {
+    val map: mutable.HashMap[Int, Cell] = mutable.HashMap.empty
     def add(bmu1: Int, bmu2: Int, dsq: Double, features: Array[Double], id: Long): Unit = {
-      val e = map.getOrElseUpdate(bmu1,
-        (new Array[Long](nNodes), new Array[Double](1), new Array[Double](dim),
-          new Array[Long](1), mutable.Set.empty[Long]))
-      e._1(bmu2) += 1
-      e._2(0) += dsq
-      val vs = e._3
+      val e = map.getOrElseUpdate(bmu1, new Cell(nNodes, dim))
+      e.votes(bmu2) += 1
+      e.errSum += dsq
+      val vs = e.vecSum
       var k = 0
       while (k < dim) { vs(k) += features(k); k += 1 }
-      e._4(0) += 1
-      e._5 += id
+      e.count += 1
+      if (seeds.hit(bmu1, id)) e.seedHits += 1
     }
     def merge(o: Acc): Acc = {
       for ((k, ov) <- o.map) {
         map.get(k) match {
           case None => map.put(k, ov)
-          case Some(e) =>
-            var i = 0
-            while (i < e._1.length) { e._1(i) += ov._1(i); i += 1 }
-            e._2(0) += ov._2(0)
-            i = 0
-            while (i < e._3.length) { e._3(i) += ov._3(i); i += 1 }
-            e._4(0) += ov._4(0)
-            e._5 ++= ov._5
+          case Some(e) => e.merge(ov)
         }
       }
       this
     }
     def result: Array[(Int, NodeStats)] =
       map.iterator.map { case (k, e) =>
-        k -> NodeStats(e._1, e._2(0), e._3, e._4(0), e._5.toSet)
+        k -> NodeStats(e.votes, e.errSum, e.vecSum, e.count, e.count - e.seedHits)
       }.toArray.sortBy(_._1)
   }
 
   /** Distributed assign + aggregate: one narrow pass, no shuffle.
-    * Result: per-winner stats in canonical (ascending index) order. */
-  def assignAggregate(points: Dataset[Point], centroids: Array[Array[Double]]): Array[(Int, NodeStats)] = {
+    * Result: per-winner stats in canonical (ascending index) order.
+    * `seeds` is the model's [[graft.model.GngModel.seedWatch]]; without
+    * it a stream that re-delivers a bootstrap point counts it twice in
+    * [[NodeStats.nAssigned]]. */
+  def assignAggregate(points: Dataset[Point], centroids: Array[Array[Double]],
+      seeds: SeedWatch = SeedWatch.empty): Array[(Int, NodeStats)] = {
     if (centroids.isEmpty) return Array.empty
     val dim = centroids(0).length
     val n = centroids.length
@@ -99,7 +110,7 @@ object GngOps {
       // only a handful of partitions (local mode / small batches)
       val depth = if (rdd.getNumPartitions > 16) 2 else 1
       rdd
-        .treeAggregate(new Acc(n, dim))(
+        .treeAggregate(new Acc(n, dim, seeds))(
           seqOp = (acc, p) => {
             val (b1, b2, d1) = twoNearest(p.features, bc.value)
             acc.add(b1, b2, d1, p.features, p.id)
@@ -113,9 +124,10 @@ object GngOps {
 
   /** Driver-local variant for tiny batches (no Spark job): identical
     * semantics, used by tests and the small-batch fast path. */
-  def assignAggregateLocal(points: Iterable[Point], centroids: Array[Array[Double]]): Array[(Int, NodeStats)] = {
+  def assignAggregateLocal(points: Iterable[Point], centroids: Array[Array[Double]],
+      seeds: SeedWatch = SeedWatch.empty): Array[(Int, NodeStats)] = {
     if (centroids.isEmpty) return Array.empty
-    val acc = new Acc(centroids.length, centroids(0).length)
+    val acc = new Acc(centroids.length, centroids(0).length, seeds)
     for (p <- points) {
       val (b1, b2, d1) = twoNearest(p.features, centroids)
       acc.add(b1, b2, d1, p.features, p.id)

@@ -93,7 +93,7 @@ object GStream {
       var kk = 0
       for (c <- 0 until nChunks) {
         val chunk = cached.filter(col("id") % nChunks === c)
-        val stats = GngOps.assignAggregate(chunk, model.centroids)
+        val stats = GngOps.assignAggregate(chunk, model.centroids, model.seedWatch)
         if (stats.nonEmpty) { // P4 empty-batch guard (batchStream.scala:87)
           kk += 1
           model.update(stats, kk)
@@ -121,7 +121,7 @@ object GStream {
       // plain `%` (not floorMod) — same remainder semantics as the
       // distributed path's `col("id") % nChunks`
       val chunk = points.filter(p => p.id % nChunks == c)
-      val stats = GngOps.assignAggregateLocal(chunk, model.centroids)
+      val stats = GngOps.assignAggregateLocal(chunk, model.centroids, model.seedWatch)
       if (stats.nonEmpty) {
         kk += 1
         model.update(stats, kk)
@@ -246,8 +246,8 @@ object GStream {
           localPathMaxCells / math.max(model.dim, 1)).toInt
         val probe = batch.limit(cap + 1).collect()
         val stats =
-          if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids)
-          else GngOps.assignAggregate(batch, model.centroids)
+          if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids, model.seedWatch)
+          else GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
         if (stats.nonEmpty) {
           kk += 1
           model.update(stats, kk)
@@ -262,7 +262,8 @@ object GStream {
           // atomic move, so a crash never leaves a torn checkpoint).
           // The payload is (kk, model) in one file — GngModel.loadState —
           // so a restart resumes the batch counter too, not just the
-          // prototype state.
+          // prototype state. Its size depends on the model, not on how
+          // long the stream has run (GngModel.toBytes).
           modelCheckpoint.foreach { dir =>
             val d = java.nio.file.Paths.get(dir)
             java.nio.file.Files.createDirectories(d)

@@ -18,7 +18,7 @@ import graft.model.{GngModel, GngParams, Point}
   * single-model local path runs, proven equal to the distributed
   * path by GngOpsSpec). N tenants train N models in PARALLEL with
   * zero driver state and one shuffle (the groupByKey); each model is
-  * a few hundred KB of prototypes, so the collected result is
+  * a few KB of prototypes and edges ([[GngModel.toBytes]]), so the collected result is
   * dimension-sized. The fit for a single key must fit one task — a
   * tenant too large for that is exactly the case the single-model
   * distributed path exists for.
@@ -36,14 +36,18 @@ object GStreamKeyed {
   final case class KeyedPoint(key: Long, features: Array[Double], label: Int, id: Long)
 
   /** Per-trigger emission of the streaming path: the key's updated
-    * model (serialized), its 1-based non-empty-batch counter, and the
-    * node count — the last row per key (max kk) IS the final model. */
+    * model ([[GngModel.toBytes]]), its 1-based non-empty-batch counter,
+    * and the node count — the last row per key (max kk) IS the final
+    * model. */
   final case class KeyedGngUpdate(key: Long, kk: Int, nodeCount: Int, model: Array[Byte])
 
   /** Streaming state per key: points buffered before the 2-point
-    * bootstrap, then the serialized model + batch counter. */
+    * bootstrap (Java-serialized), then the model ([[GngModel.toBytes]])
+    * + batch counter. */
   final case class KeyedGngState(pending: Array[Byte], model: Array[Byte], kk: Int)
 
+  /** Java serialization — only for the pre-bootstrap `Array[Point]`
+    * buffer; models use [[GngModel.toBytes]]. */
   private[graft] def serialize(obj: AnyRef): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.ObjectOutputStream(bos)
@@ -102,10 +106,10 @@ object GStreamKeyed {
         val pts = it.map(kp => Point(kp.features, kp.label, kp.id)).toArray
         require(pts.length >= 2, s"key $key: need at least 2 points to bootstrap")
         // canonical order — group iterators deliver in shuffle order
-        (key, serialize(GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks)))
+        (key, GngModel.toBytes(GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks), nChunks))
       }
       .collect()
-      .map { case (k, bytes) => k -> deserialize[GngModel](bytes) }
+      .map { case (k, bytes) => k -> GngModel.fromBytes(bytes)._1 }
       .toMap
   }
 
@@ -125,8 +129,8 @@ object GStreamKeyed {
     *    updated key per trigger; the max-kk row per key is the final
     *    model ([[finalModels]]).
     *
-    * State is per-key and bounded (one model ≈ prototypes + N² byte
-    * matrices); the state store shards it across executors, so the
+    * State is per-key and bounded (one model ≈ prototypes + edge list,
+    * [[GngModel.toBytes]]); the state store shards it across executors, so the
     * driver never holds ANY model — the opposite of the single-model
     * design, and the property that lets tenant count scale with the
     * cluster. Run with a checkpointLocation for restartability: the
@@ -152,14 +156,15 @@ object GStreamKeyed {
           modelBytes match {
             case Some(mb) =>
               // established model: this batch is one update
-              val model = deserialize[GngModel](mb)
-              val stats = graft.operators.GngOps.assignAggregateLocal(arrived, model.centroids)
+              val model = GngModel.fromBytes(mb)._1
+              val stats = graft.operators.GngOps.assignAggregateLocal(arrived, model.centroids, model.seedWatch)
               if (stats.isEmpty) Iterator.empty
               else {
                 val kk = kk0 + 1
                 model.update(stats, kk)
-                state.update(KeyedGngState(Array.emptyByteArray, serialize(model), kk))
-                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, serialize(model)))
+                val bytes = GngModel.toBytes(model, kk)
+                state.update(KeyedGngState(Array.emptyByteArray, bytes, kk))
+                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, bytes))
               }
             case None =>
               val all = (pending.map(deserialize[Array[Point]]).getOrElse(Array.empty[Point])
@@ -174,10 +179,11 @@ object GStreamKeyed {
                 val model = new GngModel(params, all(0).features.length)
                   .init2Nodes(all(0), all(1))
                 val rest = all.drop(2)
-                val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids)
+                val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids, model.seedWatch)
                 val kk = if (stats.nonEmpty) { model.update(stats, 1); 1 } else 0
-                state.update(KeyedGngState(Array.emptyByteArray, serialize(model), kk))
-                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, serialize(model)))
+                val bytes = GngModel.toBytes(model, kk)
+                state.update(KeyedGngState(Array.emptyByteArray, bytes, kk))
+                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, bytes))
               }
           }
         }
@@ -189,7 +195,7 @@ object GStreamKeyed {
   def finalModels(updates: Seq[KeyedGngUpdate]): Map[Long, (GngModel, Int)] =
     updates.groupBy(_.key).map { case (k, rows) =>
       val last = rows.maxBy(_.kk)
-      k -> ((deserialize[GngModel](last.model), last.kk))
+      k -> ((GngModel.fromBytes(last.model)._1, last.kk))
     }
 
   // ---- tenant-scale persistent state (round-12: no driver collect) -------
@@ -209,7 +215,7 @@ object GStreamKeyed {
         val pts = it.map(kp => Point(kp.features, kp.label, kp.id)).toArray
         require(pts.length >= 2, s"key $key: need at least 2 points to bootstrap")
         val m = GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks)
-        (key, nChunks, m.nodeCount, serialize(m), null: Array[Byte])
+        (key, nChunks, m.nodeCount, GngModel.toBytes(m, nChunks), null: Array[Byte])
       }
       .toDF("key", "kk", "node_count", "model", "pending")
   }
@@ -258,13 +264,13 @@ object GStreamKeyed {
           case Some(row @ (_, kk0, _, mb, pend)) if mb != null =>
             if (pts.isEmpty) Iterator.single(row)
             else {
-              val model = deserialize[GngModel](mb)
-              val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids)
+              val model = GngModel.fromBytes(mb)._1
+              val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids, model.seedWatch)
               if (stats.isEmpty) Iterator.single(row)
               else {
                 val kk = kk0 + 1
                 model.update(stats, kk)
-                Iterator.single((key, kk, model.nodeCount, serialize(model), pend))
+                Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk), pend))
               }
             }
           case other =>
@@ -279,9 +285,9 @@ object GStreamKeyed {
               val model = new GngModel(params, all(0).features.length)
                 .init2Nodes(all(0), all(1))
               val rest = all.drop(2)
-              val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids)
+              val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids, model.seedWatch)
               val kk = if (stats.nonEmpty) { model.update(stats, 1); 1 } else 0
-              Iterator.single((key, kk, model.nodeCount, serialize(model),
+              Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk),
                 null: Array[Byte]))
             }
         }
@@ -299,5 +305,5 @@ object GStreamKeyed {
       .filter(col("key") === key && col("model").isNotNull)
       .select(col("model"), col("kk"))
       .collect().headOption
-      .map(r => (deserialize[GngModel](r.getAs[Array[Byte]](0)), r.getInt(1)))
+      .map(r => (GngModel.fromBytes(r.getAs[Array[Byte]](0))._1, r.getInt(1)))
 }

@@ -35,7 +35,9 @@ class GngModelSpec extends AnyFunSuite {
     assert(math.abs(m.clusterWeights(0) - 2.9) < 1e-12)
     // error: (2²+4²) then one errorDecay factor
     assert(math.abs(m.errors(0) - 20.0 * 0.99) < 1e-12)
-    assert(m.nodes(0).assignedIds === Set(1L, 10L, 11L))
+    // the seed point (id 1) plus the two winners (ids 10, 11)
+    assert(m.nodes(0).nAssigned === 3L)
+    assert(m.nodes(1).nAssigned === 1L)
     // edge 0-1 re-linked at age 0 by the bmu2 vote (aging ran first)
     assert(m.ages(0)(1) === 0.0)
   }
@@ -110,12 +112,13 @@ class GngModelSpec extends AnyFunSuite {
     // larger model)
     val wideVotes = Array(0L, 3L, 0L, 0L, 7L)
     val stale = Array(
-      5 -> graft.model.NodeStats(wideVotes, 1.0, Array(1.0, 1.0), 1L, Set(99L)),
-      0 -> graft.model.NodeStats(wideVotes, 2.0, Array(2.0, 0.0), 1L, Set(50L)))
+      5 -> graft.model.NodeStats(wideVotes, 1.0, Array(1.0, 1.0), 1L, 1L),
+      0 -> graft.model.NodeStats(wideVotes, 2.0, Array(2.0, 0.0), 1L, 1L))
     m.update(stale, 1)
     assert(m.nodeCount === 2)
-    assert(m.nodes(0).assignedIds.contains(50L))
-    assert(!m.nodes.exists(_.assignedIds.contains(99L)))
+    // node 0: its seed + the one in-range point; the out-of-range
+    // stats change no count anywhere
+    assert(m.nodes.map(_.nAssigned).toSeq === Seq(2L, 1L))
   }
 
   test("save/load round-trips the full model state (SURVEY §7.4.7)") {
@@ -123,14 +126,15 @@ class GngModelSpec extends AnyFunSuite {
     m.errors(0) = 8.0; m.errors(1) = 4.0
     m.update(GngOps.assignAggregateLocal(Seq(p(2, 0, 10)), m.centroids), 1)
     val f = java.nio.file.Files.createTempFile("gng-model", ".bin")
-    m.save(f)
-    val m2 = GngModel.load(f)
+    GngModel.saveState(f, m, 1)
+    val (m2, kk) = GngModel.loadState(f)
+    assert(kk === 1)
     assert(m2.nodeCount === m.nodeCount)
     assert(m2.prototypeLines === m.prototypeLines)
     assert(m2.edgeLines === m.edgeLines)
     assert(m2.weightLines === m.weightLines)
     assert(m2.errors.toSeq === m.errors.toSeq)
-    assert(m2.nodes.map(_.assignedIds).toSeq === m.nodes.map(_.assignedIds).toSeq)
+    assert(m2.nodes.map(_.nAssigned).toSeq === m.nodes.map(_.nAssigned).toSeq)
     // the restored model keeps evolving identically
     val stats = GngOps.assignAggregateLocal(Seq(p(3, 0, 11)), m.centroids)
     m.update(stats, 2)

@@ -75,15 +75,18 @@ class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
     // reducer-hot-key shape; 32 partitions forces the depth-2 funnel
     val cents = Array(Array(100.0, 100.0), Array(400.0, 100.0), Array(100.0, 400.0))
     val pts = skewed(4000)
+    // watch point 0 as its own winner's seed: one hit, on the hot node
+    val seeds = SeedWatch(Array(GngOps.twoNearest(pts(0).features, cents)._1), Array(pts(0).id))
     val dist = GngOps.assignAggregate(
-      spark.createDataset(pts).repartition(32), cents)
-    val local = GngOps.assignAggregateLocal(pts, cents)
+      spark.createDataset(pts).repartition(32), cents, seeds)
+    val local = GngOps.assignAggregateLocal(pts, cents, seeds)
+    assert(local.map(_._2.nAssigned).sum === pts.length - 1L)
     assert(dist.map(_._1).toSeq === local.map(_._1).toSeq)
     dist.zip(local).foreach { case ((k1, s1), (k2, s2)) =>
       assert(k1 === k2)
       assert(s1.votes.toSeq === s2.votes.toSeq)
       assert(s1.count === s2.count)
-      assert(s1.ids === s2.ids)
+      assert(s1.nAssigned === s2.nAssigned)
       assert(math.abs(s1.errSum - s2.errSum) < 1e-6)
       s1.vecSum.zip(s2.vecSum).foreach { case (x, y) => assert(math.abs(x - y) < 1e-6) }
     }

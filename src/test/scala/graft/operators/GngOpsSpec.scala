@@ -2,7 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSupport
-import graft.model.Point
+import graft.model.{Point, SeedWatch}
 
 /** The distributed assign+aggregate step: top-2 selection semantics and
   * the combiner laws `treeAggregate` relies on (the same contract the
@@ -28,7 +28,7 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
   private def statsKey(s: Array[(Int, graft.model.NodeStats)]) =
     s.map { case (k, st) =>
       (k, st.votes.toSeq, math.round(st.errSum * 1e9),
-        st.vecSum.map(v => math.round(v * 1e9)).toSeq, st.count, st.ids)
+        st.vecSum.map(v => math.round(v * 1e9)).toSeq, st.count, st.nAssigned)
     }.toSeq
 
   test("local aggregation is input-order independent (combiner law)") {
@@ -44,7 +44,7 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
         assert(k1 === k2)
         assert(s1.votes.toSeq === s2.votes.toSeq)
         assert(s1.count === s2.count)
-        assert(s1.ids === s2.ids)
+        assert(s1.nAssigned === s2.nAssigned)
         assert(math.abs(s1.errSum - s2.errSum) < 1e-9)
         s1.vecSum.zip(s2.vecSum).foreach { case (x, y) => assert(math.abs(x - y) < 1e-9) }
       }
@@ -56,9 +56,17 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
     val pts = (1 to 200).map { i =>
       Point(Array(math.cos(i * 0.7) * 12, math.sin(i * 1.3) * 12), 0, i.toLong)
     }
-    val dist = GngOps.assignAggregate(spark.createDataset(pts).repartition(5), cents)
-    val local = GngOps.assignAggregateLocal(pts, cents)
+    // point 1 watched as its own winner's seed (a hit), point 2 as
+    // another node's (a miss)
+    val w1 = GngOps.twoNearest(pts(0).features, cents)._1
+    val w2 = GngOps.twoNearest(pts(1).features, cents)._1
+    val seeds = SeedWatch(Array(w1, (w2 + 1) % cents.length), Array(1L, 2L))
+    val dist = GngOps.assignAggregate(spark.createDataset(pts).repartition(5), cents, seeds)
+    val local = GngOps.assignAggregateLocal(pts, cents, seeds)
     assert(statsKey(dist) === statsKey(local))
+    val byNode = local.toMap
+    assert(byNode(w1).nAssigned === byNode(w1).count - 1)
+    assert(local.map(_._2.nAssigned).sum === pts.length - 1L)
   }
 
   test("assignAggregate on empty centroids or empty batch") {

@@ -103,18 +103,29 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
     val outDir = Files.createTempDirectory("gsr2-out").toString
     val ckpt = s"$outDir/_model"
     import spark.implicits._
-    def batch(b: Int): Unit = {
+    val base = System.currentTimeMillis() - 60000
+    def batch(dir: String, b: Int): Unit = {
       val lines = (1 to 40).map { i =>
         val (cx, cy) = if (i % 2 == 0) (0.0, 0.0) else (80.0, 80.0)
         f"${cx + (i % 9)}%.1f,${cy + (i % 7)}%.1f,${i % 2},${b * 100 + i}"
       }
-      Files.write(Paths.get(dirData, s"b$b.csv"), lines.mkString("\n").getBytes)
+      val f = Paths.get(dir, s"b$b.csv")
+      Files.write(f, lines.mkString("\n").getBytes)
+      // strictly increasing mtimes: every run sees the batches in order
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(base + b * 1000L))
     }
+    // the seed points reappear in batch 0 (ids 1 and 2), each won by
+    // the OTHER seed's node — so every arrival counts
+    def freshModel = GStream.bootstrap(
+      GStream.csvToPoints(spark.createDataset(Seq("0,0,0,1", "80,80,1,2")).toDF("value")),
+      graft.model.GngParams())
+    def counts(m: graft.model.GngModel) =
+      (m.nodes ++ m.outdatedNodes ++ m.isolatedNodes).map(p => p.id -> p.nAssigned).toMap
+    def total(m: graft.model.GngModel) = counts(m).values.sum
+
     // phase 1: fresh model, two batches
-    batch(0); batch(1)
-    val seed = GStream.csvToPoints(spark.createDataset(Seq("0,0,0,1", "80,80,1,2")).toDF("value"))
-    val m1 = GStream.bootstrap(seed, graft.model.GngParams())
-    val q1 = GStream.trainStreaming(spark, dirData, m1,
+    batch(dirData, 0); batch(dirData, 1)
+    val q1 = GStream.trainStreaming(spark, dirData, freshModel,
       modelCheckpoint = Some(ckpt), triggerMs = 50L)
     val deadline1 = System.currentTimeMillis() + 30000
     while (!Files.exists(Paths.get(ckpt, "model-latest.bin")) &&
@@ -122,19 +133,35 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
     q1.processAllAvailable(); q1.stop()
     val (afterPhase1, kkPhase1) = graft.model.GngModel.loadState(
       Paths.get(ckpt, "model-latest.bin"))
-    val idsPhase1 = afterPhase1.nodes.flatMap(_.assignedIds).toSet
+    assert(kkPhase1 === 2)
+    val totalPhase1 = total(afterPhase1)
+    assert(totalPhase1 === 2L + 80L, "both seeds + every phase-1 point, each once")
 
     // phase 2: RESTART from the checkpoint, new files arrive
-    batch(2); batch(3)
+    batch(dirData, 2); batch(dirData, 3)
     val q2 = GStream.trainStreaming(spark, dirData, afterPhase1,
       modelCheckpoint = Some(ckpt), triggerMs = 50L,
       excludeFiles = Seq("b0.csv", "b1.csv"), // already-consumed batches
       startKk = kkPhase1)
     q2.processAllAvailable(); q2.stop()
-    // the restored-and-resumed model absorbed phase-2 ids on top of phase-1 state
-    val idsPhase2 = afterPhase1.nodes.flatMap(_.assignedIds).toSet
-    assert(idsPhase1.nonEmpty)
-    assert((idsPhase2 -- idsPhase1).exists(_ >= 200L), "expected phase-2 point ids assigned")
-    assert(idsPhase1.subsetOf(idsPhase2 + 1L + 2L), "phase-1 history preserved")
+    val (restarted, kkRestarted) = graft.model.GngModel.loadState(
+      Paths.get(ckpt, "model-latest.bin"))
+    assert(kkRestarted === 4)
+    // the resumed model added exactly the 80 valid phase-2 points to the
+    // phase-1 counts — nothing lost, nothing counted twice
+    assert(total(restarted) === totalPhase1 + 80L)
+
+    // a never-killed run over the same four batches: identical per-node
+    // counts, live and archived
+    val dirOnce = Files.createTempDirectory("gsr2-once").toString
+    val ckptOnce = Files.createTempDirectory("gsr2-once-out").toString
+    (0 until 4).foreach(batch(dirOnce, _))
+    val qOnce = GStream.trainStreaming(spark, dirOnce, freshModel,
+      modelCheckpoint = Some(ckptOnce), triggerMs = 50L)
+    qOnce.processAllAvailable(); qOnce.stop()
+    val (once, kkOnce) = graft.model.GngModel.loadState(Paths.get(ckptOnce, "model-latest.bin"))
+    assert(kkOnce === 4)
+    assert(counts(restarted) === counts(once))
+    assert(restarted.prototypeLines === once.prototypeLines)
   }
 }
