@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -281,13 +283,33 @@ object GStream {
   /** Snapshot sink — reference on-disk layout (batchStream.scala:97-101):
     * one directory per structure per checkpoint, timeUpdates last
     * (cumulative per-batch update ms — the reference's telemetry
-    * family and the golden baseline's only published numbers). */
+    * family and the golden baseline's only published numbers).
+    *
+    * Each structure is a few KB held on the driver, so the driver writes
+    * it through the Hadoop `FileSystem` of `dir` (any scheme) with no
+    * Spark job: `part-00000` (UTF-8 lines, each ending in `\n`; an empty
+    * structure is one empty line) and an empty `_SUCCESS` go into
+    * `_tmp-<name>-kk`, which is then renamed over `<name>-kk`. The bytes
+    * equal Spark's text writer's, and the `_`-prefixed temp is invisible
+    * to Spark readers; a temp left by a crash is cleared by the next
+    * call. */
   def writeSnapshots(spark: SparkSession, dir: String, model: GngModel, kk: Int,
       timeUpdates: Seq[Long] = Nil): Unit = {
-    import spark.implicits._
-    def write(lines: Seq[String], name: String): Unit =
-      (if (lines.isEmpty) Seq("") else lines).toDF("value")
-        .coalesce(1).write.mode("overwrite").text(s"$dir/$name-$kk")
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new Path(root, "_tmp-*")))
+      .foreach(_.foreach(st => fs.delete(st.getPath, true)))
+    def write(lines: Seq[String], name: String): Unit = {
+      val tmp = new Path(root, s"_tmp-$name-$kk")
+      val out = fs.create(new Path(tmp, "part-00000"))
+      try (if (lines.isEmpty) Seq("") else lines)
+        .foreach(l => out.write((l + "\n").getBytes(StandardCharsets.UTF_8)))
+      finally out.close()
+      fs.create(new Path(tmp, "_SUCCESS")).close()
+      val target = new Path(root, s"$name-$kk")
+      fs.delete(target, true)
+      require(fs.rename(tmp, target), s"snapshot: rename $tmp -> $target failed")
+    }
     write(model.prototypeLines, "Prototypes")
     write(model.outdatedLines, "OutdatedProtos")
     write(model.edgeLines, "Edges")

@@ -407,8 +407,9 @@ object StreamingRelational {
         col("n_events"), col("total_value"))
 
   /** Production sink: append-mode parquet files with a streaming
-    * checkpoint — the relational twin of the GNG snapshot discipline
-    * ([[GStream.writeSnapshots]]). The checkpoint makes restarts
+    * checkpoint, written by Spark's file sink from the executors (unlike
+    * the driver-held GNG model, whose snapshots [[GStream.writeSnapshots]]
+    * writes on the driver). The checkpoint makes restarts
     * exactly-once: a re-start with the same checkpointLocation replays
     * nothing already committed and appends nothing twice. Use with the
     * watermarked transforms above; the watermark bounds both state and

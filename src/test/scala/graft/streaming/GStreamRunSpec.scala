@@ -30,9 +30,9 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
       }
       val deadline = System.currentTimeMillis() + 60000
       // timeUpdates is the LAST structure writeSnapshots emits; wait for
-      // its _SUCCESS commit marker (the bare dir appears while the write
-      // job is still in flight, and model-latest.bin already exists from
-      // batch 1) — anything earlier races stop()
+      // its _SUCCESS marker (the dir is published by one rename only after
+      // its part file and marker are written, and model-latest.bin already
+      // exists from batch 1) — anything earlier races stop()
       def done = Files.exists(Paths.get(dirSortie, "timeUpdates-3", "_SUCCESS")) &&
         Files.exists(Paths.get(dirSortie, "_model", "model-latest.bin"))
       while (!done && System.currentTimeMillis() < deadline) Thread.sleep(250)

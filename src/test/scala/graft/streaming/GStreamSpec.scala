@@ -144,8 +144,8 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
       outDir = Some(outDir), snapshotEvery = 1, triggerMs = 50L)
     try {
       val deadline = System.currentTimeMillis() + 60000
-      // wait for the *committed* part file of the last snapshot, not just
-      // the directory (the writer creates the dir before the rename)
+      // wait for the published part file of the last snapshot (the writer
+      // fills a _tmp- dir and renames it into place once complete)
       while (partFiles("Prototypes-3").isEmpty &&
         System.currentTimeMillis() < deadline) Thread.sleep(200)
     } finally q.stop()
