@@ -18,10 +18,10 @@ object GngQueries {
   /** Chunked training is deterministic for a given data dir, so ALL
     * gng queries share ONE training run per dir instead of re-running
     * the 20-batch loop each (the reference likewise trains once and
-    * snapshots many views of the same model): the hooked fit captures
-    * the cadence snapshots for the live-IVF bridge on the way to the
-    * final model — `fitChunked` IS `fitChunkedHooked` with a no-op
-    * hook, so the end state is identical. */
+    * snapshots many views of the same model): the fit's `onBatch` hook
+    * captures the cadence snapshots for the live-IVF bridge on the way
+    * to the final model — the hook only reads the model, so the end
+    * state is the one a hook-less `fitChunked` reaches. */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     String, (graft.model.GngModel, Seq[(Int, graft.operators.LiveIvf.Snapshot)])]()
 
@@ -31,7 +31,7 @@ object GngQueries {
       val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
       val marks = snapshotMarks.toSet
       val snaps = Seq.newBuilder[(Int, graft.operators.LiveIvf.Snapshot)]
-      val model = GStream.fitChunkedHooked(pts, GngParams(), defaultChunks, (kk, m) =>
+      val model = GStream.fitChunked(pts, GngParams(), defaultChunks, (kk, m) =>
         if (marks(kk))
           snaps += kk -> m.nodes.toArray.map(p => (p.id, p.centroid.clone())))
       (model, snaps.result())
@@ -281,9 +281,7 @@ object GngQueries {
           java.nio.file.Files.write(dir.resolve(f"batch-$b%03d.csv"),
             lines.mkString("\n").getBytes)
         }
-        val byId = local.sortBy(_.id)
-        val sModel = new graft.model.GngModel(GngParams(), 2)
-          .init2Nodes(byId(0), byId(1))
+        val sModel = graft.model.GngModel.bootstrap(local, GngParams())
         var streamBatches = 0
         var streamUpdMs = 0L
         // tmpfs checkpoint: this is a throughput MEASUREMENT — without
@@ -338,32 +336,31 @@ object GngQueries {
         }
         graft.model.Point(f, c, i)
       }
-      val model = new graft.model.GngModel(params, dim)
-        .init2Nodes(mkPoint(0), mkPoint(1))
+      val model = graft.model.GngModel.bootstrap(Seq(mkPoint(0), mkPoint(1)), params)
       var kk = 0
       val growBatch = 256
       // +10 nodes/batch, −1 per fade step: the cap is reached in ~110
-      // batches; the bound is a safety net, not the expected exit
-      while (model.nodeCount <= cap && kk < 200) {
-        kk += 1
-        val pts = Array.tabulate(growBatch)(x => mkPoint(kk.toLong * growBatch + x))
-        val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids, model.seedWatch)
-        if (stats.nonEmpty) model.update(stats, kk)
+      // batches; the bound is a safety net, not the expected exit.
+      // Every batch assigns points, so each step advances kk.
+      var growBatches = 0
+      while (model.nodeCount <= cap && growBatches < 200) {
+        growBatches += 1
+        val pts = Array.tabulate(growBatch)(x => mkPoint(growBatches.toLong * growBatch + x))
+        kk = model.step(graft.operators.GngOps.assignAggregateLocal(
+          pts, model.centroids, model.seedWatch), kk)
       }
-      val growBatches = kk
       val batchPts = 2000 // sf0.1 embeddings row count
       val meas = 10
       val perBatch = new Array[Double](meas)
       val updPart = new Array[Double](meas) // driver graph surgery alone
       for (b <- 0 - 2 until meas) { // 2 uncounted warm-up batches
-        kk += 1
         val local = Array.tabulate(batchPts)(x =>
           mkPoint(1000000L + (b.toLong + 2) * batchPts + x))
         val ds = s.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(local))
         val t0 = System.nanoTime()
         val stats = graft.operators.GngOps.assignAggregate(ds, model.centroids, model.seedWatch)
         val t1 = System.nanoTime()
-        if (stats.nonEmpty) model.update(stats, kk)
+        kk = model.step(stats, kk)
         if (b >= 0) {
           perBatch(b) = (System.nanoTime() - t0) / 1e6
           updPart(b) = (System.nanoTime() - t1) / 1e6

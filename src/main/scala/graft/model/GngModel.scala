@@ -148,6 +148,18 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     while (i < errors.length) { errors(i) *= params.errorDecay; i += 1 } // T10
   }
 
+  /** One G-Stream training step over a batch's assigned stats, the
+    * driver half of the reference's `foreachRDD` body
+    * (batchStream.scala:86-93): a batch that assigned no point leaves
+    * the model and `kk` alone (the P4 empty-batch guard, :87); any
+    * other batch advances `kk` and runs [[update]] at the new value.
+    *
+    * @param kk the 1-based non-empty-batch counter before this batch
+    * @return the counter after it
+    */
+  def step(stats: Array[(Int, NodeStats)], kk: Int): Int =
+    if (stats.isEmpty) kk else { update(stats, kk + 1); kk + 1 }
+
   /** T3-T5 + A3/A4: decay, edge aging, centroid move, vote-based edge
     * creation (batchStreamModel.scala:142-208). */
   private def updateRule(stats: Array[(Int, NodeStats)]): Unit = {
@@ -333,6 +345,15 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
 }
 
 object GngModel {
+
+  /** The bootstrap rule every training path shares: a 2-node model
+    * from the two lowest-id points (the reference's `initModelObj`,
+    * batchStream.scala:72-78). Equal ids keep their input order. */
+  def bootstrap(points: Iterable[Point], params: GngParams): GngModel = {
+    val first2 = points.toSeq.sortBy(_.id).take(2)
+    require(first2.length == 2, "need at least 2 points to bootstrap")
+    new GngModel(params, first2(0).features.length).init2Nodes(first2(0), first2(1))
+  }
 
   /** "GNGS" — the first word of every model recovery point. */
   private val Magic = 0x474e4753

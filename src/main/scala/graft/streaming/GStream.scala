@@ -5,14 +5,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.model.{GngModel, GngParams, Point}
+import graft.model.{GngModel, GngParams, NodeStats, Point}
 import graft.operators.GngOps
 
 /** G-Stream: micro-batching Growing Neural Gas over Spark.
   *
-  * Batch and streaming entry points share one update path:
-  * distributed assign+aggregate ([[GngOps.assignAggregate]]) feeding the
-  * driver-side graph update ([[GngModel.update]]) — the Structured
+  * Batch and streaming entry points share one training step: assign+
+  * aggregate ([[GngOps.assignAggregate]] or its driver-local twin)
+  * feeding the guarded driver-side graph update ([[GngModel.step]]),
+  * from a model built by [[GngModel.bootstrap]] — the Structured
   * Streaming re-expression of the reference's DStream `foreachRDD` loop
   * (batchStream.scala:82-118; SURVEY §2.9 T1/T2).
   */
@@ -31,21 +32,10 @@ object GStream {
       .as[Point]
   }
 
-  /** Parse the reference's CSV shape — doubles with the last two columns
-    * label and id (batchStreamRun.scala:37-45, labId=2) — into Points.
-    * Same projection (and malformed-line tolerance) as
-    * [[parseCsvPoints]]; kept as the batch-flavored name. */
-  def csvToPoints(df: DataFrame, separator: String = ","): Dataset[Point] =
-    parseCsvPoints(df, separator)
-
   /** Bootstrap a model from the first two points (by ascending id) —
-    * the reference's `initModelObj` (batchStream.scala:72-78). */
-  def bootstrap(points: Dataset[Point], params: GngParams): GngModel = {
-    val first2 = points.orderBy(col("id")).limit(2).collect()
-    require(first2.length == 2, "need at least 2 points to bootstrap")
-    val dim = first2(0).features.length
-    new GngModel(params, dim).init2Nodes(first2(0), first2(1))
-  }
+    * [[GngModel.bootstrap]]'s rule, with the top-2 taken by Spark. */
+  def bootstrap(points: Dataset[Point], params: GngParams): GngModel =
+    GngModel.bootstrap(points.orderBy(col("id")).limit(2).collect(), params)
 
   /** Inputs at or below this many rows take the driver-local update path
     * (no per-batch Spark job). The GNG stats step is O(rows × nodes ×
@@ -64,19 +54,14 @@ object GStream {
   val localPathMaxCells: Long = 2L * 1000 * 1000
 
   /** Deterministic batch-mode training: chunk `points` into `nChunks`
-    * micro-batches by `id % nChunks` and run the full update per chunk.
+    * micro-batches by `id % nChunks` and run the full step per chunk.
     * Faithful to the streaming loop (kk = 1-based non-empty batch
-    * counter) but reproducible — used by tests, Verify and Bench. */
-  def fitChunked(points: Dataset[Point], params: GngParams, nChunks: Int): GngModel =
-    fitChunkedHooked(points, params, nChunks, (_, _) => ())
-
-  /** [[fitChunked]] with a per-batch hook fired AFTER each non-empty
-    * chunk's model update (kk is the 1-based non-empty batch counter) —
-    * the snapshot tap gng_stream_clusters uses to capture the evolving
-    * prototype table at a cadence. The hook must copy what it keeps;
-    * the model keeps evolving. */
-  private[graft] def fitChunkedHooked(points: Dataset[Point], params: GngParams,
-      nChunks: Int, onBatch: (Int, GngModel) => Unit): GngModel = {
+    * counter) but reproducible — used by tests, Verify and Bench.
+    * `onBatch(kk, model)` fires after each non-empty chunk's update (the
+    * snapshot tap gng_stream_clusters uses); it must copy what it
+    * keeps, since the model keeps evolving. */
+  def fitChunked(points: Dataset[Point], params: GngParams, nChunks: Int,
+      onBatch: (Int, GngModel) => Unit = (_, _) => ()): GngModel = {
     // Probe: if the whole input fits on the driver, run the entire chunk
     // loop locally — one collect job total instead of one job per chunk.
     // The probe itself ships NO row data: it counts a zero-column
@@ -86,49 +71,36 @@ object GStream {
     // and only a confirmed-small input pays the actual collect.
     val n = points.select(lit(1)).limit(localPathMaxRows + 1).count()
     if (n <= localPathMaxRows)
-      return fitChunkedLocalHooked(points.collect(), params, nChunks, onBatch)
+      return fitChunkedLocal(points.collect(), params, nChunks, onBatch)
     // One parquet read for the whole loop: each of the nChunks passes
     // filters the cached points instead of re-scanning the source.
     val cached = points.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val model = bootstrap(cached, params)
-      var kk = 0
-      for (c <- 0 until nChunks) {
-        val chunk = cached.filter(col("id") % nChunks === c)
-        val stats = GngOps.assignAggregate(chunk, model.centroids, model.seedWatch)
-        if (stats.nonEmpty) { // P4 empty-batch guard (batchStream.scala:87)
-          kk += 1
-          model.update(stats, kk)
-          onBatch(kk, model)
-        }
-      }
-      model
+    try chunkLoop(bootstrap(cached, params), nChunks, onBatch) { (c, model) =>
+      GngOps.assignAggregate(cached.filter(col("id") % nChunks === c),
+        model.centroids, model.seedWatch)
     } finally cached.unpersist(blocking = false)
   }
 
   /** Driver-local twin of [[fitChunked]]: same bootstrap (first two
-    * points by ascending id), same `id % nChunks` chunking, same update
+    * points by ascending id), same `id % nChunks` chunking, same step
     * loop, but via [[GngOps.assignAggregateLocal]] — zero Spark jobs. */
-  def fitChunkedLocal(points: Array[Point], params: GngParams, nChunks: Int): GngModel =
-    fitChunkedLocalHooked(points, params, nChunks, (_, _) => ())
-
-  private[graft] def fitChunkedLocalHooked(points: Array[Point], params: GngParams,
-      nChunks: Int, onBatch: (Int, GngModel) => Unit): GngModel = {
-    require(points.length >= 2, "need at least 2 points to bootstrap")
-    val byId = points.sortBy(_.id)
-    val model = new GngModel(params, byId(0).features.length)
-      .init2Nodes(byId(0), byId(1))
-    var kk = 0
-    for (c <- 0 until nChunks) {
+  def fitChunkedLocal(points: Array[Point], params: GngParams, nChunks: Int,
+      onBatch: (Int, GngModel) => Unit = (_, _) => ()): GngModel =
+    chunkLoop(GngModel.bootstrap(points, params), nChunks, onBatch) { (c, model) =>
       // plain `%` (not floorMod) — same remainder semantics as the
       // distributed path's `col("id") % nChunks`
-      val chunk = points.filter(p => p.id % nChunks == c)
-      val stats = GngOps.assignAggregateLocal(chunk, model.centroids, model.seedWatch)
-      if (stats.nonEmpty) {
-        kk += 1
-        model.update(stats, kk)
-        onBatch(kk, model)
-      }
+      GngOps.assignAggregateLocal(points.filter(p => p.id % nChunks == c),
+        model.centroids, model.seedWatch)
+    }
+
+  /** The chunk loop both fits share: chunk `c`'s stats from `assign`,
+    * one [[GngModel.step]], and `onBatch` after each non-empty chunk. */
+  private def chunkLoop(model: GngModel, nChunks: Int, onBatch: (Int, GngModel) => Unit)(
+      assign: (Int, GngModel) => Array[(Int, NodeStats)]): GngModel = {
+    var kk = 0
+    for (c <- 0 until nChunks) {
+      val next = model.step(assign(c, model), kk)
+      if (next != kk) { kk = next; onBatch(kk, model) }
     }
     model
   }
@@ -182,20 +154,21 @@ object GStream {
   }
 
   /** Streaming training: file-source text stream of the reference's CSV
-    * shape → foreachBatch update → optional snapshots.
+    * shape → foreachBatch step → optional snapshots.
     * Mirrors batchStreamRun wiring: 100 ms trigger, snapshot dirs
-    * `Prototypes-kk`/`Edges-kk`/`Weights-kk` under `outDir`. */
+    * `Prototypes-kk`/`OutdatedProtos-kk`/`Edges-kk`/`Weights-kk`/
+    * `timeUpdates-kk` under `outDir` at each kk where `snapshotAt`
+    * holds (default: kk = 1 and every 10th). */
   def trainStreaming(
       spark: SparkSession,
       inputDir: String,
       model: GngModel,
       separator: String = ",",
       outDir: Option[String] = None,
-      snapshotEvery: Int = 10,
       triggerMs: Long = 100L,
       modelCheckpoint: Option[String] = None,
       excludeFiles: Seq[String] = Nil,
-      snapshotAt: Option[Int => Boolean] = None,
+      snapshotAt: Int => Boolean = k => k == 1 || k % 10 == 0,
       onBatch: (Int, Long) => Unit = (_, _) => (),
       checkpointLocation: Option[String] = None,
       startKk: Int = 0): StreamingQuery = {
@@ -223,8 +196,6 @@ object GStream {
     // published baseline numbers (batchStream.scala:84,88,92-93;
     // golden conf/test/results/DS1-200-3/timeUpdates-92)
     val timeUpdates = scala.collection.mutable.ArrayBuffer[Long](0L)
-    val doSnapshot: Int => Boolean =
-      snapshotAt.getOrElse(k => k == 1 || k % snapshotEvery == 0)
     // Spark's streaming WAL (offsets + commits) fsyncs per micro-batch;
     // with no explicit checkpointLocation it lands in java.io.tmpdir,
     // and on a contended disk those fsyncs dominate small-batch
@@ -250,15 +221,15 @@ object GStream {
         val stats =
           if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids, model.seedWatch)
           else GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
-        if (stats.nonEmpty) {
-          kk += 1
-          model.update(stats, kk)
+        val next = model.step(stats, kk)
+        if (next != kk) {
+          kk = next
           val updateMs = System.currentTimeMillis() - t0
           timeUpdates += timeUpdates.last + updateMs
           if (timeUpdates.length > 100) timeUpdates.remove(0)
           onBatch(kk, updateMs) // per-batch telemetry (bench/monitoring)
           outDir.foreach { dir =>
-            if (doSnapshot(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
+            if (snapshotAt(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
           }
           // §7.4.7: model recovery point per completed batch (write tmp,
           // atomic move, so a crash never leaves a torn checkpoint).

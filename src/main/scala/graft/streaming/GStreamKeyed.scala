@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import graft.model.{GngModel, GngParams, Point}
+import graft.operators.GngOps
 
 /** KEYED multi-model G-Stream: one independent GNG model per tenant/
   * source key — the sharding SURVEY §2.9 T2 names as the single-global-
@@ -80,10 +81,10 @@ object GStreamKeyed {
     * whose models live in an executor-written table. */
   val MaxCollectKeys: Int = 1024
 
-  /** Deterministic keyed BATCH training: group by key, run the full
-    * single-model chunked loop per key in its executor task, collect
-    * the (small) models. Each key's result is BIT-IDENTICAL to
-    * [[GStream.fitChunkedLocal]] over that key's id-sorted points with
+  /** Deterministic keyed BATCH training: [[fitKeyedTable]]'s per-key
+    * fit (the full single-model chunked loop per key in its executor
+    * task), with the (small) models collected. Each key's result is
+    * BIT-IDENTICAL to [[GStream.fitChunkedLocal]] over that key's id-sorted points with
     * the same params/chunking (spec-asserted) — sharding must never
     * change what any tenant's model learns.
     *
@@ -101,30 +102,57 @@ object GStreamKeyed {
     require(nKeys <= maxKeys,
       s"fitKeyed: $nKeys keys exceed the driver-collect bound $maxKeys — " +
         "use fitKeyedTable (models stay in a table; serve by key pushdown)")
-    points.groupByKey(_.key)
-      .mapGroups { (key, it) =>
-        val pts = it.map(kp => Point(kp.features, kp.label, kp.id)).toArray
-        require(pts.length >= 2, s"key $key: need at least 2 points to bootstrap")
-        // canonical order — group iterators deliver in shuffle order
-        (key, GngModel.toBytes(GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks), nChunks))
-      }
+    fitKeyedTable(points, params, nChunks)
+      .select(col("key"), col("model")).as[(Long, Array[Byte])]
       .collect()
       .map { case (k, bytes) => k -> GngModel.fromBytes(bytes)._1 }
       .toMap
   }
 
+  /** What one key's advance over a batch leaves behind. */
+  private sealed trait KeyAdvance
+  /** A stored model the batch assigned no point to: the stored row stands. */
+  private case object Unchanged extends KeyAdvance
+  /** No model yet and fewer than two points: keep buffering `points`. */
+  private final case class Buffered(points: Array[Point]) extends KeyAdvance
+  /** The key's model after this batch, with its counter. */
+  private final case class Trained(model: GngModel, kk: Int) extends KeyAdvance
+
+  /** The ONE per-key G-Stream step both keyed streaming paths run.
+    * `model` is the key's stored model ([[GngModel.toBytes]], its kk
+    * inside) or null; `pending` its Java-serialized pre-bootstrap
+    * buffer or null; `arrived` the batch, ascending id. A stored model
+    * takes one [[GngModel.step]]. Without one, the buffer plus the
+    * arrivals stay buffered below two points; otherwise the two lowest
+    * ids bootstrap ([[GngModel.bootstrap]]) and the rest form batch 1. */
+  private def advanceKey(model: Array[Byte], pending: Array[Byte],
+      arrived: Array[Point], params: GngParams): KeyAdvance =
+    if (model != null) {
+      val (m, kk) = GngModel.fromBytes(model)
+      val next = m.step(GngOps.assignAggregateLocal(arrived, m.centroids, m.seedWatch), kk)
+      if (next == kk) Unchanged else Trained(m, next)
+    } else {
+      val buffered = if (pending == null) Array.empty[Point] else deserialize[Array[Point]](pending)
+      val all = (buffered ++ arrived).sortBy(_.id)
+      if (all.length < 2) Buffered(all)
+      else {
+        val m = GngModel.bootstrap(all, params)
+        Trained(m, m.step(GngOps.assignAggregateLocal(all.drop(2), m.centroids, m.seedWatch), 0))
+      }
+    }
+
   /** Keyed STREAMING training via flatMapGroupsWithState — one model
-    * per key held in the state store, updated through the EXISTING
-    * single-model path (assignAggregateLocal + GngModel.update) per
-    * micro-batch:
+    * per key held in the state store, advanced per micro-batch by
+    * [[advanceKey]] (assignAggregateLocal + [[GngModel.step]], the
+    * single-model step):
     *
     *  - points buffer per key until two are available; the bootstrap
-    *    takes the two LOWEST ids seen (GStream.bootstrap's rule), and
+    *    takes the two LOWEST ids seen ([[GngModel.bootstrap]]), and
     *    any remaining buffered points form that key's first update
     *    batch (kk = 1);
-    *  - each later non-empty per-key batch is one `model.update`
-    *    (kk += 1), exactly the single-model foreachBatch loop —
-    *    batches canonicalized to ascending id like [[fitKeyed]];
+    *  - each later non-empty per-key batch is one step (kk += 1),
+    *    exactly the single-model foreachBatch loop — batches
+    *    canonicalized to ascending id like [[fitKeyed]];
     *  - emission is (key, kk, nodeCount, serialized model) per
     *    updated key per trigger; the max-kk row per key is the final
     *    model ([[finalModels]]).
@@ -149,42 +177,15 @@ object GStreamKeyed {
         if (arrived.isEmpty) Iterator.empty
         else {
           val prev = state.getOption
-          val (pending, modelBytes, kk0) = prev match {
-            case Some(s) => (Option(s.pending), Option(s.model), s.kk)
-            case None => (None, None, 0)
-          }
-          modelBytes match {
-            case Some(mb) =>
-              // established model: this batch is one update
-              val model = GngModel.fromBytes(mb)._1
-              val stats = graft.operators.GngOps.assignAggregateLocal(arrived, model.centroids, model.seedWatch)
-              if (stats.isEmpty) Iterator.empty
-              else {
-                val kk = kk0 + 1
-                model.update(stats, kk)
-                val bytes = GngModel.toBytes(model, kk)
-                state.update(KeyedGngState(Array.emptyByteArray, bytes, kk))
-                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, bytes))
-              }
-            case None =>
-              val all = (pending.map(deserialize[Array[Point]]).getOrElse(Array.empty[Point])
-                ++ arrived).sortBy(_.id)
-              if (all.length < 2) {
-                // still too few to bootstrap: keep buffering
-                state.update(KeyedGngState(serialize(all), null, 0))
-                Iterator.empty
-              } else {
-                // bootstrap from the two lowest ids; the REST of the
-                // accumulated points form the first update batch
-                val model = new GngModel(params, all(0).features.length)
-                  .init2Nodes(all(0), all(1))
-                val rest = all.drop(2)
-                val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids, model.seedWatch)
-                val kk = if (stats.nonEmpty) { model.update(stats, 1); 1 } else 0
-                val bytes = GngModel.toBytes(model, kk)
-                state.update(KeyedGngState(Array.emptyByteArray, bytes, kk))
-                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, bytes))
-              }
+          advanceKey(prev.map(_.model).orNull, prev.map(_.pending).orNull, arrived, params) match {
+            case Unchanged => Iterator.empty
+            case Buffered(all) =>
+              state.update(KeyedGngState(serialize(all), null, 0))
+              Iterator.empty
+            case Trained(model, kk) =>
+              val bytes = GngModel.toBytes(model, kk)
+              state.update(KeyedGngState(Array.emptyByteArray, bytes, kk))
+              Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, bytes))
           }
         }
       }
@@ -214,8 +215,12 @@ object GStreamKeyed {
       .mapGroups { (key, it) =>
         val pts = it.map(kp => Point(kp.features, kp.label, kp.id)).toArray
         require(pts.length >= 2, s"key $key: need at least 2 points to bootstrap")
-        val m = GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks)
-        (key, nChunks, m.nodeCount, GngModel.toBytes(m, nChunks), null: Array[Byte])
+        // kk = the non-empty chunks the loop applied, not nChunks: the
+        // next commitKeyedBatch's fade/grow cadence keys off it.
+        // Canonical order — group iterators deliver in shuffle order.
+        var kk = 0
+        val m = GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks, (k, _) => kk = k)
+        (key, kk, m.nodeCount, GngModel.toBytes(m, kk), null: Array[Byte])
       }
       .toDF("key", "kk", "node_count", "model", "pending")
   }
@@ -234,12 +239,11 @@ object GStreamKeyed {
     * window between "models updated" and "state committed" cannot
     * double-train). Per-key work runs in EXECUTOR tasks via a cogroup
     * of (stored models, batch points) on the key: touched tenants run
-    * the same single-model update path as [[trainKeyedStreaming]]
-    * (assignAggregateLocal + GngModel.update, ascending-id canonical
-    * order); untouched tenants' rows carry over byte-identical; brand-
-    * new tenants bootstrap at two points (buffering in `pending`
-    * until then, GStream.bootstrap's two-lowest-ids rule). The driver
-    * never deserializes a model. */
+    * the same per-key step as [[trainKeyedStreaming]] ([[advanceKey]],
+    * ascending-id canonical order); untouched tenants' rows, and
+    * tenants the batch assigned nothing to, carry over byte-identical;
+    * brand-new tenants bootstrap at two points (buffering in `pending`
+    * until then). The driver never deserializes a model. */
   def commitKeyedBatch(spark: SparkSession, stateDir: String,
       batch: Dataset[KeyedPoint], params: GngParams, epoch: Long): Unit =
     graft.operators.EpochState.commit(spark, stateDir, epoch)(
@@ -260,36 +264,12 @@ object GStreamKeyed {
         val pts = ptsIt.map(kp => Point(kp.features, kp.label, kp.id))
           .toArray.sortBy(_.id)
         val existing = stIt.toSeq.headOption
-        existing match {
-          case Some(row @ (_, kk0, _, mb, pend)) if mb != null =>
-            if (pts.isEmpty) Iterator.single(row)
-            else {
-              val model = GngModel.fromBytes(mb)._1
-              val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids, model.seedWatch)
-              if (stats.isEmpty) Iterator.single(row)
-              else {
-                val kk = kk0 + 1
-                model.update(stats, kk)
-                Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk), pend))
-              }
-            }
-          case other =>
-            // no model yet: merge any buffered points with the arrivals
-            val buffered = other.flatMap(r => Option(r._5))
-              .map(deserialize[Array[Point]]).getOrElse(Array.empty[Point])
-            val all = (buffered ++ pts).sortBy(_.id)
-            if (all.isEmpty) Iterator.empty
-            else if (all.length < 2)
-              Iterator.single((key, 0, 0, null: Array[Byte], serialize(all)))
-            else {
-              val model = new GngModel(params, all(0).features.length)
-                .init2Nodes(all(0), all(1))
-              val rest = all.drop(2)
-              val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids, model.seedWatch)
-              val kk = if (stats.nonEmpty) { model.update(stats, 1); 1 } else 0
-              Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk),
-                null: Array[Byte]))
-            }
+        if (pts.isEmpty) existing.iterator
+        else advanceKey(existing.map(_._4).orNull, existing.map(_._5).orNull, pts, params) match {
+          case Unchanged => existing.iterator
+          case Buffered(all) => Iterator.single((key, 0, 0, null: Array[Byte], serialize(all)))
+          case Trained(model, kk) =>
+            Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk), null: Array[Byte]))
         }
       }
       .toDF("key", "kk", "node_count", "model", "pending")

@@ -47,14 +47,14 @@ object GStreamRun {
       nbNodesToAdd = nbNodesToAdd)
     // bootstrap scan: first two rows of nodes2.txt (reference takes
     // exactly 2; batchStream.scala:72-78)
-    val seed = GStream.csvToPoints(
+    val seed = GStream.parseCsvPoints(
       spark.read.text(s"$dirData/nodes2.txt").limit(2), separator)
     val model = GStream.bootstrap(seed, params)
     // reference-exact snapshot cadence (batchStream.scala:95):
     // kk ∈ {1, ⌊nbWind/9⌋·{1..8}, every 10th past 8⌊nbWind/9⌋+10, ≥nbWind−2}
     GStream.trainStreaming(spark, dirData, model, separator,
       outDir = Some(dirSortie),
-      snapshotAt = Some(GStream.referenceCadence(nbWind)),
+      snapshotAt = GStream.referenceCadence(nbWind),
       modelCheckpoint = Some(s"$dirSortie/_model"),
       // the seed file is never re-ingested as a batch (textFileStream
       // parity for the one pre-existing file the reference layout has)

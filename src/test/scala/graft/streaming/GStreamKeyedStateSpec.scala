@@ -96,6 +96,32 @@ class GStreamKeyedStateSpec extends AnyFunSuite with SparkTestSupport {
     }
   }
 
+  test("table kk counts the non-empty chunks, so the next commit steps at the right kk") {
+    import spark.implicits._
+    val params = GngParams()
+    // every id even: with nChunks = 4 only the chunks with residue 0
+    // and 2 hold points, so the fit applies 2 batches, not 4
+    val init = (0 until 40).map(i => kp(3L, 2 * i))
+    val dir = freshDir()
+    GStreamKeyed.initKeyedState(spark, dir, spark.createDataset(init), params, nChunks = 4)
+    val storedKk = EpochState.state(spark, dir).filter($"key" === 3L).select($"kk").as[Int].head()
+    assert(storedKk === 2)
+
+    val batch = (80 until 120).map(i => kp(3L, i))
+    GStreamKeyed.commitKeyedBatch(spark, dir, spark.createDataset(batch), params, epoch = 0L)
+    val (served, servedKk) = GStreamKeyed.keyedModel(spark, dir, 3L).get
+
+    val toPoint = (p: KeyedPoint) => Point(p.features, p.label, p.id)
+    val solo = GStream.fitChunkedLocal(init.map(toPoint).toArray.sortBy(_.id), params, nChunks = 4)
+    val arrived = batch.map(toPoint).toArray.sortBy(_.id)
+    val soloKk = solo.step(
+      graft.operators.GngOps.assignAggregateLocal(arrived, solo.centroids, solo.seedWatch), 2)
+    assert(soloKk === 3)
+    assert(servedKk === 3)
+    assert(fingerprint(served) === fingerprint(solo))
+    assert(GngModel.toBytes(served, servedKk).toSeq === GngModel.toBytes(solo, soloKk).toSeq)
+  }
+
   test("new tenant mid-stream: buffers below 2 points, bootstraps when the second arrives") {
     import spark.implicits._
     val params = GngParams()

@@ -117,7 +117,7 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
     // the seed points reappear in batch 0 (ids 1 and 2), each won by
     // the OTHER seed's node — so every arrival counts
     def freshModel = GStream.bootstrap(
-      GStream.csvToPoints(spark.createDataset(Seq("0,0,0,1", "80,80,1,2")).toDF("value")),
+      GStream.parseCsvPoints(spark.createDataset(Seq("0,0,0,1", "80,80,1,2")).toDF("value")),
       graft.model.GngParams())
     def counts(m: graft.model.GngModel) =
       (m.nodes ++ m.outdatedNodes ++ m.isolatedNodes).map(p => p.id -> p.nAssigned).toMap

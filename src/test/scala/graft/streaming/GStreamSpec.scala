@@ -111,12 +111,77 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     assert(nearest(100, 100) < 15.0)
   }
 
-  test("csvToPoints parses the reference CSV shape (features..., label, id)") {
+  test("parseCsvPoints parses the reference CSV shape (features..., label, id)") {
     import spark.implicits._
     val df = Seq("1.5,2.5,0,7", "3.0,4.0,1,8").toDF("value")
-    val pts = GStream.csvToPoints(df).collect().sortBy(_.id)
+    val pts = GStream.parseCsvPoints(df).collect().sortBy(_.id)
     assert(pts(0).features.toSeq === Seq(1.5, 2.5) && pts(0).label === 0 && pts(0).id === 7L)
     assert(pts(1).features.toSeq === Seq(3.0, 4.0) && pts(1).label === 1 && pts(1).id === 8L)
+  }
+
+  test("trainStreaming: a batch wider than the probe cap takes the distributed step, equal to the local one") {
+    // 40,000-d rows: the probe cap is localPathMaxCells / dim = 50 rows,
+    // so each 60-point batch runs GngOps.assignAggregate, not the local twin
+    val dim = 40000
+    val perBatch = 60
+    assert(perBatch > GStream.localPathMaxCells / dim)
+    // small-integer coordinates keep the CSV compact and parse exactly
+    def point(i: Int): Point = {
+      val base = if (i % 2 == 0) 0 else 6
+      Point(Array.tabulate(dim)(j => (base + (i * 7 + j * 3) % 4).toDouble), i % 2, i.toLong)
+    }
+    val batches = (0 until 3).map(b => (1 to perBatch).map(i => point(b * perBatch + i)))
+    val inDir = Files.createTempDirectory("gstream-wide-in")
+    val base = System.currentTimeMillis() - 60000
+    batches.zipWithIndex.foreach { case (pts, b) =>
+      val f = inDir.resolve(s"batch-$b.csv")
+      Files.write(f, pts.map(p =>
+        (p.features.map(_.toInt) :+ p.label :+ p.id).mkString(",")).mkString("\n").getBytes)
+      // strictly increasing mtimes: the stream reads the batches in order
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(base + b * 1000L))
+    }
+    val seeds = Seq(point(1001), point(1002))
+    val params = GngParams(growEvery = 2)
+
+    // the distributed step is one treeAggregate stage per batch; the
+    // local one runs no job beyond the probe. Stage names carry the
+    // query's call site, so count by the RDDs' operation scope.
+    val treeAggregates = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.scope.exists(_.name == "treeAggregate")))
+          treeAggregates.incrementAndGet()
+    }
+    val streamed = graft.model.GngModel.bootstrap(seeds, params)
+    val lastKk = new java.util.concurrent.atomic.AtomicInteger(0)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = GStream.trainStreaming(spark, inDir.toString, streamed,
+        triggerMs = 50L, onBatch = (k, _) => lastKk.set(k))
+      try q.processAllAvailable() finally q.stop()
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (treeAggregates.get < batches.size && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(treeAggregates.get === batches.size)
+
+    val local = graft.model.GngModel.bootstrap(seeds, params)
+    var kk = 0
+    for (pts <- batches)
+      kk = local.step(graft.operators.GngOps.assignAggregateLocal(pts, local.centroids, local.seedWatch), kk)
+    assert(kk === 3)
+    assert(lastKk.get === kk)
+    assert(streamed.nodes.map(p => (p.id, p.nAssigned)) === local.nodes.map(p => (p.id, p.nAssigned)))
+    assert(streamed.edgeLines === local.edgeLines)
+    // the distributed partials merge in task-completion order, so sums
+    // may differ by an ulp (SURVEY §7.4.2): values to float tolerance
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    streamed.nodes.zip(local.nodes).foreach { case (a, b) =>
+      assert(a.centroid.corresponds(b.centroid)(close), s"node ${a.id} centroid")
+    }
+    assert(streamed.clusterWeights.corresponds(local.clusterWeights)(close))
+    assert(streamed.errors.corresponds(local.errors)(close))
   }
 
   test("trainStreaming consumes files as micro-batches and snapshots the model") {
@@ -141,7 +206,7 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
         .filter(p => p.contains("part-") && !p.endsWith(".crc"))
     }
     val q = GStream.trainStreaming(spark, inDir, model,
-      outDir = Some(outDir), snapshotEvery = 1, triggerMs = 50L)
+      outDir = Some(outDir), snapshotAt = _ => true, triggerMs = 50L)
     try {
       val deadline = System.currentTimeMillis() + 60000
       // wait for the published part file of the last snapshot (the writer
