@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   * anything malformed: wrong tags, non-0x11 format, bits ≠ 4, a
   * samples-per-block extension disagreeing with blockAlign, a data
   * body that is truncated or not block-aligned, or a fact count the
-  * blocks cannot hold. Position arithmetic in LONG (the wavMeta
-  * adversarial-size discipline).
+  * blocks cannot hold ([[ByteWalk.samples]] holds these rules, shared
+  * with m15).
   *
   * Features (exact integers, oracle-solid — the DuckDB oracle replays
   * the same state machine as a recursive CTE): sample_rate, n_samples,
@@ -75,91 +75,24 @@ object AudioAdpcm {
     (v, i)
   }
 
-  @inline private def tag(b: Array[Byte], i: Int, t: String): Boolean =
-    b(i) == t.charAt(0).toByte && b(i + 1) == t.charAt(1).toByte &&
-      b(i + 2) == t.charAt(2).toByte && b(i + 3) == t.charAt(3).toByte
-
-  @inline private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  @inline private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   def statsImpl(bytes: Array[Byte]): InternalRow = {
-    if (bytes == null || bytes.length < 12) return null
-    if (!tag(bytes, 0, "RIFF") || !tag(bytes, 8, "WAVE")) return null
-    val n = bytes.length
-    var pos = 12L
-    var fmtCode = -1; var channels = -1; var rate = -1L; var bits = -1
-    var blockAlign = -1; var spbExt = -1
-    var factSamples = -1L
-    var dataOff = -1L; var dataBytes = -1L
-    while (pos + 8 <= n && (fmtCode < 0 || dataOff < 0 || factSamples < 0)) {
-      val p = pos.toInt
-      val size = le32(bytes, p + 4)
-      if (tag(bytes, p, "fmt ")) {
-        if (size < 16 || pos + 8 + 16 > n) return null
-        fmtCode = le16(bytes, p + 8)
-        channels = le16(bytes, p + 10)
-        rate = le32(bytes, p + 12)
-        blockAlign = le16(bytes, p + 20)
-        bits = le16(bytes, p + 22)
-        // the IMA extension (cbSize=2, samplesPerBlock) when present
-        if (size >= 20 && pos + 8 + 20 <= n && le16(bytes, p + 24) >= 2)
-          spbExt = le16(bytes, p + 26)
-      } else if (tag(bytes, p, "fact")) {
-        if (size < 4 || pos + 8 + 4 > n) return null
-        factSamples = le32(bytes, p + 8)
-      } else if (tag(bytes, p, "data")) {
-        dataOff = pos + 8
-        dataBytes = size
-      }
-      pos += 8L + size + (size & 1L)
-    }
-    if (fmtCode != 0x11 || bits != 4 || channels != 1 ||
-      rate <= 0 || rate > Int.MaxValue) return null
-    if (blockAlign < 8 || blockAlign > (1 << 20)) return null
-    val spb = (blockAlign - 4) * 2 + 1 // header sample + 2 nibbles/byte
-    if (spbExt >= 0 && spbExt != spb) return null // lying extension
-    if (factSamples <= 0 || factSamples > (1L << 31)) return null
-    if (dataOff < 0 || dataBytes <= 0 || dataOff + dataBytes > n) return null
-    if (dataBytes % blockAlign != 0) return null
-    val nBlocks = dataBytes / blockAlign
-    if ((factSamples + spb - 1) / spb != nBlocks) return null
-    val off = dataOff.toInt
+    val w = ByteWalk.wav(bytes)
+    val ima = if (w == null || w.format != 0x11) null else ByteWalk.samples(bytes, w)
+    if (ima == null) return null
     var peak = 0L; var zeroCross = 0L; var sumSq = 0L; var chk = 0L
     var prev = 0
     var k = 0L
-    var b = 0
-    while (b < nBlocks) {
-      val bo = off + b * blockAlign
-      var valpred = le16(bytes, bo).toShort.toInt
-      var index = bytes(bo + 2) & 0xff
-      if (index > 88) return null
-      var r = 0
-      val inBlock = math.min(spb.toLong, factSamples - k)
-      while (r < inBlock) {
-        val s =
-          if (r == 0) valpred
-          else {
-            val byte = bytes(bo + 4 + (r - 1) / 2) & 0xff
-            val nib = if ((r - 1) % 2 == 0) byte & 0xf else (byte >> 4) & 0xf
-            val (v2, i2) = step(valpred, index, nib)
-            valpred = v2; index = i2
-            v2
-          }
-        val a = math.abs(s.toLong)
-        if (a > peak) peak = a
-        sumSq += s.toLong * s.toLong
-        if (k >= 1 && prev.toLong * s.toLong < 0L) zeroCross += 1
-        chk += s.toLong * (1L + k % 97)
-        prev = s
-        r += 1; k += 1
-      }
-      b += 1
+    while (k < ima.count) {
+      val s = ima.next()
+      val a = math.abs(s.toLong)
+      if (a > peak) peak = a
+      sumSq += s.toLong * s.toLong
+      if (k >= 1 && prev.toLong * s.toLong < 0L) zeroCross += 1
+      chk += s.toLong * (1L + k % 97)
+      prev = s
+      k += 1
     }
-    InternalRow(rate.toInt, factSamples, peak, zeroCross, sumSq, chk)
+    InternalRow(w.rate, ima.count, peak, zeroCross, sumSq, chk)
   }
 }
 

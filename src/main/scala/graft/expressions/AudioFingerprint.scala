@@ -46,7 +46,8 @@ import org.apache.spark.sql.types._
   * block header predictor/index restart, low-nibble-first, fact-count
   * stop). Streams shorter than 1152 decoded samples, any malformed
   * header, or any non-mono/unknown format yield NULL — never a throw.
-  * Position arithmetic in LONG (wavMeta discipline).
+  * The header rules and decoders are [[ByteWalk]]'s, shared with m10
+  * and m13, so the three agree on what a valid stream is.
   */
 object AudioFingerprint {
 
@@ -65,93 +66,13 @@ object AudioFingerprint {
     * far above IMA-ADPCM reconstruction error. */
   val EnergyThreshold: Long = 1L << 21
 
-  @inline private def tag(b: Array[Byte], i: Int, t: String): Boolean =
-    b(i) == t.charAt(0).toByte && b(i + 1) == t.charAt(1).toByte &&
-      b(i + 2) == t.charAt(2).toByte && b(i + 3) == t.charAt(3).toByte
-
-  @inline private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  @inline private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Decode the first [[NSamples]] samples of a mono PCM16 or
     * IMA-ADPCM WAV; null if malformed or too short. */
   private[expressions] def decodeSamples(bytes: Array[Byte]): Array[Int] = {
-    if (bytes == null || bytes.length < 12) return null
-    if (!tag(bytes, 0, "RIFF") || !tag(bytes, 8, "WAVE")) return null
-    val n = bytes.length
-    var pos = 12L
-    var fmtCode = -1; var channels = -1; var bits = -1; var blockAlign = -1
-    var factSamples = -1L
-    var dataOff = -1L; var dataBytes = -1L
-    while (pos + 8 <= n) {
-      val p = pos.toInt
-      val size = le32(bytes, p + 4)
-      if (tag(bytes, p, "fmt ")) {
-        if (size < 16 || pos + 8 + 16 > n) return null
-        fmtCode = le16(bytes, p + 8)
-        channels = le16(bytes, p + 10)
-        blockAlign = le16(bytes, p + 20)
-        bits = le16(bytes, p + 22)
-      } else if (tag(bytes, p, "fact")) {
-        if (size < 4 || pos + 8 + 4 > n) return null
-        factSamples = le32(bytes, p + 8)
-      } else if (tag(bytes, p, "data")) {
-        dataOff = pos + 8
-        dataBytes = size
-      }
-      pos += 8L + size + (size & 1L)
-    }
-    if (channels != 1 || dataOff < 0 || dataBytes <= 0 ||
-      dataOff + dataBytes > n) return null
-    val out = new Array[Int](NSamples)
-    if (fmtCode == 1) {
-      if (bits != 16) return null
-      if (dataBytes < 2L * NSamples) return null
-      val off = dataOff.toInt
-      var k = 0
-      while (k < NSamples) {
-        out(k) = le16(bytes, off + 2 * k).toShort.toInt
-        k += 1
-      }
-      out
-    } else if (fmtCode == 0x11) {
-      if (bits != 4) return null
-      if (blockAlign < 8 || blockAlign > (1 << 20)) return null
-      val spb = (blockAlign - 4) * 2 + 1
-      if (factSamples < NSamples) return null
-      if (dataBytes % blockAlign != 0) return null
-      val nBlocks = dataBytes / blockAlign
-      if ((factSamples + spb - 1) / spb != nBlocks) return null
-      val off = dataOff.toInt
-      var k = 0
-      var b = 0
-      while (b < nBlocks && k < NSamples) {
-        val bo = off + b * blockAlign
-        var valpred = le16(bytes, bo).toShort.toInt
-        var index = bytes(bo + 2) & 0xff
-        if (index > 88) return null
-        var r = 0
-        val inBlock = math.min(spb.toLong, factSamples - b.toLong * spb)
-        while (r < inBlock && k < NSamples) {
-          val s =
-            if (r == 0) valpred
-            else {
-              val byte = bytes(bo + 4 + (r - 1) / 2) & 0xff
-              val nib = if ((r - 1) % 2 == 0) byte & 0xf else (byte >> 4) & 0xf
-              val (v2, i2) = AudioAdpcm.step(valpred, index, nib)
-              valpred = v2; index = i2
-              v2
-            }
-          out(k) = s
-          r += 1; k += 1
-        }
-        b += 1
-      }
-      if (k < NSamples) null else out
-    } else null
+    val w = ByteWalk.wav(bytes)
+    val s = if (w == null || w.channels != 1) null else ByteWalk.samples(bytes, w)
+    if (s == null || s.count < NSamples) return null
+    Array.fill(NSamples)(s.next())
   }
 
   /** The fingerprint over decoded samples: settle-skip band energies

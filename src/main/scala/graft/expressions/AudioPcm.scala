@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *
   * Returns NULL (never throws) for anything malformed: wrong magic,
   * non-PCM audioFormat, bits ≠ 16, truncated data body, or a sample
-  * count that breaks frame alignment. Position arithmetic in LONG
-  * (the wavMeta adversarial-size discipline).
+  * count that breaks frame alignment. The header walk and the decoder
+  * are [[ByteWalk]]'s.
   *
   * Features (exact integers, oracle-solid):
   *  - n_samples: total int16 samples (frames × channels)
@@ -42,54 +42,19 @@ object AudioPcm {
     StructField("zero_cross", LongType, nullable = false),
     StructField("sum_sq", LongType, nullable = false)))
 
-  @inline private def tag(b: Array[Byte], i: Int, t: String): Boolean =
-    b(i) == t.charAt(0).toByte && b(i + 1) == t.charAt(1).toByte &&
-      b(i + 2) == t.charAt(2).toByte && b(i + 3) == t.charAt(3).toByte
-
-  @inline private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  @inline private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   def statsImpl(bytes: Array[Byte]): InternalRow = {
-    if (bytes == null || bytes.length < 12) return null
-    if (!tag(bytes, 0, "RIFF") || !tag(bytes, 8, "WAVE")) return null
-    val n = bytes.length
-    var pos = 12L
-    var fmtCode = -1; var channels = -1; var rate = -1L; var bits = -1
-    var dataOff = -1L; var dataBytes = -1L
-    while (pos + 8 <= n && (fmtCode < 0 || dataOff < 0)) {
-      val p = pos.toInt
-      val size = le32(bytes, p + 4)
-      if (tag(bytes, p, "fmt ")) {
-        if (size < 16 || pos + 8 + 16 > n) return null
-        fmtCode = le16(bytes, p + 8)
-        channels = le16(bytes, p + 10)
-        rate = le32(bytes, p + 12)
-        bits = le16(bytes, p + 22)
-      } else if (tag(bytes, p, "data")) {
-        dataOff = pos + 8
-        dataBytes = size
-      }
-      pos += 8L + size + (size & 1L)
-    }
-    if (fmtCode != 1 || bits != 16 || channels <= 0 || rate <= 0 || rate > Int.MaxValue)
-      return null
+    val w = ByteWalk.wav(bytes)
     // the FULL sample body must be present (this feature tier decodes
     // the waveform — unlike m06's head probe, a truncated body is NULL)
-    if (dataOff < 0 || dataBytes < 0 || dataOff + dataBytes > n) return null
-    if (dataBytes % (2L * channels) != 0) return null
-    val off = dataOff.toInt
-    val nSamples = (dataBytes / 2L).toInt
+    val pcm = if (w == null || w.format != 1) null else ByteWalk.samples(bytes, w)
+    if (pcm == null) return null
     var peak = 0L
     var zeroCross = 0L
     var sumSq = 0L
     var prev = 0
-    var k = 0
-    while (k < nSamples) {
-      val s = le16(bytes, off + 2 * k).toShort.toInt
+    var k = 0L
+    while (k < pcm.count) {
+      val s = pcm.next()
       val a = math.abs(s.toLong)
       if (a > peak) peak = a
       sumSq += s.toLong * s.toLong
@@ -97,7 +62,7 @@ object AudioPcm {
       prev = s
       k += 1
     }
-    InternalRow(channels, rate.toInt, nSamples.toLong, peak, zeroCross, sumSq)
+    InternalRow(w.channels, w.rate, pcm.count, peak, zeroCross, sumSq)
   }
 }
 

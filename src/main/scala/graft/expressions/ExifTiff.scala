@@ -27,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    SKIPPED, not errors; ImageWidth 0x0100 (SHORT or LONG),
   *    ImageLength 0x0101, Orientation 0x0112 (SHORT 1..8).
   *
-  * For a JPEG payload the probe walks the marker-segment chain (fill
-  * bytes honored, segment lengths big-endian) to the first APP1 whose
+  * For a JPEG payload the probe walks the marker-segment chain
+  * ([[ByteWalk.JpegSegments]], jpeg_dims' walk) to the first APP1 whose
   * body starts `Exif\0\0`, then parses the embedded TIFF stream
   * relative to ITS OWN origin (all TIFF offsets are relative to the
   * TIFF header, not the file). Ranged head probe: only declared
@@ -40,6 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * chain with no Exif APP1, or any truncation (m08 discipline).
   */
 object ExifTiff {
+  import ByteWalk._
 
   def exifMeta(payload: Column): Column =
     graftx.column(ExifMetaExpr(graftx.expr(payload)))
@@ -49,18 +50,6 @@ object ExifTiff {
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("orientation", IntegerType, nullable = false)))
-
-  @inline private def u8(b: Array[Byte], i: Long): Int = b(i.toInt) & 0xff
-
-  @inline private def u16(b: Array[Byte], i: Long, be: Boolean): Int =
-    if (be) (u8(b, i) << 8) | u8(b, i + 1)
-    else (u8(b, i + 1) << 8) | u8(b, i)
-
-  @inline private def u32(b: Array[Byte], i: Long, be: Boolean): Long =
-    if (be) (u8(b, i).toLong << 24) | (u8(b, i + 1).toLong << 16) |
-      (u8(b, i + 2).toLong << 8) | u8(b, i + 3).toLong
-    else (u8(b, i + 3).toLong << 24) | (u8(b, i + 2).toLong << 16) |
-      (u8(b, i + 1).toLong << 8) | u8(b, i).toLong
 
   /** Parse a TIFF stream starting at `base` (offsets relative to it). */
   private def parseTiff(b: Array[Byte], base: Long, end: Long): InternalRow = {
@@ -106,30 +95,16 @@ object ExifTiff {
 
   def metaImpl(bytes: Array[Byte]): InternalRow = {
     if (bytes == null || bytes.length < 8) return null
-    val n = bytes.length.toLong
-    if ((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8) {
-      // JPEG: walk the marker chain to the first Exif APP1
-      var pos = 2L
-      while (pos + 4 <= n) {
-        if (u8(bytes, pos) != 0xff) return null
-        var m = u8(bytes, pos + 1)
-        while (m == 0xff && pos + 2 < n) { pos += 1; m = u8(bytes, pos + 1) }
-        if (m == 0xd9 || m == 0xda) return null // EOI/SOS before any Exif
-        if (m >= 0xd0 && m <= 0xd7) { pos += 2 } // standalone RSTn
-        else {
-          val len = u16(bytes, pos + 2, be = true)
-          if (len < 2 || pos + 2 + len > n) return null
-          if (m == 0xe1 && len >= 8 &&
-            u8(bytes, pos + 4) == 'E' && u8(bytes, pos + 5) == 'x' &&
-            u8(bytes, pos + 6) == 'i' && u8(bytes, pos + 7) == 'f' &&
-            u8(bytes, pos + 8) == 0 && u8(bytes, pos + 9) == 0) {
-            return parseTiff(bytes, pos + 10, pos + 2 + len)
-          }
-          pos += 2 + len
-        }
-      }
-      null
-    } else parseTiff(bytes, 0L, n)
+    if (u8(bytes, 0) != 0xff || u8(bytes, 1) != 0xd8) return parseTiff(bytes, 0L, bytes.length)
+    // JPEG: walk the marker chain to the first whole Exif APP1
+    val seg = new JpegSegments(bytes)
+    while (seg.next()) {
+      val p = seg.pos
+      if (seg.marker == 0xe1 && seg.len >= 8 && p + 2 + seg.len <= bytes.length &&
+        tag(bytes, p + 4, "Exif") && u8(bytes, p + 8) == 0 && u8(bytes, p + 9) == 0)
+        return parseTiff(bytes, p + 10, p + 2 + seg.len)
+    }
+    null
   }
 }
 

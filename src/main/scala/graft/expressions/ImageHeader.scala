@@ -74,14 +74,7 @@ object ImageHeader {
 }
 
 object ImageHeaderImpl {
-
-  @inline private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  @inline private def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
-
-  @inline private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
+  import ByteWalk._
 
   private def row(w: Long, h: Long, channels: Int): InternalRow =
     if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue || channels <= 0) null
@@ -97,8 +90,7 @@ object ImageHeaderImpl {
     var i = 0
     while (i < 8) { if (u8(bytes, i) != sig(i)) return null; i += 1 }
     if (be32(bytes, 8) != 13L) return null // IHDR data length is fixed
-    if (u8(bytes, 12) != 'I' || u8(bytes, 13) != 'H' ||
-        u8(bytes, 14) != 'D' || u8(bytes, 15) != 'R') return null
+    if (!tag(bytes, 12, "IHDR")) return null
     val w = be32(bytes, 16)
     val h = be32(bytes, 20)
     val colorType = u8(bytes, 25)
@@ -115,44 +107,23 @@ object ImageHeaderImpl {
   @inline private def isSof(m: Int): Boolean =
     m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc
 
-  /** JPEG: SOI, then the marker-segment walk — optional 0xFF fill
-    * bytes, marker byte, then (for non-standalone markers) a 2-byte
-    * big-endian length covering itself. The first SOF segment carries
-    * precision(1), height(2), width(2), component count(1) = channels.
-    * The walk stops dead at SOS (entropy-coded data — every
-    * well-formed frame header precedes it) and EOI. */
+  /** JPEG: SOI, then the marker-segment walk ([[ByteWalk.JpegSegments]],
+    * which stops dead at SOS — every well-formed frame header precedes
+    * the entropy-coded data — and at EOI). The first SOF segment
+    * carries precision(1), height(2), width(2), component count(1) =
+    * channels. */
   def jpegDims(bytes: Array[Byte]): InternalRow = {
     if (bytes == null || bytes.length < 4) return null
     if (u8(bytes, 0) != 0xff || u8(bytes, 1) != 0xd8) return null // SOI
-    var pos = 2
-    val n = bytes.length
-    while (pos + 1 < n) {
-      if (u8(bytes, pos) != 0xff) return null // marker misalignment
-      // 0xFF fill bytes may pad before any marker
-      while (pos + 1 < n && u8(bytes, pos + 1) == 0xff) pos += 1
-      if (pos + 1 >= n) return null
-      val marker = u8(bytes, pos + 1)
-      if (isSof(marker)) {
-        if (pos + 9 >= n) return null // truncated SOF
-        val h = be16(bytes, pos + 5)
-        val w = be16(bytes, pos + 7)
-        return row(w, h, u8(bytes, pos + 9))
-      } else if (marker == 0xd9 || marker == 0xda) {
-        return null // EOI / SOS before any frame header
-      } else if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd8)) {
-        pos += 2 // standalone markers: TEM, RSTn, (nested) SOI
-      } else {
-        if (pos + 3 >= n) return null
-        val len = be16(bytes, pos + 2)
-        if (len < 2) return null
-        pos += 2 + len
+    val seg = new JpegSegments(bytes)
+    while (seg.next()) {
+      if (isSof(seg.marker)) {
+        if (seg.pos + 9 >= bytes.length) return null // truncated SOF
+        return row(be16(bytes, seg.pos + 7), be16(bytes, seg.pos + 5), u8(bytes, seg.pos + 9))
       }
     }
     null
   }
-
-  @inline private def le16(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8)
 
   /** GIF: 6-byte version signature ("GIF87a" / "GIF89a"), then the
     * logical screen descriptor — width(2) height(2) LITTLE-endian,
@@ -161,126 +132,64 @@ object ImageHeaderImpl {
     * convention). */
   def gifDims(bytes: Array[Byte]): InternalRow = {
     if (bytes == null || bytes.length < 13) return null
-    if (u8(bytes, 0) != 'G' || u8(bytes, 1) != 'I' || u8(bytes, 2) != 'F' ||
-        u8(bytes, 3) != '8' ||
-        (u8(bytes, 4) != '7' && u8(bytes, 4) != '9') ||
+    if (!tag(bytes, 0, "GIF8") || (u8(bytes, 4) != '7' && u8(bytes, 4) != '9') ||
         u8(bytes, 5) != 'a') return null
     row(le16(bytes, 6), le16(bytes, 8), 1)
   }
 
-  @inline private def le32(b: Array[Byte], i: Int): Long =
-    u8(b, i).toLong | (u8(b, i + 1).toLong << 8) |
-      (u8(b, i + 2).toLong << 16) | (u8(b, i + 3).toLong << 24)
-
-  @inline private def tag(b: Array[Byte], i: Int, t: String): Boolean =
-    u8(b, i) == t.charAt(0) && u8(b, i + 1) == t.charAt(1) &&
-      u8(b, i + 2) == t.charAt(2) && u8(b, i + 3) == t.charAt(3)
-
-  /** RIFF-WAVE: "RIFF" size(4 LE) "WAVE", then a chunk walk — each
-    * chunk is id(4) size(4 LE) body, and bodies PAD to even lengths
-    * (the classic parser bug: an odd-sized LIST/fact chunk without the
-    * pad byte desynchronizes every later chunk). The "fmt " chunk
-    * carries audioFormat(2) channels(2) sampleRate(4) byteRate(4)
-    * blockAlign(2) bitsPerSample(2), all LITTLE-endian; "data"'s size
-    * is the PCM byte count. Returns (channels, sample_rate,
-    * bits_per_sample, data_bytes) once BOTH chunks are seen — a
-    * truncated or desynchronized header yields NULL, never a crash. */
+  /** RIFF-WAVE: (channels, sample_rate, bits_per_sample, data_bytes)
+    * from [[ByteWalk.wav]]'s chunk walk — "data"'s size is the declared
+    * PCM byte count, its body may be absent (head probe). A truncated
+    * or desynchronized header yields NULL, never a crash. */
   def wavMeta(bytes: Array[Byte]): InternalRow = {
-    if (bytes == null || bytes.length < 12) return null
-    if (!tag(bytes, 0, "RIFF") || !tag(bytes, 8, "WAVE")) return null
-    val n = bytes.length
-    // the walk runs in LONG: a near-2^31 declared chunk size must step
-    // pos past n and end the walk as "fmt never seen" → NULL — Int
-    // arithmetic would wrap pos negative and index out of bounds (the
-    // adversarial-blob crash the NULL-never-throw contract forbids)
-    var pos = 12L
-    var channels = -1; var rate = -1L; var bits = -1; var dataBytes = -1L
-    while (pos + 8 <= n && (channels < 0 || dataBytes < 0)) {
-      val p = pos.toInt // pos + 8 <= n ⇒ in range
-      val size = le32(bytes, p + 4)
-      if (tag(bytes, p, "fmt ")) {
-        if (size < 16 || pos + 8 + 16 > n) return null
-        channels = le16(bytes, p + 10)
-        rate = le32(bytes, p + 12)
-        bits = le16(bytes, p + 22)
-      } else if (tag(bytes, p, "data")) {
-        dataBytes = size // body may legitimately be truncated/absent here
-      }
-      pos += 8L + size + (size & 1L) // even-length padding
-    }
-    if (channels <= 0 || rate <= 0 || rate > Int.MaxValue || bits <= 0 || dataBytes < 0)
-      null
-    else InternalRow(channels, rate.toInt, bits, dataBytes)
+    val w = wav(bytes)
+    if (w == null) null else InternalRow(w.channels, w.rate, w.bits, w.dataBytes)
   }
 
-  @inline private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-
-  /** ISO-BMFF (MP4): top-level box walk — each box is size(BE32) +
-    * type(4CC); size 1 means a BE64 largesize follows; size 0 means
-    * to-end-of-buffer. The file must open with `ftyp`. `moov` is
-    * parsed for its `mvhd` (version-0 layout: timescale/duration at
-    * fixed offsets behind the version word) and its `trak` child
-    * count; `mdat`'s payload size comes from the DECLARED size (minus
-    * its own header), so the walk works on a head-only ranged read —
-    * the media body is never needed. All position arithmetic in LONG
-    * (the wavMeta adversarial-size discipline); anything malformed
-    * yields NULL, never a throw. */
+  /** ISO-BMFF (MP4): top-level [[ByteWalk.Boxes]] walk; the file must
+    * open with `ftyp`. `moov` must be whole and is parsed for its
+    * `mvhd` (version-0 layout: timescale/duration at fixed offsets
+    * behind the version word) and its `trak` child count; `mdat`'s
+    * payload size comes from the DECLARED size (minus its own header),
+    * so the walk works on a head-only ranged read — the media body is
+    * never needed. Anything malformed yields NULL, never a throw. */
   def mp4Meta(bytes: Array[Byte]): InternalRow = {
     if (bytes == null || bytes.length < 16) return null
-    val n = bytes.length
     if (!tag(bytes, 4, "ftyp")) return null
-    var pos = 0L
     var timescale = -1L; var duration = -1L; var nTracks = 0; var mdatBytes = -1L
-    while (pos + 8 <= n) {
-      val p = pos.toInt
-      var size = be32(bytes, p)
-      var hdr = 8L
-      if (size == 1L) {
-        if (pos + 16 > n) return null
-        size = be64(bytes, p + 8)
-        hdr = 16L
-      } else if (size == 0L) size = n - pos // to end of buffer
-      if (size < hdr) return null // malformed: box smaller than its header
-      if (tag(bytes, p + 4, "moov")) {
-        // children must be fully present — moov is metadata, tiny
-        if (pos + size > n) return null
-        var cp = pos + hdr
-        val end = pos + size
-        while (cp + 8 <= end) {
-          val c = cp.toInt
-          var csize = be32(bytes, c)
-          var chdr = 8L
-          if (csize == 1L) {
-            if (cp + 16 > end) return null
-            csize = be64(bytes, c + 8)
-            chdr = 16L
-          } else if (csize == 0L) csize = end - cp
-          if (csize < chdr || cp + csize > end) return null
-          if (tag(bytes, c + 4, "mvhd")) {
+    val top = new Boxes(bytes, 0L, bytes.length)
+    while (top.next()) {
+      if (top.is("moov")) {
+        if (!top.fits) return null // moov is metadata, tiny: whole or NULL
+        val kids = new Boxes(bytes, top.body, top.pos + top.size)
+        while (kids.next()) {
+          if (!kids.fits) return null
+          val body = kids.body
+          val end = kids.pos + kids.size
+          if (kids.is("mvhd")) {
             // version 0: ver/flags(4) ctime(4) mtime(4) timescale(4)
             // duration(4); version 1 widens the times to 64 bits
-            if (cp + chdr + 4 > end) return null
-            val ver = u8(bytes, (cp + chdr).toInt)
+            if (body + 4 > end) return null
+            val ver = u8(bytes, body)
             if (ver == 0) {
-              if (cp + chdr + 20 > end) return null
-              timescale = be32(bytes, (cp + chdr + 12).toInt)
-              duration = be32(bytes, (cp + chdr + 16).toInt)
+              if (body + 20 > end) return null
+              timescale = be32(bytes, body + 12)
+              duration = be32(bytes, body + 16)
             } else if (ver == 1) {
-              if (cp + chdr + 32 > end) return null
-              timescale = be32(bytes, (cp + chdr + 20).toInt)
-              duration = be64(bytes, (cp + chdr + 24).toInt)
+              if (body + 32 > end) return null
+              timescale = be32(bytes, body + 20)
+              duration = be64(bytes, body + 24)
             } else return null
-          } else if (tag(bytes, c + 4, "trak")) {
+          } else if (kids.is("trak")) {
             nTracks += 1
           }
-          cp += csize
         }
-      } else if (tag(bytes, p + 4, "mdat")) {
-        mdatBytes = size - hdr // declared size: head-probe semantics
+        if (kids.malformed) return null
+      } else if (top.is("mdat")) {
+        mdatBytes = top.size - (top.body - top.pos) // declared size: head-probe semantics
       }
-      pos += size
     }
+    if (top.malformed) return null
     if (timescale <= 0 || timescale > Int.MaxValue || duration < 0 || mdatBytes < 0)
       null
     else InternalRow(timescale.toInt, duration, nTracks, mdatBytes)

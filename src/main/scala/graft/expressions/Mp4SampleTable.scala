@@ -75,6 +75,7 @@ object Mp4SampleTable {
 }
 
 object Mp4SampleTableImpl {
+  import ByteWalk._
 
   /** Entry-count caps, enforced BEFORE allocation (adversarial-blob
     * discipline: a declared 2^31 entry count must NULL, not OOM). */
@@ -83,52 +84,12 @@ object Mp4SampleTableImpl {
 
   private val ChecksumMod = 1000000007L
 
-  @inline private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  @inline private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-
-  @inline private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-
-  @inline private def tag(b: Array[Byte], i: Int, t: String): Boolean =
-    u8(b, i) == t.charAt(0) && u8(b, i + 1) == t.charAt(1) &&
-      u8(b, i + 2) == t.charAt(2) && u8(b, i + 3) == t.charAt(3)
-
-  /** First child box with 4CC `t` in [start, end): returns
-    * (bodyStart << 32) | bodyEnd, or -1. Handles BE64 largesize and
-    * size-0 (to-end) forms; all position arithmetic in LONG (the
-    * wavMeta adversarial-size discipline). */
-  private def child(b: Array[Byte], start: Long, end: Long, t: String): Long = {
-    var pos = start
-    while (pos + 8 <= end) {
-      val p = pos.toInt
-      var size = be32(b, p)
-      var hdr = 8L
-      if (size == 1L) {
-        if (pos + 16 > end) return -1L
-        size = be64(b, p + 8)
-        hdr = 16L
-      } else if (size == 0L) size = end - pos
-      // overflow-safe form: `pos + size > end` wraps for adversarial
-      // BE64 largesizes near Long.MaxValue and would let the walk run
-      // on a negative position — `size > end - pos` cannot wrap
-      if (size < hdr || size > end - pos) return -1L
-      if (tag(b, p + 4, t)) return ((pos + hdr) << 32) | (pos + size)
-      pos += size
-    }
-    -1L
-  }
-
-  @inline private def lo(r: Long): Long = r & 0xffffffffL
-  @inline private def hi(r: Long): Long = r >>> 32
-
   def samples(bytes: Array[Byte]): ArrayData = {
     if (bytes == null || bytes.length < 16) return null
     val n = bytes.length.toLong
     if (!tag(bytes, 4, "ftyp")) return null
 
-    val moov = child(bytes, 0L, n, "moov")
+    val moov = box(bytes, 0L, n, "moov")
     if (moov < 0) return null
     // VIDEO-trak selection per the spec's hdlr box (real files carry an
     // audio trak too, often first): walk every trak child of moov and
@@ -138,46 +99,46 @@ object Mp4SampleTableImpl {
     // audio trak of any audio-first file and dies on its missing stbl.
     var trak = -1L
     var firstTrak = -1L
-    var tp = hi(moov)
-    while (trak < 0 && tp + 8 <= lo(moov)) {
-      val t = child(bytes, tp, lo(moov), "trak")
-      if (t < 0) tp = lo(moov) // no more traks
+    var tp = bodyOf(moov)
+    while (trak < 0 && tp + 8 <= endOf(moov)) {
+      val t = box(bytes, tp, endOf(moov), "trak")
+      if (t < 0) tp = endOf(moov) // no more traks
       else {
         if (firstTrak < 0) firstTrak = t
-        val md = child(bytes, hi(t), lo(t), "mdia")
+        val md = box(bytes, bodyOf(t), endOf(t), "mdia")
         if (md >= 0) {
-          val hd = child(bytes, hi(md), lo(md), "hdlr")
+          val hd = box(bytes, bodyOf(md), endOf(md), "hdlr")
           // handler_type sits at body + 8 (behind ver/flags + pre_defined)
-          if (hd >= 0 && hi(hd) + 12 <= lo(hd) &&
-              tag(bytes, (hi(hd) + 8).toInt, "vide")) trak = t
+          if (hd >= 0 && bodyOf(hd) + 12 <= endOf(hd) &&
+              tag(bytes, bodyOf(hd) + 8, "vide")) trak = t
         }
-        tp = lo(t)
+        tp = endOf(t)
       }
     }
     if (trak < 0) trak = firstTrak
     if (trak < 0) return null
-    val mdia = child(bytes, hi(trak), lo(trak), "mdia")
+    val mdia = box(bytes, bodyOf(trak), endOf(trak), "mdia")
     if (mdia < 0) return null
-    val minf = child(bytes, hi(mdia), lo(mdia), "minf")
+    val minf = box(bytes, bodyOf(mdia), endOf(mdia), "minf")
     if (minf < 0) return null
-    val stbl = child(bytes, hi(minf), lo(minf), "stbl")
+    val stbl = box(bytes, bodyOf(minf), endOf(minf), "stbl")
     if (stbl < 0) return null
-    val sb = hi(stbl); val se = lo(stbl)
+    val sb = bodyOf(stbl); val se = endOf(stbl)
 
     // ---- stts: per-sample decode timestamps ---------------------------
-    val stts = child(bytes, sb, se, "stts")
+    val stts = box(bytes, sb, se, "stts")
     if (stts < 0) return null
-    var p = hi(stts); var e = lo(stts)
+    var p = bodyOf(stts); var e = endOf(stts)
     if (p + 8 > e) return null
-    val nTts = be32(bytes, (p + 4).toInt)
+    val nTts = be32(bytes, p + 4)
     if (nTts < 0 || nTts > MaxEntries || p + 8 + 8 * nTts > e) return null
     val ttsCount = new Array[Long](nTts.toInt)
     val ttsDelta = new Array[Long](nTts.toInt)
     var i = 0
     var nSamplesL = 0L
     while (i < nTts) {
-      ttsCount(i) = be32(bytes, (p + 8 + 8 * i).toInt)
-      ttsDelta(i) = be32(bytes, (p + 8 + 8 * i + 4).toInt)
+      ttsCount(i) = be32(bytes, p + 8 + 8 * i)
+      ttsDelta(i) = be32(bytes, p + 8 + 8 * i + 4)
       // the spec requires positive sample_count per run — a count-0 run
       // would mischarge its delta to one sample (the run advance steps
       // at most one run per sample): malformed ⇒ NULL, never wrong dts
@@ -190,32 +151,32 @@ object Mp4SampleTableImpl {
 
     // ---- ctts (optional): composition-time offsets — pts = dts + off;
     // absent means composition == decode order (no B-frames) ----------
-    val ctts = child(bytes, sb, se, "ctts")
+    val ctts = box(bytes, sb, se, "ctts")
     var ctCount: Array[Long] = null
     var ctOff: Array[Long] = null
     if (ctts >= 0) {
-      p = hi(ctts); e = lo(ctts)
+      p = bodyOf(ctts); e = endOf(ctts)
       if (p + 8 > e) return null
-      val nCt = be32(bytes, (p + 4).toInt)
+      val nCt = be32(bytes, p + 4)
       if (nCt <= 0 || nCt > MaxEntries || p + 8 + 8 * nCt > e) return null
       ctCount = new Array[Long](nCt.toInt)
       ctOff = new Array[Long](nCt.toInt)
       i = 0
       while (i < nCt) {
-        ctCount(i) = be32(bytes, (p + 8 + 8 * i).toInt)
-        ctOff(i) = be32(bytes, (p + 8 + 8 * i + 4).toInt)
+        ctCount(i) = be32(bytes, p + 8 + 8 * i)
+        ctOff(i) = be32(bytes, p + 8 + 8 * i + 4)
         if (ctCount(i) <= 0) return null // the stts count-0 argument
         i += 1
       }
     }
 
     // ---- stsz: per-sample sizes ---------------------------------------
-    val stsz = child(bytes, sb, se, "stsz")
+    val stsz = box(bytes, sb, se, "stsz")
     if (stsz < 0) return null
-    p = hi(stsz); e = lo(stsz)
+    p = bodyOf(stsz); e = endOf(stsz)
     if (p + 12 > e) return null
-    val uniform = be32(bytes, (p + 4).toInt)
-    val nSz = be32(bytes, (p + 8).toInt)
+    val uniform = be32(bytes, p + 4)
+    val nSz = be32(bytes, p + 8)
     if (nSz != nSamplesL) return null // stts/stsz must agree
     val sizes = new Array[Int](nS)
     if (uniform != 0L) {
@@ -225,7 +186,7 @@ object Mp4SampleTableImpl {
       if (p + 12 + 4L * nS > e) return null
       i = 0
       while (i < nS) {
-        val s = be32(bytes, (p + 12 + 4 * i).toInt)
+        val s = be32(bytes, p + 12 + 4 * i)
         if (s > Int.MaxValue) return null
         sizes(i) = s.toInt
         i += 1
@@ -233,18 +194,18 @@ object Mp4SampleTableImpl {
     }
 
     // ---- stsc: sample-to-chunk runs -----------------------------------
-    val stsc = child(bytes, sb, se, "stsc")
+    val stsc = box(bytes, sb, se, "stsc")
     if (stsc < 0) return null
-    p = hi(stsc); e = lo(stsc)
+    p = bodyOf(stsc); e = endOf(stsc)
     if (p + 8 > e) return null
-    val nSc = be32(bytes, (p + 4).toInt)
+    val nSc = be32(bytes, p + 4)
     if (nSc <= 0 || nSc > MaxEntries || p + 8 + 12 * nSc > e) return null
     val scFirst = new Array[Long](nSc.toInt)
     val scPer = new Array[Long](nSc.toInt)
     i = 0
     while (i < nSc) {
-      scFirst(i) = be32(bytes, (p + 8 + 12 * i).toInt)
-      scPer(i) = be32(bytes, (p + 8 + 12 * i + 4).toInt)
+      scFirst(i) = be32(bytes, p + 8 + 12 * i)
+      scPer(i) = be32(bytes, p + 8 + 12 * i + 4)
       if (scPer(i) <= 0 || scFirst(i) <= 0 ||
           (i > 0 && scFirst(i) <= scFirst(i - 1))) return null
       i += 1
@@ -253,37 +214,37 @@ object Mp4SampleTableImpl {
 
     // ---- stco / co64: absolute chunk offsets --------------------------
     // co64 is the 64-bit form real >4 GiB files require — accept either
-    val stco = child(bytes, sb, se, "stco")
+    val stco = box(bytes, sb, se, "stco")
     val wide = stco < 0
-    val co = if (wide) child(bytes, sb, se, "co64") else stco
+    val co = if (wide) box(bytes, sb, se, "co64") else stco
     if (co < 0) return null
-    p = hi(co); e = lo(co)
+    p = bodyOf(co); e = endOf(co)
     if (p + 8 > e) return null
     val entryW = if (wide) 8 else 4
-    val nCo = be32(bytes, (p + 4).toInt)
+    val nCo = be32(bytes, p + 4)
     if (nCo <= 0 || nCo > MaxEntries || p + 8 + entryW * nCo > e) return null
     val chunkOff = new Array[Long](nCo.toInt)
     i = 0
     while (i < nCo) {
       chunkOff(i) =
-        if (wide) be64(bytes, (p + 8 + 8 * i).toInt)
-        else be32(bytes, (p + 8 + 4 * i).toInt)
+        if (wide) be64(bytes, p + 8 + 8 * i)
+        else be32(bytes, p + 8 + 4 * i)
       i += 1
     }
 
     // ---- stss: sync (keyframe) samples; absent = all sync -------------
-    val stss = child(bytes, sb, se, "stss")
+    val stss = box(bytes, sb, se, "stss")
     val sync = new Array[Boolean](nS)
     if (stss < 0) {
       java.util.Arrays.fill(sync, true)
     } else {
-      p = hi(stss); e = lo(stss)
+      p = bodyOf(stss); e = endOf(stss)
       if (p + 8 > e) return null
-      val nSy = be32(bytes, (p + 4).toInt)
+      val nSy = be32(bytes, p + 4)
       if (nSy < 0 || nSy > MaxEntries || p + 8 + 4 * nSy > e) return null
       i = 0
       while (i < nSy) {
-        val s1 = be32(bytes, (p + 8 + 4 * i).toInt) // 1-based
+        val s1 = be32(bytes, p + 8 + 4 * i) // 1-based
         if (s1 < 1 || s1 > nS) return null
         sync((s1 - 1).toInt) = true
         i += 1
@@ -323,7 +284,7 @@ object Mp4SampleTableImpl {
       var j = 0
       val o = off.toInt
       while (j < sz) {
-        ck += (bytes(o + j) & 0xffL) * (j + 1)
+        ck += u8(bytes, o + j).toLong * (j + 1)
         // periodic reduction: 64K terms of ≤ 255·2^31 stay under 2^62,
         // so the running sum never wraps even for 2 GB frames
         if ((j & 0xffff) == 0xffff) ck %= ChecksumMod

@@ -44,16 +44,14 @@ object PixelHash {
 }
 
 object PixelHashImpl {
-
-  @inline private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+  import ByteWalk._
 
   /** Decode a GPR1/GPC1 container to a row-major grayscale grid.
     * Returns null (not an exception) on malformed input. */
   private[expressions] def decodeGray(b: Array[Byte]): (Int, Int, Array[Int]) = {
     if (b == null || b.length < 8) return null
-    val rowMajor = b(0) == 'G' && b(1) == 'P' && b(2) == 'R' && b(3) == '1'
-    val colMajor = b(0) == 'G' && b(1) == 'P' && b(2) == 'C' && b(3) == '1'
+    val rowMajor = tag(b, 0, "GPR1")
+    val colMajor = tag(b, 0, "GPC1")
     if (!rowMajor && !colMajor) return null
     val w = be16(b, 4)
     val h = be16(b, 6)
@@ -62,14 +60,14 @@ object PixelHashImpl {
     val px = new Array[Int](w * h)
     if (rowMajor) {
       var i = 0
-      while (i < w * h) { px(i) = b(8 + i) & 0xff; i += 1 }
+      while (i < w * h) { px(i) = u8(b, 8 + i); i += 1 }
     } else {
       // column-major, each byte XOR 0xA5 → de-interleave + unmask
       var j = 0
       while (j < w * h) {
         val x = j / h
         val y = j % h
-        px(y * w + x) = (b(8 + j) & 0xff) ^ 0xa5
+        px(y * w + x) = u8(b, 8 + j) ^ 0xa5
         j += 1
       }
     }

@@ -24,6 +24,7 @@ import org.apache.spark.sql.types._
   * Σ pixel(k)·(1 + k mod 97) that catches transposed or mis-unfiltered
   * pixels a plain sum would miss. */
 object PngPixels {
+  import ByteWalk._
 
   /** w·h cap: 1<<22 pixels (~4 MP grayscale) — far above any fixture,
     * far below a zip-bomb payoff. */
@@ -40,10 +41,6 @@ object PngPixels {
     StructField("px_max", IntegerType, nullable = false),
     StructField("checksum", LongType, nullable = false)))
 
-  @inline private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-
   private val Sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
   def statsImpl(bytes: Array[Byte]): InternalRow = {
@@ -57,27 +54,21 @@ object PngPixels {
     val idat = new java.io.ByteArrayOutputStream()
     var ended = false
     while (!ended && pos + 8 <= n) {
-      val p = pos.toInt
-      val len = be32(bytes, p)
-      val typ = new String(bytes, p + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val len = be32(bytes, pos)
       if (pos + 12 + len > n) return null // truncated chunk
-      typ match {
-        case "IHDR" =>
-          if (len < 13) return null
-          w = be32(bytes, p + 8)
-          h = be32(bytes, p + 12)
-          val depth = bytes(p + 16) & 0xff
-          val color = bytes(p + 17) & 0xff
-          val interlace = bytes(p + 20) & 0xff
-          if (depth != 8 || color != 0 || interlace != 0) return null
-          if (w <= 0 || h <= 0 || w * h > MaxPixels) return null
-          ok = true
-        case "IDAT" =>
-          if (!ok) return null
-          idat.write(bytes, p + 8, len.toInt)
-        case "IEND" => ended = true
-        case _ => // ancillary chunk: skip
-      }
+      if (tag(bytes, pos + 4, "IHDR")) {
+        if (len < 13) return null
+        w = be32(bytes, pos + 8)
+        h = be32(bytes, pos + 12)
+        if (u8(bytes, pos + 16) != 8 || u8(bytes, pos + 17) != 0 || u8(bytes, pos + 20) != 0)
+          return null // depth 8, gray, non-interlaced only
+        if (w <= 0 || h <= 0 || w * h > MaxPixels) return null
+        ok = true
+      } else if (tag(bytes, pos + 4, "IDAT")) {
+        if (!ok) return null
+        idat.write(bytes, (pos + 8).toInt, len.toInt)
+      } else if (tag(bytes, pos + 4, "IEND")) ended = true
+      // any other chunk is ancillary: skip
       pos += 12L + len
     }
     if (!ok || idat.size() == 0) return null

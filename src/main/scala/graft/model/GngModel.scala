@@ -63,12 +63,14 @@ object SeedWatch {
   * decayed weight — driver-held state, exactly the reference's
   * `batchStreamModel` fields (batchStreamModel.scala:13-21).
   *
-  * The in-memory matrices are O(N²) with N ≤ `params.maxNodes` (300);
+  * The in-memory matrices are O(N²) with N ≤ `params.maxNodes` (300 by
+  * default; the registered `gng_scale` query runs at N = 1002);
   * the driver update is O(N² + stats) per batch and never touches the
-  * distributed data (SURVEY §7.4.8: only ≤N stat rows reach the driver,
-  * which is what makes the design scale). Every per-node field is a
-  * fixed-size value, so the persisted form ([[GngModel.toBytes]]) is
-  * bounded by model size, never by stream length.
+  * distributed data (SURVEY §7.4.8: points never reach the driver, only
+  * per-node partials — see [[graft.operators.GngOps]] for their size).
+  * Every per-node field is a fixed-size value, so the persisted form
+  * ([[GngModel.toBytes]]) is bounded by model size, never by stream
+  * length.
   *
   * Semantics ported from SURVEY.md §2.9 T2-T10 / §3.3 with the §7.4
   * decisions: canonical stats order (sorted by node index), monotonic

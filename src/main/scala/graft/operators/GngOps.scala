@@ -17,10 +17,12 @@ import graft.model.{NodeStats, Point, SeedWatch}
   *  - partials merge via `treeAggregate` (depth 2), so 10⁴ partitions
   *    on a real cluster funnel through executors, not the driver.
   *
-  * Per batch this is exactly one narrow stage over the points + a
-  * collect of ≤ numPartitions × N tiny stat buffers — the only part of
-  * the pipeline that touches all 100 TB, and it is embarrassingly
-  * parallel.
+  * Per batch this is exactly one narrow stage over the points — the
+  * only part of the pipeline that touches all the data, and it is
+  * embarrassingly parallel — plus a collect of one stat buffer per
+  * (partition, winning node). Each buffer holds a dim-long centroid sum
+  * and a dense N-long vote vector (`Cell.votes`), so the partials are
+  * O(partitions × winners × (N + dim)), not O(N × dim).
   */
 object GngOps {
 

@@ -186,6 +186,19 @@ class CodegenParitySpec extends AnyFunSuite with SparkTestSupport {
     // and the well-formed rows actually decode under both modes
     assert(g.find(_.getLong(0) == 1L).get.getStruct(1).getInt(0) === 2)
     assert(g.find(_.getLong(0) == 2L).get.getStruct(2).getInt(2) === 3)
+    // one seed of each container plus mutated blobs through every
+    // byte-walk kernel
+    val blobs = (ByteWalkFuzz.seeds.take(10) ++ ByteWalkFuzz.blobs(30)).zipWithIndex
+      .map { case (p, k) => (k.toLong, p) }.toDF("id", "payload")
+    val (gb, ib) = bothWays(blobs.select(col("id"), ImageHeader.pngDims(col("payload")),
+      ImageHeader.wavMeta(col("payload")), ImageHeader.mp4Meta(col("payload")),
+      AudioPcm.pcmStats(col("payload")), AudioAdpcm.adpcmStats(col("payload")),
+      AudioFingerprint.audioFp64(col("payload")), ExifTiff.exifMeta(col("payload")),
+      Mp4SampleTable.samples(col("payload")), PngPixels.pngStats(col("payload")),
+      PixelHash.grayDhash64(col("payload"))))
+    assert(gb === ib)
+    // and every seed row decodes in some kernel
+    assert(gb.filter(_.getLong(0) < 10).forall(r => (1 until r.length).exists(!r.isNullAt(_))))
   }
 
   test("NearestCentroid: codegen == interpreted, GngOps-consistent winner") {

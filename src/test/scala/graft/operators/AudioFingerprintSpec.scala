@@ -84,6 +84,29 @@ class AudioFingerprintSpec extends AnyFunSuite with SparkTestSupport {
     val stereo = Multimodal.m15WavPcm(10L).clone()
     stereo(22) = 2 // channels LE16 at offset 22 in the canonical layout
     assert(AudioFingerprint.audioFp64(stereo) == null)
+    // m13 and m15 agree on IMA validity: the honest file decodes in
+    // both; a lying samples-per-block extension (honest: 505) or a fact
+    // count past 2^31 decodes in neither
+    val honest = imaWav(blockAlign = 256, nBlocks = 3, fact = 1515, spbExt = 505)
+    assert(AudioAdpcm.statsImpl(honest) != null && AudioFingerprint.audioFp64(honest) != null)
+    Seq(imaWav(256, 3, 1515, 999), imaWav(256, 3, (1L << 31) + 1, 505)).foreach { b =>
+      assert(AudioAdpcm.statsImpl(b) == null)
+      assert(AudioFingerprint.audioFp64(b) == null)
+    }
+  }
+
+  /** A mono IMA-ADPCM WAV of all-zero blocks (predictor 0, step index 0)
+    * with the given fact count and cbSize=2 samples-per-block field. */
+  private def imaWav(blockAlign: Int, nBlocks: Int, fact: Long, spbExt: Int): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(12 + 28 + 12 + 8 + blockAlign * nBlocks)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes).putInt(bb.capacity - 8).put("WAVE".getBytes)
+    bb.put("fmt ".getBytes).putInt(20).putShort(0x11.toShort).putShort(1.toShort)
+      .putInt(8000).putInt(4000).putShort(blockAlign.toShort).putShort(4.toShort)
+      .putShort(2.toShort).putShort(spbExt.toShort)
+    bb.put("fact".getBytes).putInt(4).putInt(fact.toInt)
+    bb.put("data".getBytes).putInt(blockAlign * nBlocks)
+    bb.array
   }
 
   test("fingerprints vary across docs (no trivial constant)") {

@@ -45,7 +45,10 @@ class ExifTiffSpec extends AnyFunSuite {
         val b = good.clone(); b(8) = 0xff.toByte; b(9) = 0xff.toByte; b
       },                           // entry count 65535 (DoS guard)
       "RIFFxxxxWAVE".getBytes,
-      Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte) // JPEG cut mid-marker
+      Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte), // JPEG cut mid-marker
+      // fill bytes running into the end of the buffer after a COM segment
+      "ffd8fffe000a4a4a4a4a4a7fffffffffffffff00".grouped(2)
+        .map(Integer.parseInt(_, 16).toByte).toArray
     )
     cases.foreach(b => assert(meta(b).isEmpty))
     // orientation out of 1..8 → NULL (strict): patch the SHORT slot.

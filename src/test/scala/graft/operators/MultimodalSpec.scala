@@ -238,7 +238,11 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSupport {
       (7L, ftyp ++ box("moov", be32b(4) ++ "mvhd".getBytes) ++ mdat(4)),
       // hostile: near-2^31 top-level size must end the walk, not wrap
       (8L, ftyp ++ be32b(Int.MaxValue.toLong - 3) ++ "skip".getBytes ++
-        box("moov", mvhd0(600, 100)) ++ mdat(4))
+        box("moov", mvhd0(600, 100)) ++ mdat(4)),
+      // hostile: a largesize near Long.MaxValue must end the walk, not
+      // wrap the position negative
+      (9L, ftyp ++ be32b(1) ++ "junk".getBytes ++ be64b(Long.MaxValue) ++
+        Array.fill[Byte](16)(0))
     ).toDF("id", "payload")
     val got = rows.select(col("id"),
         graft.expressions.ImageHeader.mp4Meta(col("payload")).as("m"))
@@ -247,7 +251,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSupport {
     assert(got(1L) === Some((600, 6000L, 2, 12L)))
     assert(got(2L) === Some((1200, 48000L, 1, 777L)))
     assert(got(3L) === Some((90000, 5400000L, 3, 2048L)))
-    for (bad <- Seq(4L, 5L, 6L, 7L, 8L)) assert(got(bad).isEmpty, s"id=$bad must be NULL")
+    for (bad <- Seq(4L, 5L, 6L, 7L, 8L, 9L)) assert(got(bad).isEmpty, s"id=$bad must be NULL")
   }
 
   test("decodeImageHeader dispatches by sniffed magic; non-image formats stay NULL") {
