@@ -196,12 +196,21 @@ private[expressions] object ByteWalk {
     def is(t: String): Boolean = tag(b, pos + 4, t)
   }
 
+  /** [[box]]: the walk reached `end` without a box of that type. */
+  val NoBox = -1L
+  /** [[box]]: the walk stopped early on a malformed or overrunning
+    * header, so whether the box exists is unknown. */
+  val BadBox = -2L
+
   /** First whole box of type `t` in [start, end), packed as
-    * (body start << 32) | box end, or -1 when the walk ends first. */
+    * (body start << 32) | box end; [[NoBox]] or [[BadBox]] otherwise. */
   def box(b: Array[Byte], start: Long, end: Long, t: String): Long = {
     val w = new Boxes(b, start, end)
-    while (w.next() && w.fits) if (w.is(t)) return (w.body << 32) | (w.pos + w.size)
-    -1L
+    while (w.next()) {
+      if (!w.fits) return BadBox
+      if (w.is(t)) return (w.body << 32) | (w.pos + w.size)
+    }
+    if (w.malformed) BadBox else NoBox
   }
 
   @inline def bodyOf(box: Long): Long = box >>> 32

@@ -152,6 +152,7 @@ object Mp4SampleTableImpl {
     // ---- ctts (optional): composition-time offsets — pts = dts + off;
     // absent means composition == decode order (no B-frames) ----------
     val ctts = box(bytes, sb, se, "ctts")
+    if (ctts == BadBox) return null // cannot tell absent from unreadable
     var ctCount: Array[Long] = null
     var ctOff: Array[Long] = null
     if (ctts >= 0) {
@@ -215,6 +216,7 @@ object Mp4SampleTableImpl {
     // ---- stco / co64: absolute chunk offsets --------------------------
     // co64 is the 64-bit form real >4 GiB files require — accept either
     val stco = box(bytes, sb, se, "stco")
+    if (stco == BadBox) return null
     val wide = stco < 0
     val co = if (wide) box(bytes, sb, se, "co64") else stco
     if (co < 0) return null
@@ -234,6 +236,7 @@ object Mp4SampleTableImpl {
 
     // ---- stss: sync (keyframe) samples; absent = all sync -------------
     val stss = box(bytes, sb, se, "stss")
+    if (stss == BadBox) return null
     val sync = new Array[Boolean](nS)
     if (stss < 0) {
       java.util.Arrays.fill(sync, true)

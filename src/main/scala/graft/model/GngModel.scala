@@ -359,8 +359,13 @@ object GngModel {
 
   /** "GNGS" — the first word of every model recovery point. */
   private val Magic = 0x474e4753
-  /** Layout version; bump it with every change to [[write]]/[[read]]. */
-  private val Version = 1
+  /** Layout version; bump it with every change to [[write]]/[[read]].
+    * Files without a [[Stamp]] keep the version-1 layout. */
+  private val Version = 2
+
+  /** The streaming batch a recovery point holds: the query id (kept in
+    * its checkpoint) and the foreachBatch batch id within that query. */
+  final case class Stamp(query: java.util.UUID, batchId: Long)
 
   /** Training-loop recovery point: the model PLUS the 1-based non-empty
     * batch counter `kk`, in ONE file so the pair can never tear. kk is
@@ -372,13 +377,18 @@ object GngModel {
   def saveState(path: java.nio.file.Path, model: GngModel, kk: Int): Unit = {
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
       java.nio.file.Files.newOutputStream(path)))
-    try write(model, kk, out) finally out.close()
+    try write(model, kk, None, out) finally out.close()
   }
 
   /** Inverse of [[saveState]] → (model, kk). A file in any other layout
     * (a foreign or older format, a truncated or padded payload) fails
     * with an IllegalArgumentException naming the path. */
-  def loadState(path: java.nio.file.Path): (GngModel, Int) = {
+  def loadState(path: java.nio.file.Path): (GngModel, Int) =
+    loadStamped(path) match { case (m, kk, _) => (m, kk) }
+
+  /** [[loadState]] plus the file's [[Stamp]]; None for an unstamped
+    * (version 1) file. */
+  def loadStamped(path: java.nio.file.Path): (GngModel, Int, Option[Stamp]) = {
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
       java.nio.file.Files.newInputStream(path)))
     try read(in, path.toString, java.nio.file.Files.size(path)) finally in.close()
@@ -386,7 +396,9 @@ object GngModel {
 
   /** The versioned primitive layout of (model, kk), all big-endian:
     * {{{
-    * magic:i32 version:i32 kk:i32 params dim:i32 nextId:i32
+    * magic:i32 version:i32 kk:i32
+    * stamp:     query:i64*2 batchId:i64            version 2 only
+    * params dim:i32 nextId:i32
     * seeds:     n:i32 (nodeId:i32 pointId:i64)*n
     * nodes:     n:i32 (id:i32 centroid:f64*dim nAssigned:i64)*n
     * outdated:  the same shape
@@ -396,14 +408,15 @@ object GngModel {
     * weights:   f64 * nodes
     * }}}
     * `params` is GngParams' fields in declaration order (f64 or i32).
-    * Size: 144 bytes of header (with both bootstrap seeds), 8·(dim+3)+4
-    * per live node, 16 per edge and 8·(dim+1)+4 per archived node — the
-    * model's size, not the stream's. Absent matrix cells are rebuilt as
-    * "no edge" (0, age NaN), so the round trip is bit-identical. */
-  def toBytes(model: GngModel, kk: Int): Array[Byte] = {
+    * Size: 144 bytes of header (with both bootstrap seeds), 24 more with
+    * a stamp, 8·(dim+3)+4 per live node, 16 per edge and 8·(dim+1)+4 per
+    * archived node — the model's size, not the stream's. Absent matrix
+    * cells are rebuilt as "no edge" (0, age NaN), so the round trip is
+    * bit-identical. */
+  def toBytes(model: GngModel, kk: Int, stamp: Option[Stamp] = None): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
-    write(model, kk, out)
+    write(model, kk, stamp, out)
     out.flush()
     bos.toByteArray
   }
@@ -412,10 +425,16 @@ object GngModel {
     * [[loadState]]. */
   def fromBytes(bytes: Array[Byte]): (GngModel, Int) =
     read(new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)),
-      "model bytes", bytes.length.toLong)
+      "model bytes", bytes.length.toLong) match { case (m, kk, _) => (m, kk) }
 
-  private def write(m: GngModel, kk: Int, out: java.io.DataOutputStream): Unit = {
-    out.writeInt(Magic); out.writeInt(Version); out.writeInt(kk)
+  private def write(m: GngModel, kk: Int, stamp: Option[Stamp],
+      out: java.io.DataOutputStream): Unit = {
+    out.writeInt(Magic); out.writeInt(if (stamp.isEmpty) 1 else Version); out.writeInt(kk)
+    for (st <- stamp) {
+      out.writeLong(st.query.getMostSignificantBits)
+      out.writeLong(st.query.getLeastSignificantBits)
+      out.writeLong(st.batchId)
+    }
     val p = m.params
     out.writeDouble(p.decayFactor); out.writeDouble(p.lambdaAge)
     out.writeDouble(p.maxAge); out.writeInt(p.nbNodesToAdd)
@@ -442,10 +461,10 @@ object GngModel {
     m.clusterWeights.foreach(out.writeDouble)
   }
 
-  private def read(in: java.io.DataInputStream, source: String, size: Long): (GngModel, Int) = {
+  private def read(in: java.io.DataInputStream, source: String, size: Long) = {
     var found = "no version"
     def fail(what: String): Nothing = throw new IllegalArgumentException(
-      s"$source: $what; found $found, this build reads G-Stream recovery point version $Version")
+      s"$source: $what; found $found, this build reads G-Stream recovery point versions 1 to $Version")
     // a count is plausible only if its items fit in the payload — a
     // corrupt count fails here instead of allocating gigabytes
     def count(what: String, itemBytes: Long): Int = {
@@ -458,8 +477,11 @@ object GngModel {
       if (magic != Magic) fail(f"not a G-Stream recovery point (magic 0x$magic%08x)")
       val version = in.readInt()
       found = s"version $version"
-      if (version != Version) fail("unknown layout version")
+      if (version < 1 || version > Version) fail("unknown layout version")
       val kk = in.readInt()
+      val stamp =
+        if (version == 1) None
+        else Some(Stamp(new java.util.UUID(in.readLong(), in.readLong()), in.readLong()))
       val params = GngParams(
         decayFactor = in.readDouble(), lambdaAge = in.readDouble(),
         maxAge = in.readDouble(), nbNodesToAdd = in.readInt(),
@@ -493,7 +515,7 @@ object GngModel {
       for (_ <- 0 until n) m.errors += in.readDouble()
       for (_ <- 0 until n) m.clusterWeights += in.readDouble()
       if (in.read() != -1) fail("trailing bytes after the model")
-      (m, kk)
+      (m, kk, stamp)
     } catch {
       case _: java.io.EOFException => fail("truncated payload")
     }

@@ -1,84 +1,104 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+import java.nio.file.StandardOpenOption.{CREATE, TRUNCATE_EXISTING, WRITE}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** EXACTLY-ONCE persistent state for incrementally-maintained tables
-  * ([[IncrementalAgg]]'s production companion).
+/** The one commit rule of every exactly-once stream in the library.
+  * foreachBatch is at-least-once: a batch whose effects ran but whose
+  * `commits/<id>` was never written is delivered again, under the same
+  * id, when the query restarts on its checkpoint. A step that is not
+  * idempotent (a merge, an append, a G-Stream update) is guarded by:
   *
-  * The failure this closes: an incremental-agg loop that does
-  * `state := merge(state, increment)` then persists the state has a
-  * crash window between "merge applied" and "snapshot committed" —
-  * the merge is associative but NOT idempotent, so a replayed
-  * increment (Structured Streaming re-delivers the in-flight batch on
-  * restart) would double-count. GStream training has a restart proof
-  * (GStreamRestartSpec); this gives the relational state loop the same
-  * guarantee.
+  *  - [[replayed]]: a batch id at or below the last committed one is
+  *    skipped. Batch ids are checkpoint-relative, so the committed id
+  *    travels with the checkpoint (a durable fold keeps both in its
+  *    state dir) or is paired with the query id (G-Stream's stamped
+  *    recovery point, [[graft.streaming.GStream.trainStreaming]]);
+  *  - [[publish]]: state becomes visible by atomically renaming a temp
+  *    file that was first forced to disk — old or new, never torn;
+  *  - [[once]]: a side effect that cannot hide behind a rename (an
+  *    index or layout append) is bracketed by intent/applied markers.
   *
-  * Mechanism — epoch-stamped versioned snapshots with an atomic
-  * pointer:
-  *
-  *  - state versions live under `dir/v=N/` as plain parquet; the
-  *    CURRENT version is named by a one-line JSON pointer file
-  *    `dir/_latest` = {"version":N,"epoch":E}, where E is the LAST
-  *    APPLIED epoch (micro-batch id);
-  *  - [[commit]] reads the pointer, SKIPS if `epoch <= E` (the
-  *    replayed-delivery case — applying is made idempotent by the
-  *    stamp, not by the merge), otherwise writes the stepped state to
-  *    `v=N+1` and only then publishes the pointer via write-temp +
-  *    ATOMIC_MOVE — readers switch from vN to vN+1 in one rename;
-  *  - a crash BEFORE the publish leaves the pointer at (N, E): the
-  *    orphaned v=N+1 directory is invisible (nothing points to it) and
-  *    the replay overwrites it before publishing — no double-apply, no
-  *    torn reads, in either crash half (spec-asserted by driving the
-  *    two halves separately: EpochStateSpec).
-  *
-  * Single-writer discipline: epochs must arrive non-decreasing (the
-  * foreachBatch contract — batch N+1 starts only after batch N's
-  * foreachBatch returned). Two concurrent writers would race the
-  * pointer; that is a coordination problem a table format solves with
-  * CAS on the pointer, and the atomic-move publish here is exactly
-  * that primitive for a single filesystem.
-  *
-  * At 100 TB the state table is keyed-aggregate sized (one row per
-  * group — dimension-scale, not fact-scale), so rewriting it per epoch
-  * is the cheap side of the trade; the fact history is what never
-  * re-reads. Old versions are pruned to a small keep-window rather
-  * than immediately (a reader that resolved the pointer a moment ago
-  * may still be scanning its version).
+  * The table store applies the rule to dimension-sized relational
+  * state: versions live under `dir/v=N/` as parquet, and the pointer
+  * `dir/_latest` = {"version":N,"epoch":E} names the current one, E
+  * being the last applied batch id. [[commit]] writes `v=N+1`, then
+  * publishes the pointer; a crash in between leaves an orphan nothing
+  * points to, which the replay overwrites. EpochStateSpec (folds) and
+  * GStreamCrashSpec (the G-Stream recovery point) drive both crash
+  * halves. Single writer: batch N+1 starts only after batch N returned.
+  * Old versions are pruned to a keep-window, so a reader that resolved
+  * the pointer a moment ago can finish its scan.
   */
 object EpochState {
 
   final case class Pointer(version: Long, epoch: Long)
 
-  private def latest(dir: String) = java.nio.file.Paths.get(dir, "_latest")
+  private def latest(dir: String) = Paths.get(dir, "_latest")
 
-  private def versionDir(dir: String, v: Long) = java.nio.file.Paths.get(dir, s"v=$v")
+  private def versionDir(dir: String, v: Long) = Paths.get(dir, s"v=$v")
+
+  /** True when batch `epoch` is at or below the last committed batch
+    * id, i.e. it was already applied and must be skipped. */
+  def replayed(epoch: Long, committed: Long): Boolean = epoch <= committed
+
+  /** Publish `bytes` at `target` all-or-nothing: write a sibling temp
+    * file, force it to disk, then rename it over `target` atomically. */
+  def publish(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
+    val ch = java.nio.channels.FileChannel.open(tmp, CREATE, WRITE, TRUNCATE_EXISTING)
+    try {
+      val buf = java.nio.ByteBuffer.wrap(bytes)
+      while (buf.hasRemaining) ch.write(buf)
+      ch.force(true)
+    } finally ch.close()
+    Files.move(tmp, target, ATOMIC_MOVE, REPLACE_EXISTING)
+  }
+
+  /** Run `sideEffect` for batch `epoch` at most once, tracked by marker
+    * files in `dir`; true when it ran. `_applied_<epoch>` present: skip.
+    * No marker: lay `_intent_<epoch>`, run, lay `_applied_<epoch>` (the
+    * commit point), drop the intent. Intent without applied: an earlier
+    * attempt died inside or after the side effect, which may be partial
+    * or complete, so re-running it blindly could double it; throw. */
+  def once(dir: Path, epoch: Long)(sideEffect: => Unit): Boolean = {
+    val applied = dir.resolve(s"_applied_$epoch")
+    val intent = dir.resolve(s"_intent_$epoch")
+    if (Files.exists(applied)) false
+    else {
+      if (Files.exists(intent)) throw new IllegalStateException(
+        s"EpochState: batch $epoch in $dir has an intent marker but no applied marker: an " +
+          "earlier attempt crashed inside or after its side effect. Rebuild the derived data " +
+          s"in $dir instead of re-applying it.")
+      Files.createFile(intent)
+      sideEffect
+      Files.createFile(applied)
+      Files.delete(intent)
+      true
+    }
+  }
 
   /** The committed pointer, or None for an uninitialized directory. */
   def readPointer(dir: String): Option[Pointer] =
-    if (!java.nio.file.Files.exists(latest(dir))) None
+    if (!Files.exists(latest(dir))) None
     else {
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(latest(dir)))
+        .readTree(Files.readString(latest(dir)))
       Some(Pointer(node.get("version").asLong(), node.get("epoch").asLong()))
     }
 
-  /** Publish (version, epoch) atomically: temp write + ATOMIC_MOVE onto
-    * `_latest` — the all-or-nothing boundary every commit crosses last. */
-  private def publish(dir: String, p: Pointer): Unit = {
-    val tmp = java.nio.file.Paths.get(dir, s"_latest.tmp.${p.version}")
-    java.nio.file.Files.writeString(tmp, s"""{"version":${p.version},"epoch":${p.epoch}}""")
-    java.nio.file.Files.move(tmp, latest(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def publish(dir: String, p: Pointer): Unit =
+    publish(latest(dir),
+      s"""{"version":${p.version},"epoch":${p.epoch}}""".getBytes("UTF-8"))
 
   /** Initialize the store with a base state (epoch -1: every real
     * epoch ≥ 0 applies on top). No-op if already initialized — a
     * restarted job must NOT reset committed state to the base. */
   def init(spark: SparkSession, dir: String, base: DataFrame): Unit =
     if (readPointer(dir).isEmpty) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.createDirectories(Paths.get(dir))
       base.write.mode("overwrite").parquet(versionDir(dir, 0L).toString)
       publish(dir, Pointer(0L, -1L))
     }
@@ -101,7 +121,7 @@ object EpochState {
     require(epoch >= 0, s"EpochState: epochs must be >= 0, got $epoch")
     val p = readPointer(dir).getOrElse(
       throw new IllegalStateException(s"EpochState: $dir is not initialized"))
-    if (epoch <= p.epoch) false
+    if (replayed(epoch, p.epoch)) false
     else {
       writeVersion(spark, dir, p, epoch, step)
       publish(dir, Pointer(p.version + 1, epoch))
@@ -122,20 +142,20 @@ object EpochState {
     require(version <= p.version,
       s"EpochState: version $version not committed yet (latest ${p.version})")
     val vd = versionDir(dir, version)
-    require(java.nio.file.Files.exists(vd),
+    require(Files.exists(vd),
       s"EpochState: version $version pruned (retained: ${versions(dir).mkString(",")})")
     spark.read.parquet(vd.toString)
   }
 
   /** Retained version numbers, ascending. */
   def versions(dir: String): Seq[Long] = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) Seq.empty
+    val root = Paths.get(dir)
+    if (!Files.exists(root)) Seq.empty
     else {
       // Files.list holds a directory handle until closed — without the
       // finally, every versions() call (stateAt's error path included)
       // leaks one fd.
-      val stream = java.nio.file.Files.list(root)
+      val stream = Files.list(root)
       try {
         val it = stream.iterator()
         val out = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -161,7 +181,7 @@ object EpochState {
     * reader may still be scanning. */
   private def prune(dir: String, current: Long, keep: Long = 2): Unit = {
     var v = current - keep - 1
-    while (v >= 0 && java.nio.file.Files.exists(versionDir(dir, v))) {
+    while (v >= 0 && Files.exists(versionDir(dir, v))) {
       graft.streaming.StreamingRelational.deleteRecursively(versionDir(dir, v))
       v -= 1
     }

@@ -89,14 +89,9 @@ object InvertedIndex {
 
   private def spark(df: DataFrame): SparkSession = df.sparkSession
 
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    val tmp = java.nio.file.Paths.get(dir, "_meta.json.tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"nBuckets":${m.nBuckets},"nDocs":${m.nDocs},"totalLen":${m.totalLen}}""")
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "_meta.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeMeta(dir: String, m: Meta): Unit =
+    EpochState.publish(java.nio.file.Paths.get(dir, "_meta.json"),
+      s"""{"nBuckets":${m.nBuckets},"nDocs":${m.nDocs},"totalLen":${m.totalLen}}""".getBytes("UTF-8"))
 
   private[graft] def readMeta(dir: String): Meta = {
     val meta = java.nio.file.Paths.get(dir, "_meta.json")

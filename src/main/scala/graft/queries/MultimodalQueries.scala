@@ -1233,7 +1233,7 @@ object MultimodalQueries {
         Seq.empty[(Long, Long, Long, Long)]
           .toDF("vid_a", "vid_b", "doc_id_a", "doc_id_b"))
       val st = graft.streaming.StreamingRelational.oneShotFoldMany(s, stream, inits,
-        (states, batch) => {
+        (states, batch, _) => {
           // checkpoint the batch's own signatures: they sit on BOTH
           // sides of the pair join and in the next signature state —
           // one kernel pass, no self-join attribute aliasing

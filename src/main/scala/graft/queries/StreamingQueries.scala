@@ -205,14 +205,14 @@ object StreamingQueries {
         StreamingRelational.scratchBase, "incagg-epochs")
       StreamingRelational.registerScratch(stateDir)
       RelationalQueries.finalizeIncAgg(
-        StreamingRelational.oneShotFoldExactlyOnce(s,
+        StreamingRelational.oneShotFoldMany(s,
           StreamingRelational.eventsStream(s, d)
             .filter(!Tables.inLowMd5Half(col("event_id"))),
-          stateDir.toString,
-          snapshot,
-          (state, batch) => IncrementalAgg.merge(state,
+          Seq(snapshot),
+          (states, batch, _) => Seq(IncrementalAgg.merge(states.head,
             IncrementalAgg.aggState(batch, Seq(col("event_type")), col("value")),
-            Seq("event_type"))))
+            Seq("event_type"))),
+          stateDir = Some(stateDir.toString)).head)
     },
 
     // Watermark LATE-DATA accounting: a controlled four-file arrival —
@@ -464,42 +464,23 @@ object StreamingQueries {
         .option("maxFilesPerTrigger", 1)
         .parquet(documentSliceDir(s, d))
       import s.implicits._
-      val state = StreamingRelational.oneShotFoldWithEpoch(s, stream,
-        Seq(0L).toDF("n_batches"),
+      // foreachBatch is at-least-once, and a re-delivered batch
+      // re-appending its postings would break lookupAll's
+      // distinct-postings invariant (count == q would silently drop
+      // matching docs): EpochState.once runs each batch's build/append
+      // at most once and fails loudly on a crash inside it
+      val state = StreamingRelational.oneShotFoldMany(s, stream,
+        Seq(Seq(0L).toDF("n_batches")),
         (st, batch, epoch) => {
-          // idempotence markers: foreachBatch is at-least-once, and a
-          // re-delivered batch re-appending its postings would break
-          // lookupAll's distinct-postings invariant (count == q would
-          // silently drop matching docs). Intent/applied pair
-          // (round-11 advisor): `_intent` is laid down BEFORE the
-          // side-effecting append, `_applied` (the commit point) only
-          // after it — so a replay sees exactly one of three states:
-          // applied → skip cleanly; no marker → run fresh; intent
-          // without applied → the previous attempt died mid- or
-          // post-append (postings possibly partial OR fully written),
-          // which is NOT silently re-appendable — fail LOUD and name
-          // the rebuild. Both crash windows are thereby closed as
-          // corruption sources; neither is hidden.
-          val applied = root.resolve(s"_applied_$epoch")
-          val intent = root.resolve(s"_intent_$epoch")
-          if (!java.nio.file.Files.exists(applied)) {
-            require(!java.nio.file.Files.exists(intent),
-              s"s15: batch $epoch has an intent marker but no applied marker — " +
-                "a previous attempt crashed inside/after its append; the index " +
-                "may hold partial or duplicate postings for this batch. " +
-                "Rebuild the index dir (it is a derived artifact) — " +
-                "re-appending blindly would silently double-count.")
-            java.nio.file.Files.createFile(intent)
+          graft.operators.EpochState.once(root, epoch) {
             if (!java.nio.file.Files.exists(idx.resolve("_meta.json")))
               InvertedIndex.build(batch, col("doc_id"), col("text"),
                 nBuckets = 8, dir = idx.toString)
             else
               InvertedIndex.append(batch, col("doc_id"), col("text"), idx.toString)
-            java.nio.file.Files.createFile(applied)
-            java.nio.file.Files.delete(intent)
           }
-          st.select((col("n_batches") + 1L).as("n_batches"))
-        })
+          Seq(st.head.select((col("n_batches") + 1L).as("n_batches")))
+        }).head
       require(state.head().getLong(0) >= 3L, "s15: expected three arriving batches")
       InvertedIndex.lookupAll(s, idx.toString, Seq("spark", "merge", "dup"))
         .join(Tables.documents(s, d)
@@ -870,7 +851,7 @@ object StreamingQueries {
         Dedup.contaminationShingles(empty, col("text"), col("doc_id"), n = 4),
         TextQueries.knTrigrams(empty))
       val st = StreamingRelational.oneShotFoldMany(s, stream, inits,
-        (states, batch) => {
+        (states, batch, _) => {
           val nz = batch.filter(col("source").isNotNull)
           Seq(
             states(0).unionByName(TextQueries.dataCardFeat(nz)),
@@ -1018,24 +999,14 @@ object StreamingQueries {
         .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", 1)
         .parquet(slices)
-      val state = StreamingRelational.oneShotFoldWithEpoch(s, stream,
-        Seq(0L).toDF("n_indexed"),
+      val state = StreamingRelational.oneShotFoldMany(s, stream,
+        Seq(Seq(0L).toDF("n_indexed")),
         (st, batch, epoch) => {
-          val applied = dirP.resolve(s"_applied_$epoch")
-          val intent = dirP.resolve(s"_intent_$epoch")
-          if (!java.nio.file.Files.exists(applied)) {
-            require(!java.nio.file.Files.exists(intent),
-              s"s28: batch $epoch crashed between intent and applied markers — " +
-                "rebuild the layout dir rather than silently re-appending")
-            java.nio.file.Files.createFile(intent)
-            RangeLayout.append(batch, "ts", dir)
-            java.nio.file.Files.createFile(applied)
-            java.nio.file.Files.delete(intent)
-          }
+          graft.operators.EpochState.once(dirP, epoch)(RangeLayout.append(batch, "ts", dir))
           // idempotent by construction: indexes only sidecar-missing files
           val n = RangeLayout.refreshBloomIndex(s, dir, "event_id")
-          st.select((col("n_indexed") + n.toLong).as("n_indexed"))
-        })
+          Seq(st.head.select((col("n_indexed") + n.toLong).as("n_indexed")))
+        }).head
       require(state.head().getLong(0) >= 3L,
         "s28: the incremental refresh should have indexed appended files")
       val (data, read, total) = RangeLayout.bloomLookup(
@@ -1082,27 +1053,13 @@ object StreamingQueries {
         .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", 1)
         .parquet(slices)
-      val state = StreamingRelational.oneShotFoldWithEpoch(s, stream,
-        Seq(0L).toDF("n_batches"),
+      val state = StreamingRelational.oneShotFoldMany(s, stream,
+        Seq(Seq(0L).toDF("n_batches")),
         (st, batch, epoch) => {
-          // intent/applied marker pair — s15's replay discipline: a
-          // replay with intent-but-no-applied means the prior attempt
-          // died inside/after its append (bucket files possibly
-          // partial or fully written); fail loud, never re-append.
-          val applied = dirP.resolve(s"_applied_$epoch")
-          val intent = dirP.resolve(s"_intent_$epoch")
-          if (!java.nio.file.Files.exists(applied)) {
-            require(!java.nio.file.Files.exists(intent),
-              s"s25: batch $epoch crashed between intent and applied markers — " +
-                "the layout may hold partial or duplicate rows for this batch; " +
-                "rebuild the layout dir rather than silently re-appending")
-            java.nio.file.Files.createFile(intent)
-            RangeLayout.append(batch, "ts", dir)
-            java.nio.file.Files.createFile(applied)
-            java.nio.file.Files.delete(intent)
-          }
-          st.select((col("n_batches") + 1L).as("n_batches"))
-        })
+          // s15's replay discipline: a re-delivered append never runs twice
+          graft.operators.EpochState.once(dirP, epoch)(RangeLayout.append(batch, "ts", dir))
+          Seq(st.head.select((col("n_batches") + 1L).as("n_batches")))
+        }).head
       require(state.head().getLong(0) >= 3L, "s25: expected three arriving batches")
       val lo = java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli * 1000L
       val hi = java.time.Instant.parse("2024-01-13T00:00:00Z").toEpochMilli * 1000L

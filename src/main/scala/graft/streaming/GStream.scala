@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.{GngModel, GngParams, NodeStats, Point}
-import graft.operators.GngOps
+import graft.operators.{EpochState, GngOps}
 
 /** G-Stream: micro-batching Growing Neural Gas over Spark.
   *
@@ -191,11 +191,53 @@ object GStream {
     // fading (kk % 3) and the snapshot cadence stay aligned with a
     // never-killed run (GStreamRestartSpec proves bit-identical ends).
     var kk = startKk
+    // Exactly-once (§7.4.7): the recovery point is stamped with the
+    // query id and the batch id it absorbed, and moved into place before
+    // Spark writes `commits/<id>`. A batch the SAME query delivers again
+    // after a crash in between is skipped (EpochState's rule); a fresh
+    // checkpoint has a new query id and never skips (GStreamCrashSpec).
+    val recoveryPoint = modelCheckpoint.map(java.nio.file.Paths.get(_, "model-latest.bin"))
+    var committed: Option[(GngModel.Stamp, Int)] = recoveryPoint
+      .filter(java.nio.file.Files.exists(_)).map(GngModel.loadStamped)
+      .flatMap { case (_, storedKk, stamp) => stamp.map(_ -> storedKk) }
     // cumulative per-batch update milliseconds, ring-buffered at 100
     // entries — the reference's timeUpdates telemetry, its ONLY
     // published baseline numbers (batchStream.scala:84,88,92-93;
     // golden conf/test/results/DS1-200-3/timeUpdates-92)
     val timeUpdates = scala.collection.mutable.ArrayBuffer[Long](0L)
+    def applyBatch(batch: Dataset[Point], batchId: Long, query: java.util.UUID): Unit = {
+      val t0 = System.currentTimeMillis()
+      // small batches (the common micro-batch case) collect + update
+      // locally — no Spark job beyond the probe; the limit-probe IS
+      // the whole batch when it comes back under the threshold. The
+      // cap is dimension-aware (localPathMaxCells) so the one-job
+      // probe ships a bounded number of BYTES, not just rows — a
+      // wide-embedding stream can't balloon the driver heap.
+      val cap = math.min(localPathMaxRows.toLong,
+        localPathMaxCells / math.max(model.dim, 1)).toInt
+      val probe = batch.limit(cap + 1).collect()
+      val stats =
+        if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids, model.seedWatch)
+        else GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
+      val next = model.step(stats, kk)
+      if (next != kk) {
+        kk = next
+        val updateMs = System.currentTimeMillis() - t0
+        timeUpdates += timeUpdates.last + updateMs
+        if (timeUpdates.length > 100) timeUpdates.remove(0)
+        onBatch(kk, updateMs) // per-batch telemetry (bench/monitoring)
+        outDir.foreach { dir =>
+          if (snapshotAt(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
+        }
+        // (kk, model, stamp) in one file: a restart resumes kk too
+        recoveryPoint.foreach { p =>
+          java.nio.file.Files.createDirectories(p.getParent)
+          val stamp = GngModel.Stamp(query, batchId)
+          EpochState.publish(p, GngModel.toBytes(model, kk, Some(stamp)))
+          committed = Some(stamp -> kk)
+        }
+      }
+    }
     // Spark's streaming WAL (offsets + commits) fsyncs per micro-batch;
     // with no explicit checkpointLocation it lands in java.io.tmpdir,
     // and on a contended disk those fsyncs dominate small-batch
@@ -207,46 +249,17 @@ object GStream {
       .trigger(Trigger.ProcessingTime(triggerMs))
     checkpointLocation.foreach(c => base.option("checkpointLocation", c))
     base
-      .foreachBatch { (batch: Dataset[Point], _: Long) =>
-        val t0 = System.currentTimeMillis()
-        // small batches (the common micro-batch case) collect + update
-        // locally — no Spark job beyond the probe; the limit-probe IS
-        // the whole batch when it comes back under the threshold. The
-        // cap is dimension-aware (localPathMaxCells) so the one-job
-        // probe ships a bounded number of BYTES, not just rows — a
-        // wide-embedding stream can't balloon the driver heap.
-        val cap = math.min(localPathMaxRows.toLong,
-          localPathMaxCells / math.max(model.dim, 1)).toInt
-        val probe = batch.limit(cap + 1).collect()
-        val stats =
-          if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids, model.seedWatch)
-          else GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
-        val next = model.step(stats, kk)
-        if (next != kk) {
-          kk = next
-          val updateMs = System.currentTimeMillis() - t0
-          timeUpdates += timeUpdates.last + updateMs
-          if (timeUpdates.length > 100) timeUpdates.remove(0)
-          onBatch(kk, updateMs) // per-batch telemetry (bench/monitoring)
-          outDir.foreach { dir =>
-            if (snapshotAt(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
-          }
-          // §7.4.7: model recovery point per completed batch (write tmp,
-          // atomic move, so a crash never leaves a torn checkpoint).
-          // The payload is (kk, model) in one file — GngModel.loadState —
-          // so a restart resumes the batch counter too, not just the
-          // prototype state. Its size depends on the model, not on how
-          // long the stream has run (GngModel.toBytes).
-          modelCheckpoint.foreach { dir =>
-            val d = java.nio.file.Paths.get(dir)
-            java.nio.file.Files.createDirectories(d)
-            val tmp = d.resolve(s"model-$kk.bin.tmp")
-            GngModel.saveState(tmp, model, kk)
-            java.nio.file.Files.move(tmp, d.resolve("model-latest.bin"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        }
+      .foreachBatch { (batch: Dataset[Point], batchId: Long) =>
+        // StreamExecution sets this on the stream thread; the id persists
+        // in the checkpoint, so it names the query across restarts
+        val query = java.util.UUID.fromString(
+          spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+        val ours = committed.filter(_._1.query == query)
+        for ((_, storedKk) <- ours) require(storedKk == kk,
+          s"trainStreaming: this query's recovery point ${recoveryPoint.get} holds kk " +
+            s"$storedKk, but the stream is at startKk $kk; resume with the stored (model, kk)")
+        if (!ours.exists(c => EpochState.replayed(batchId, c._1.batchId)))
+          applyBatch(batch, batchId, query)
       }
       .start()
   }

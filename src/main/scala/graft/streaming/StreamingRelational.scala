@@ -88,10 +88,11 @@ object StreamingRelational {
   private val confLock = new Object
 
   /** The ONE one-shot harness shell shared by [[oneShot]] /
-    * [[oneShotServe]] / [[oneShotFold]]: cap
+    * [[oneShotServe]] / [[oneShotFoldMany]]: cap
     * spark.sql.shuffle.partitions to 8 under `confLock` (see the state
     * -store cost note in [[oneShot]]), start the query, await
-    * AvailableNow drain, restore the conf, delete the checkpoint. One
+    * AvailableNow drain, restore the conf, delete the checkpoint (kept
+    * when `cleanupCkpt` is false: a durable fold's lives on). One
     * definition so a fix to the cap-and-restore logic can't miss a
     * variant. */
   private def runOneShot(spark: SparkSession, ckpt: java.nio.file.Path,
@@ -268,117 +269,66 @@ object StreamingRelational {
     * is associative/commutative the final state is invariant to how
     * the stream slices into batches (spec-asserted with a 2-batch
     * MemoryStream) — so the batch oracle verifies the streaming path.
-    *
-    * State is dimension-sized (one row per key), held as eagerly
-    * localCheckpoint'ed RDD blocks between triggers: the lineage cut
-    * keeps per-batch plan analysis flat over arbitrarily many batches
-    * (connectedComponents' idiom) instead of growing a
-    * merge-of-merge-of-merge tree. */
+    * The in-memory, one-state form of [[oneShotFoldMany]]. */
   def oneShotFold(spark: SparkSession, streamed: DataFrame, init: DataFrame,
       step: (DataFrame, DataFrame) => DataFrame): DataFrame =
     oneShotFoldMany(spark, streamed, Seq(init),
-      (states, batch) => Seq(step(states.head, batch))).head
+      (states, batch, _) => Seq(step(states.head, batch))).head
 
-  /** The fold over SEVERAL independent state tables at once — for
-    * folds where one arriving micro-batch must pay several kernel
-    * families exactly once each (s35's data card: per-doc features,
-    * contamination shingles, KN trigrams), without forcing their
-    * different schemas into one tagged union. `step` receives every
-    * current state plus the batch and returns the same number of new
-    * states; each is localCheckpoint'ed eagerly — superseded rounds'
-    * checkpoint blocks are freed by the ContextCleaner once
-    * unreferenced (the connectedComponents memory model;
-    * Dataset.unpersist would be a no-op here, it only uncaches
-    * CacheManager entries, not checkpoints). [[oneShotFold]] is the
-    * N=1 delegation, so the skip/checkpoint/lineage-cut logic has ONE
-    * definition (the runOneShot docstring's own rule). */
+  /** The one fold body. `step` receives every current state, the
+    * non-empty micro-batch and its batch id, and returns as many states.
+    *
+    * In memory (no `stateDir`) several state tables fold at once, so one
+    * batch pays several kernel families once each (s35's data card)
+    * without a tagged union of their schemas. Each new state is eagerly
+    * localCheckpoint'ed: the lineage cut keeps per-batch plan analysis
+    * flat (connectedComponents' idiom), and the ContextCleaner frees
+    * superseded blocks once unreferenced. The state dies with the job;
+    * a step with on-disk side effects guards them with the batch id via
+    * [[graft.operators.EpochState.once]].
+    *
+    * With a `stateDir` the fold is exactly-once across kills: each batch
+    * commits `step(state, batch)` under its id through
+    * [[graft.operators.EpochState.commit]], which holds one table per
+    * pointer, so a durable fold takes exactly one state (s08's form).
+    * Pass the SAME dir to a re-run: init is then a no-op, and the
+    * streaming checkpoint lives inside it (`_ckpt`) because batch ids
+    * are checkpoint-relative — a fresh checkpoint would renumber new
+    * data from 0 and the guard would wrongly skip it. */
   def oneShotFoldMany(spark: SparkSession, streamed: DataFrame,
       inits: Seq[DataFrame],
-      step: (Seq[DataFrame], DataFrame) => Seq[DataFrame]): Seq[DataFrame] = {
-    val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-ckpt")
-    @volatile var states = inits.map(_.localCheckpoint(true))
-    runOneShot(spark, ckpt) { () =>
-      streamed.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val next = step(states, batch)
-            require(next.length == states.length,
-              s"oneShotFoldMany: step returned ${next.length} states for ${states.length}")
-            states = next.map(_.localCheckpoint(true))
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      step: (Seq[DataFrame], DataFrame, Long) => Seq[DataFrame],
+      stateDir: Option[String] = None): Seq[DataFrame] = {
+    import graft.operators.EpochState
+    require(stateDir.isEmpty || inits.length == 1,
+      s"oneShotFoldMany: a durable fold commits one table per EpochState pointer, got ${inits.length} states")
+    val ckpt = stateDir.fold(java.nio.file.Files.createTempDirectory(scratchBase, "graft-ckpt")) { dir =>
+      EpochState.init(spark, dir, inits.head)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_ckpt"))
     }
-    states
-  }
-
-  /** [[oneShotFold]] passing the micro-batch id into `step` — for
-    * folds whose step performs EXTERNAL side effects (growing an
-    * on-disk index, appending to a table): foreachBatch is
-    * at-least-once, so a re-delivered batch would re-run the side
-    * effect; the id lets the step keep an idempotence marker and skip
-    * batches it has already applied (s15's `_applied_N` files). */
-  def oneShotFoldWithEpoch(spark: SparkSession, streamed: DataFrame, init: DataFrame,
-      step: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-ckpt")
-    @volatile var state = init.localCheckpoint(true)
-    runOneShot(spark, ckpt) { () =>
+    @volatile var states = if (stateDir.isEmpty) inits.map(_.localCheckpoint(true)) else inits
+    def next(current: Seq[DataFrame], batch: DataFrame, epoch: Long): Seq[DataFrame] = {
+      val out = step(current, batch, epoch)
+      require(out.length == current.length,
+        s"oneShotFoldMany: step returned ${out.length} states for ${current.length}")
+      out
+    }
+    runOneShot(spark, ckpt, cleanupCkpt = stateDir.isEmpty) { () =>
       streamed.writeStream
         .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          if (!batch.isEmpty) {
-            state = step(state, batch, epoch).localCheckpoint(true)
-            ()
+          if (!batch.isEmpty) stateDir match {
+            case Some(dir) =>
+              EpochState.commit(spark, dir, epoch)(st => next(Seq(st), batch, epoch).head)
+            case None =>
+              states = next(states, batch, epoch).map(_.localCheckpoint(true))
           }
+          ()
         }
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    state
-  }
-
-  /** [[oneShotFold]] with EXACTLY-ONCE persistent state
-    * ([[graft.operators.EpochState]]): each micro-batch commits
-    * `step(state, batch)` under its batch id, so the crash window
-    * between "merge applied" and "state committed" cannot double-count
-    * — a restarted stream re-delivers the in-flight batch
-    * (foreachBatch's at-least-once contract) and the epoch stamp makes
-    * the re-application a no-op. This is the production shape for q37/
-    * s08's maintained aggregates: the in-memory fold above is the
-    * measurement/verification form (state dies with the job); this one
-    * survives a kill at ANY point with no loss and no double-apply
-    * (EpochStateSpec drives the two crash halves explicitly).
-    *
-    * `stateDir` persists across restarts — pass the SAME dir to the
-    * re-run and initialization is a no-op on committed state. The
-    * STREAMING CHECKPOINT lives inside it (`_ckpt`) and persists with
-    * it: batch ids are checkpoint-relative, so a restart with a fresh
-    * checkpoint would renumber new data from 0 and the epoch guard
-    * would wrongly skip it — checkpoint and epoch stamps must travel
-    * together or the guard guards the wrong thing. */
-  def oneShotFoldExactlyOnce(spark: SparkSession, streamed: DataFrame,
-      stateDir: String, init: DataFrame,
-      step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val ckpt = java.nio.file.Paths.get(stateDir, "_ckpt")
-    java.nio.file.Files.createDirectories(ckpt)
-    graft.operators.EpochState.init(spark, stateDir, init)
-    runOneShot(spark, ckpt, cleanupCkpt = false) { () =>
-      streamed.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.EpochState.commit(spark, stateDir, epoch)(
-              state => step(state, batch))
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    graft.operators.EpochState.state(spark, stateDir)
+    stateDir.fold(states)(dir => Seq(EpochState.state(spark, dir)))
   }
 
   /** Watermarked tumbling-window aggregation: events per (hour, type)

@@ -174,14 +174,40 @@ class GngModelStateSpec extends AnyFunSuite {
     val (m, kk) = sample
     val good = GngModel.toBytes(m, kk)
     assert(rejects(good.take(good.length / 2)).getMessage.contains("truncated payload; found version 1"))
-    val v2 = good.clone()
-    v2(7) = 2
-    assert(rejects(v2).getMessage.contains("unknown layout version; found version 2"))
+    val v3 = good.clone()
+    v3(7) = 3
+    assert(rejects(v3).getMessage.contains("unknown layout version; found version 3"))
     assert(rejects(good :+ 0.toByte).getMessage.contains("trailing bytes"))
     // every proper prefix fails as IllegalArgumentException, never EOF
     for (n <- 0 until good.length)
       intercept[IllegalArgumentException](GngModel.fromBytes(good.take(n)))
     assert(GngModel.fromBytes(good)._2 === kk)
+  }
+
+  test("a stamp makes the file version 2, 24 bytes larger; version 1 still loads with no stamp") {
+    val (m, kk) = sample
+    val plain = GngModel.toBytes(m, kk)
+    assert(plain(7) === 1, "an unstamped recovery point keeps the version-1 bytes")
+    val stamp = GngModel.Stamp(java.util.UUID.fromString("0f1e2d3c-4b5a-6978-8796-a5b4c3d2e1f0"), 41L)
+    val stamped = GngModel.toBytes(m, kk, Some(stamp))
+    assert(stamped(7) === 2)
+    assert(stamped.length === plain.length + 24)
+    assert(stamped.length === formulaBytes(m) + 24)
+    val f = tmp()
+    try {
+      Files.write(f, stamped)
+      val (back, backKk, backStamp) = GngModel.loadStamped(f)
+      assert(backKk === kk && backStamp === Some(stamp))
+      assert(GngModel.toBytes(back, backKk, backStamp).sameElements(stamped))
+      assert(GngModel.loadState(f)._2 === kk)
+      Files.write(f, plain)
+      val (v1, v1Kk, v1Stamp) = GngModel.loadStamped(f)
+      assert(v1Kk === kk && v1Stamp === None)
+      assert(GngModel.toBytes(v1, v1Kk).sameElements(plain))
+    } finally Files.delete(f)
+    // every proper prefix of a stamped file fails as IllegalArgumentException
+    for (n <- 0 until stamped.length)
+      intercept[IllegalArgumentException](GngModel.fromBytes(stamped.take(n)))
   }
 
   test("loadState rejects random bytes") {

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSupport
+import scala.jdk.CollectionConverters._
 
 /** The exactly-once contract of the epoch-stamped state store: the
   * incremental-agg merge is associative but NOT idempotent, so the
@@ -82,11 +83,13 @@ class EpochStateSpec extends AnyFunSuite with SparkTestSupport {
       IncrementalAgg.merge(state,
         IncrementalAgg.aggState(batch, Seq(col("k")), col("v")), Seq("k"))
     val init = agg(Seq("a" -> 1.0))
+    def fold(): DataFrame = graft.streaming.StreamingRelational.oneShotFoldMany(
+      spark, stream, Seq(init), (st, batch, _) => Seq(step(st.head, batch)),
+      stateDir = Some(stateDir)).head
 
     // run 1: one file, commits under its batch id
     writeFile("f1", Seq("a" -> 2.0, "b" -> 4.0))
-    graft.streaming.StreamingRelational.oneShotFoldExactlyOnce(
-      spark, stream, stateDir, init, step)
+    fold()
     val afterRun1 = snap(stateDir)
     assert(afterRun1 === Map("a" -> ((2L, 3.0)), "b" -> ((1L, 4.0))))
 
@@ -103,14 +106,12 @@ class EpochStateSpec extends AnyFunSuite with SparkTestSupport {
     // restart with the SAME state dir (checkpoint travels inside it):
     // the file source re-delivers f2 under the same batch id; the
     // commit applies exactly once
-    graft.streaming.StreamingRelational.oneShotFoldExactlyOnce(
-      spark, stream, stateDir, init, step)
+    fold()
     val expected = Map("a" -> ((2L, 3.0)), "b" -> ((2L, 12.0)), "c" -> ((1L, 16.0)))
     assert(snap(stateDir) === expected)
 
     // a further restart with no new data replays nothing
-    graft.streaming.StreamingRelational.oneShotFoldExactlyOnce(
-      spark, stream, stateDir, init, step)
+    fold()
     assert(snap(stateDir) === expected)
   }
 
@@ -142,5 +143,53 @@ class EpochStateSpec extends AnyFunSuite with SparkTestSupport {
       EpochState.stateAt(spark, dir, 99L)
     }
     assert(err2.getMessage.contains("not committed"))
+  }
+
+  test("once: an applied marker skips the side effect") {
+    val dir = java.nio.file.Paths.get(tmpDir("once-applied"))
+    java.nio.file.Files.createFile(dir.resolve("_applied_3"))
+    var runs = 0
+    assert(!EpochState.once(dir, 3L)(runs += 1))
+    assert(runs === 0)
+  }
+
+  test("once: a fresh batch runs once and leaves only the applied marker") {
+    val dir = java.nio.file.Paths.get(tmpDir("once-fresh"))
+    var runs = 0
+    assert(EpochState.once(dir, 5L) {
+      assert(java.nio.file.Files.exists(dir.resolve("_intent_5")), "intent precedes the side effect")
+      runs += 1
+    })
+    assert(runs === 1)
+    val left = {
+      val st = java.nio.file.Files.list(dir)
+      try st.iterator().asScala.map(_.getFileName.toString).toSet finally st.close()
+    }
+    assert(left === Set("_applied_5"))
+    // the re-delivery of the same batch is now skipped
+    assert(!EpochState.once(dir, 5L)(runs += 1))
+    assert(runs === 1)
+  }
+
+  test("once: an intent marker without an applied marker fails loudly, naming dir and batch") {
+    val dir = java.nio.file.Paths.get(tmpDir("once-torn"))
+    java.nio.file.Files.createFile(dir.resolve("_intent_7"))
+    var runs = 0
+    val e = intercept[IllegalStateException](EpochState.once(dir, 7L)(runs += 1))
+    assert(runs === 0)
+    assert(e.getMessage.contains(dir.toString), e.getMessage)
+    assert(e.getMessage.contains("batch 7"), e.getMessage)
+  }
+
+  test("a durable fold given two states fails fast: EpochState commits one table per pointer") {
+    val stateDir = tmpDir("epoch-two")
+    val s = agg(Seq("a" -> 1.0))
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.StreamingRelational.oneShotFoldMany(
+        spark, spark.readStream.schema("k STRING, v DOUBLE").parquet(tmpDir("epoch-two-src")),
+        Seq(s, s), (st, _, _) => st, stateDir = Some(stateDir))
+    }
+    assert(e.getMessage.contains("one table per EpochState pointer"), e.getMessage)
+    assert(EpochState.readPointer(stateDir).isEmpty, "nothing may be initialized")
   }
 }

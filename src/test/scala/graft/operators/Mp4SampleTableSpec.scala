@@ -137,6 +137,13 @@ class Mp4SampleTableSpec extends AnyFunSuite {
       patch("stsc", 4 + 12 + 3, 0),         // samples_per_chunk = 0
       "ftypnotabox".getBytes("US-ASCII"))
     cases.foreach(b => assert(parse(b).isEmpty))
+    // an optional box (stss) whose header declares a size below its own
+    // 8 bytes stops the walk: unknown, not absent, so NULL rather than
+    // "every frame is a sync frame"
+    val bad = Multimodal.encodeMp4(7L, remux = false)
+    val ss = indexOfTag(bad, "stss")
+    Seq(0, 0, 0, 4).zipWithIndex.foreach { case (v, k) => bad(ss - 4 + k) = v.toByte }
+    assert(parse(bad).isEmpty)
   }
 
   test("adversarial Long-overflow blobs: NULL, never an out-of-bounds throw") {

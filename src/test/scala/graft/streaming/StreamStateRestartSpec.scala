@@ -11,7 +11,7 @@ import graft.operators.{Dedup, EpochState, QuantileState}
   * FAMILY (the GStreamRestartSpec discipline, applied beyond the
   * incremental-agg family EpochStateSpec already covers): each
   * family's fold step runs through the PERSISTED exactly-once state
-  * loop ([[StreamingRelational.oneShotFoldExactlyOnce]]), the job is
+  * loop ([[StreamingRelational.oneShotFoldMany]] with a state dir), the job is
   * killed mid-stream — including inside the worst crash window, a new
   * state version fully written but not yet published — restarted on
   * the SAME state dir, and the final state must equal a single clean
@@ -49,27 +49,30 @@ class StreamStateRestartSpec extends AnyFunSuite with SparkTestSupport {
       .option("pathGlobFilter", "*.parquet").parquet(s"$src/*")
     def put(src: String, i: Int, df: DataFrame): Unit =
       df.coalesce(1).write.mode("overwrite").parquet(s"$src/f$i")
+    def fold(src: String, state: String): Unit =
+      StreamingRelational.oneShotFoldMany(spark, stream(src), Seq(init),
+        (st, batch, _) => Seq(step(st.head, batch)), stateDir = Some(state))
 
     // (a) continuous: all slices visible, one run
     val srcA = mkSrc()
     slices.zipWithIndex.foreach { case (df, i) => put(srcA, i, df) }
     val stateA = tmpDir(s"$tag-stateA")
-    StreamingRelational.oneShotFoldExactlyOnce(spark, stream(srcA), stateA, init, step)
+    fold(srcA, stateA)
 
     // (b) killed + resumed on the SAME state dir
     val srcB = mkSrc()
     val stateB = tmpDir(s"$tag-stateB")
     put(srcB, 0, slices(0))
-    StreamingRelational.oneShotFoldExactlyOnce(spark, stream(srcB), stateB, init, step)
+    fold(srcB, stateB)
     put(srcB, 1, slices(1))
-    StreamingRelational.oneShotFoldExactlyOnce(spark, stream(srcB), stateB, init, step)
+    fold(srcB, stateB)
     // the worst crash half: slice 3's stepped state is fully WRITTEN
     // as a new version, the pointer is not published — the restart
     // must re-deliver the batch and apply it exactly once
     val p = EpochState.readPointer(stateB).get
     EpochState.writeVersion(spark, stateB, p, p.epoch + 1, st => step(st, slices(2)))
     put(srcB, 2, slices(2))
-    StreamingRelational.oneShotFoldExactlyOnce(spark, stream(srcB), stateB, init, step)
+    fold(srcB, stateB)
 
     (EpochState.state(spark, stateA), EpochState.state(spark, stateB))
   }

@@ -290,7 +290,7 @@ class StreamingRelationalSpec extends AnyFunSuite with SparkTestSupport {
       spark, mem.toDF().toDF("id", "s"),
       Seq(Seq.empty[(Long, String)].toDF("id", "s"),
         Seq.empty[(Long, Int)].toDF("id", "n")),
-      (states, batch) => {
+      (states, batch, _) => {
         batches += 1
         Seq(states(0).unionByName(batch),
           states(1).unionByName(batch.select(col("id"), length(col("s")).as("n"))))
@@ -308,7 +308,7 @@ class StreamingRelationalSpec extends AnyFunSuite with SparkTestSupport {
       StreamingRelational.oneShotFoldMany(
         spark, mem2.toDF().toDF("id"),
         Seq(Seq.empty[Long].toDF("id"), Seq.empty[Long].toDF("id")),
-        (_, batch) => Seq(batch))
+        (_, batch, _) => Seq(batch))
     }
   }
 }
