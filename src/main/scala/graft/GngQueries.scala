@@ -163,9 +163,9 @@ object GngQueries {
          |FROM p ORDER BY node_idx""".stripMargin
     }
 
-  /** gng_edges oracle (dump-time): the adjacency/age matrices' edge
-    * list inlined as VALUES; DuckDB re-applies the (src, dst) total
-    * order. The empty-graph sentinel row mirrors the query side. */
+  /** gng_edges oracle (dump-time): the model's edge list inlined as
+    * VALUES; DuckDB re-applies the (src, dst) total order. The
+    * empty-graph sentinel row mirrors the query side. */
   private def edgesOracle: Option[String] =
     soleTrainedModel.map { m =>
       val rows = m.edgeList
@@ -309,18 +309,17 @@ object GngQueries {
       } finally graft.streaming.StreamingRelational.deleteRecursively(dir)
     },
 
-    // The model at its documented scale ceiling: SURVEY §7.4.8 names
-    // the O(N²) edge/age matrices as the real cap, so this measures the
-    // full per-batch update path (distributed assign+aggregate +
-    // driver graph surgery) with ~10³ prototypes at 64-d —
-    // sf0.1-embeddings-sized batches (2000 points). Growth phase:
+    // The model at scale: this measures the full per-batch update path
+    // (distributed assign+aggregate + driver graph surgery) with ~10³
+    // prototypes at 64-d — sf0.1-embeddings-sized batches (2000
+    // points). Growth phase:
     // driver-local micro-batches with growth every batch (10 nodes per
     // step) until the 1000-node cap; then 2 warm-up + 10 measured
     // distributed batches with the standard fade/grow cadences active,
     // i.e. the dynamics a long-running stream has AT the cap. The row
-    // also carries the N² matrix footprint (est_matrix_mb ≈ 16 MB at
-    // N=1000) — the "driver-memory surprise" check: the measurement
-    // completing in-heap with that footprint is the point.
+    // also carries the model's serialized size (model_kb, the
+    // GngModel.toBytes recovery point): the driver state is the
+    // prototypes plus the edge list, O(N·dim + E), never N².
     rowsOnly("gng_scale") { (s, d) =>
       import s.implicits._
       val dim = 64
@@ -373,10 +372,10 @@ object GngQueries {
         math.round(perBatch.min * 10) / 10.0,
         math.round(updPart.sum / meas * 10) / 10.0,
         math.round(batchPts / (meanMs / 1000.0)),
-        math.round(2.0 * n * n * 8 / 1e6 * 10) / 10.0))
+        graft.model.GngModel.toBytes(model, kk).length / 1024))
         .toDF("final_nodes", "dim", "grow_batches", "points_per_batch",
           "meas_batches", "mean_ms_per_batch", "min_ms_per_batch",
-          "mean_update_ms", "points_per_sec", "est_matrix_mb")
+          "mean_update_ms", "points_per_sec", "model_kb")
     },
 
     // Clustering quality vs the ground-truth labels the reference keeps

@@ -1,5 +1,7 @@
 package graft.model
 
+import scala.collection.immutable.SortedMap
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** Per-winner-node aggregated statistics for one micro-batch: the output
@@ -8,8 +10,8 @@ import scala.collection.mutable.ArrayBuffer
   * `(one-hot bmu2 votes, Σdist², Σx, n, ids)` (batchStreamModel.scala:66-78),
   * with the id set replaced by the count it is read through.
   *
-  * @param votes     per-node second-BMU vote counts (length = node count
-  *                  at assignment time)
+  * @param votes     second-BMU node index → vote count, for the nodes
+  *                  that drew a vote (node indices at assignment time)
   * @param errSum    Σ squared distance of the points this node won
   * @param vecSum    elementwise Σ of the winning points' feature vectors
   * @param count     number of points won
@@ -18,22 +20,11 @@ import scala.collection.mutable.ArrayBuffer
   *                  re-wins of its own bootstrap point ([[SeedWatch]])
   */
 final case class NodeStats(
-    votes: Array[Long],
+    votes: SortedMap[Int, Long],
     errSum: Double,
     vecSum: Array[Double],
     count: Long,
-    nAssigned: Long) {
-
-  def merge(o: NodeStats): NodeStats = {
-    val v = new Array[Long](votes.length)
-    var i = 0
-    while (i < v.length) { v(i) = votes(i) + o.votes(i); i += 1 }
-    val s = new Array[Double](vecSum.length)
-    i = 0
-    while (i < s.length) { s(i) = vecSum(i) + o.vecSum(i); i += 1 }
-    NodeStats(v, errSum + o.errSum, s, count + o.count, nAssigned + o.nAssigned)
-  }
-}
+    nAssigned: Long)
 
 /** The bootstrap points the assign step must not count twice: node
   * index → seed point id for the (≤ 2) live bootstrap nodes. Each seed
@@ -58,16 +49,16 @@ object SeedWatch {
   val empty: SeedWatch = SeedWatch(Array.empty, Array.empty)
 }
 
-/** The evolving G-Stream graph: nodes (prototypes), 0/1 adjacency matrix,
-  * parallel age matrix (NaN = no edge), per-node error and exponentially
-  * decayed weight — driver-held state, exactly the reference's
-  * `batchStreamModel` fields (batchStreamModel.scala:13-21).
+/** The evolving G-Stream graph: nodes (prototypes), aged edges, per-node
+  * error and exponentially decayed weight — driver-held state, the
+  * reference's `batchStreamModel` fields (batchStreamModel.scala:13-21)
+  * with its parallel 0/1 adjacency and age matrices held as one edge
+  * store.
   *
-  * The in-memory matrices are O(N²) with N ≤ `params.maxNodes` (300 by
-  * default; the registered `gng_scale` query runs at N = 1002);
-  * the driver update is O(N² + stats) per batch and never touches the
-  * distributed data (SURVEY §7.4.8: points never reach the driver, only
-  * per-node partials — see [[graft.operators.GngOps]] for their size).
+  * The graph is O(N + E) in memory and the driver update is
+  * O((N + E) log N + stats) per batch; it never touches the distributed
+  * data (SURVEY §7.4.8: points never reach the driver, only per-node
+  * partials — see [[graft.operators.GngOps]] for their size).
   * Every per-node field is a fixed-size value, so the persisted form
   * ([[GngModel.toBytes]]) is bounded by model size, never by stream
   * length.
@@ -81,10 +72,11 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
   val nodes: ArrayBuffer[Prototype] = ArrayBuffer.empty
   val outdatedNodes: ArrayBuffer[Prototype] = ArrayBuffer.empty
   val isolatedNodes: ArrayBuffer[Prototype] = ArrayBuffer.empty
-  /** 0/1 adjacency; square, symmetric, zero diagonal. */
-  val edges: ArrayBuffer[ArrayBuffer[Int]] = ArrayBuffer.empty
-  /** Edge ages; NaN = no edge / diagonal. */
-  val ages: ArrayBuffer[ArrayBuffer[Double]] = ArrayBuffer.empty
+  /** The edge store: row i maps each neighbour of node i to that edge's
+    * age, in ascending neighbour index (every first-max tie-break walks
+    * it in that order). Symmetric, no self-loops; only [[link]] and
+    * [[unlink]] add or drop an edge. */
+  private val adj: ArrayBuffer[mutable.TreeMap[Int, Double]] = ArrayBuffer.empty
   val errors: ArrayBuffer[Double] = ArrayBuffer.empty
   val clusterWeights: ArrayBuffer[Double] = ArrayBuffer.empty
 
@@ -104,8 +96,8 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     nodes += Prototype(freshId(), p1.features.clone(), 1L)
     nodes += Prototype(freshId(), p2.features.clone(), 1L)
     seeds = Array(nodes(0).id -> p1.id, nodes(1).id -> p2.id)
-    edges += ArrayBuffer(0, 1) += ArrayBuffer(1, 0)
-    ages += ArrayBuffer(Double.NaN, 0.0) += ArrayBuffer(0.0, Double.NaN)
+    adj += mutable.TreeMap.empty += mutable.TreeMap.empty
+    link(0, 1, 0.0)
     errors += 0.0 += 0.0
     clusterWeights += 1.0 += 1.0
     this
@@ -123,8 +115,15 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     SeedWatch(live.map(_._1), live.map(_._2))
   }
 
-  private def neighborsOf(i: Int): Seq[Int] =
-    edges(i).zipWithIndex.filter(_._1 == 1).map(_._2).toSeq
+  /** Node i's neighbours → edge age, in ascending neighbour index. */
+  def neighbours(i: Int): collection.SortedMap[Int, Double] = adj(i)
+
+  /** Add edge i–j, or reset its age. */
+  private[model] def link(i: Int, j: Int, age: Double): Unit = {
+    adj(i)(j) = age; adj(j)(i) = age
+  }
+
+  private def unlink(i: Int, j: Int): Unit = { adj(i) -= j; adj(j) -= i }
 
   /** Neighborhood kernel — constant exp(-1/T) (reference `kNeighbor`,
     * batchStreamModel.scala:336-338; see SURVEY §7.4.5). */
@@ -172,11 +171,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     val statsMap: Map[Int, NodeStats] = stats.toMap
     for ((s1, st) <- stats.sortBy(_._1) if s1 < nodes.length) {
       // T4: age the winner's incident edges (symmetric, :151-160)
-      for (j <- neighborsOf(s1)) {
-        val aged = ages(s1)(j) * params.lambdaAge + 1.0
-        ages(s1)(j) = aged
-        ages(j)(s1) = aged
-      }
+      for ((j, age) <- adj(s1).toList) link(s1, j, age * params.lambdaAge + 1.0)
       // A3: weighted centroid update (:165-192); neighbor term only when
       // voisinage > 0 (off by default — kNeighbor is then unused)
       val w = clusterWeights(s1)
@@ -186,7 +181,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       while (d < dim) { num(d) = w * old(d) + st.vecSum(d); d += 1 }
       var den = w + st.count.toDouble
       if (params.voisinage > 0) {
-        for (f <- neighborsOf(s1); fst <- statsMap.get(f)) {
+        for (f <- adj(s1).keys; fst <- statsMap.get(f)) {
           d = 0
           while (d < dim) { num(d) += kNeighbor * fst.vecSum(d); d += 1 }
           den += kNeighbor * fst.count.toDouble
@@ -203,52 +198,33 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       errors(s1) += st.errSum // A4 (:205)
 
       // T5: link s1 to the vote-winning second BMU, age 0 (:195-202);
-      // first-max-wins tie-break (Scala maxBy semantics in the reference)
+      // first-max-wins tie-break over the reference's dense vote vector
+      // (Scala maxBy semantics): the lowest index wins a tie, and node 0
+      // wins when no in-range node drew a vote
       if (st.count > 0) {
         var bmu2 = 0
-        var best = Long.MinValue
-        var j = 0
-        val nVotes = math.min(st.votes.length, nodes.length)
-        while (j < nVotes) {
-          if (st.votes(j) > best) { best = st.votes(j); bmu2 = j }
-          j += 1
-        }
-        if (bmu2 != s1) {
-          edges(s1)(bmu2) = 1; edges(bmu2)(s1) = 1
-          ages(s1)(bmu2) = 0.0; ages(bmu2)(s1) = 0.0
-        }
+        var best = 0L
+        for ((j, c) <- st.votes.rangeUntil(nodes.length)) if (c > best) { best = c; bmu2 = j }
+        if (bmu2 != s1) link(s1, bmu2, 0.0)
       }
     }
   }
 
   /** T6: expire edges older than maxAge (batchStreamModel.scala:211-225). */
-  private def removeOldEdges(): Unit = {
-    var i = 0
-    while (i < nodes.length) {
-      var j = 0
-      while (j < nodes.length) {
-        if (!ages(i)(j).isNaN && ages(i)(j) > params.maxAge) {
-          edges(i)(j) = 0; edges(j)(i) = 0
-          ages(i)(j) = Double.NaN; ages(j)(i) = Double.NaN
-        }
-        j += 1
-      }
-      i += 1
-    }
-  }
+  private def removeOldEdges(): Unit =
+    for ((i, j, age) <- edgeList if age > params.maxAge) unlink(i, j)
 
   /** T7: drop nodes with no incident edges; archive to isolatedNodes;
     * shrink all parallel structures (batchStreamModel.scala:228-251). */
   private def removeIsolatedNodes(): Unit = {
     var i = nodes.length - 1
     while (i >= 0) {
-      if (edges(i).forall(_ == 0)) {
+      if (adj(i).isEmpty) {
         isolatedNodes += nodes(i)
         removeNodeAt(i)
       }
       i -= 1
     }
-    require(edges.forall(_.length == nodes.length), "edge matrix not square")
   }
 
   /** A5: effectively a no-op in the reference — its guard
@@ -283,20 +259,19 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     var q = 0
     var i = 1
     while (i < errors.length) { if (errors(i) > errors(q)) q = i; i += 1 }
-    val nbrs = neighborsOf(q)
-    if (nbrs.isEmpty) return
+    if (adj(q).isEmpty) return
     // f = argmax error among q's neighbors (first max)
-    var f = nbrs.head
-    for (j <- nbrs) if (errors(j) > errors(f)) f = j
+    var f = adj(q).firstKey
+    for (j <- adj(q).keys) if (errors(j) > errors(f)) f = j
     val mid = new Array[Double](dim)
     var d = 0
     while (d < dim) { mid(d) = (nodes(q).centroid(d) + nodes(f).centroid(d)) / 2.0; d += 1 }
     val r = nodes.length
     appendNode(Prototype(freshId(), mid, 0L), weight = 0.0)
     // rewire: q–r, r–f created (age 0); q–f dropped
-    edges(q)(r) = 1; edges(r)(q) = 1; ages(q)(r) = 0.0; ages(r)(q) = 0.0
-    edges(f)(r) = 1; edges(r)(f) = 1; ages(f)(r) = 0.0; ages(r)(f) = 0.0
-    edges(q)(f) = 0; edges(f)(q) = 0; ages(q)(f) = Double.NaN; ages(f)(q) = Double.NaN
+    link(q, r, 0.0)
+    link(f, r, 0.0)
+    unlink(q, f)
     errors(q) *= params.alphaErr
     errors(f) *= params.alphaErr
     errors(r) = errors(q) + errors(f)
@@ -306,22 +281,20 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     * batchStreamModel.scala:347-365). */
   private def appendNode(p: Prototype, weight: Double): Unit = {
     nodes += p
-    for (row <- edges) row += 0
-    edges += ArrayBuffer.fill(nodes.length)(0)
-    for (row <- ages) row += Double.NaN
-    ages += ArrayBuffer.fill(nodes.length)(Double.NaN)
+    adj += mutable.TreeMap.empty
     errors += 0.0
     clusterWeights += weight
   }
 
-  /** Delete row/col i from all structures (reference `removeLineCol`,
+  /** Delete node i from all structures, shifting the nodes above it
+    * down one index (reference `removeLineCol`,
     * batchStreamModel.scala:369-381). */
   private def removeNodeAt(i: Int): Unit = {
+    for (j <- adj(i).keys.toList) unlink(i, j)
     nodes.remove(i)
-    edges.remove(i)
-    for (row <- edges) row.remove(i)
-    ages.remove(i)
-    for (row <- ages) row.remove(i)
+    adj.remove(i)
+    for (k <- adj.indices if adj(k).nonEmpty && adj(k).lastKey > i)
+      adj(k) = adj(k).map { case (j, age) => (if (j > i) j - 1 else j) -> age }
     errors.remove(i)
     clusterWeights.remove(i)
   }
@@ -333,17 +306,16 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
   // ArrayBuffer.toString, so the golden dirs (conf/test/results/DS1-200-3/
   // Edges-92/part-00000) read `ArrayBuffer(0, 1, ...)` — byte-matching
   // them keeps new snapshot dirs drop-in diffable against old ones
-  def edgeLines: Seq[String] = edges.map(_.mkString("ArrayBuffer(", ", ", ")")).toSeq
+  def edgeLines: Seq[String] = adj.map { row =>
+    nodes.indices.map(j => if (row.contains(j)) 1 else 0).mkString("ArrayBuffer(", ", ", ")")
+  }.toSeq
   def weightLines: Seq[String] = clusterWeights.map(_.toString).toSeq
 
-  /** Idiomatic snapshot: symmetric edge list (srcIdx, dstIdx, age) —
-    * avoids the O(N²) text rows at scale (SURVEY §1.4). */
+  /** Idiomatic snapshot: each edge once as (srcIdx, dstIdx, age) with
+    * srcIdx < dstIdx, in ascending (srcIdx, dstIdx) order — avoids the
+    * O(N²) text rows at scale (SURVEY §1.4). */
   def edgeList: Seq[(Int, Int, Double)] =
-    (for {
-      i <- nodes.indices
-      j <- (i + 1) until nodes.length
-      if edges(i)(j) == 1
-    } yield (i, j, ages(i)(j))).toSeq
+    for (i <- adj.indices; (j, age) <- adj(i).rangeFrom(i + 1)) yield (i, j, age)
 }
 
 object GngModel {
@@ -410,9 +382,8 @@ object GngModel {
     * `params` is GngParams' fields in declaration order (f64 or i32).
     * Size: 144 bytes of header (with both bootstrap seeds), 24 more with
     * a stamp, 8·(dim+3)+4 per live node, 16 per edge and 8·(dim+1)+4 per
-    * archived node — the model's size, not the stream's. Absent matrix
-    * cells are rebuilt as "no edge" (0, age NaN), so the round trip is
-    * bit-identical. */
+    * archived node — the model's size, not the stream's. The round trip
+    * is bit-identical. */
   def toBytes(model: GngModel, kk: Int, stamp: Option[Stamp] = None): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
@@ -500,17 +471,13 @@ object GngModel {
           group += Prototype(in.readInt(), Array.fill(dim)(in.readDouble()), in.readLong())
       }
       val n = m.nodes.length
-      for (i <- 0 until n) {
-        m.edges += ArrayBuffer.fill(n)(0)
-        m.ages += ArrayBuffer.fill(n)(Double.NaN)
-      }
+      for (_ <- 0 until n) m.adj += mutable.TreeMap.empty
       for (_ <- 0 until count("edge", 16)) {
         val i = in.readInt()
         val j = in.readInt()
         val age = in.readDouble()
         if (i < 0 || i >= j || j >= n) fail(s"edge ($i, $j) outside the upper triangle of $n nodes")
-        m.edges(i)(j) = 1; m.edges(j)(i) = 1
-        m.ages(i)(j) = age; m.ages(j)(i) = age
+        m.link(i, j, age)
       }
       for (_ <- 0 until n) m.errors += in.readDouble()
       for (_ <- 0 until n) m.clusterWeights += in.readDouble()

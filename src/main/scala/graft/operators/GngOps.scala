@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import scala.collection.immutable.SortedMap
 import scala.collection.mutable
 import graft.model.{NodeStats, Point, SeedWatch}
 
@@ -21,8 +22,9 @@ import graft.model.{NodeStats, Point, SeedWatch}
   * only part of the pipeline that touches all the data, and it is
   * embarrassingly parallel — plus a collect of one stat buffer per
   * (partition, winning node). Each buffer holds a dim-long centroid sum
-  * and a dense N-long vote vector (`Cell.votes`), so the partials are
-  * O(partitions × winners × (N + dim)), not O(N × dim).
+  * and a sparse second-BMU vote count (`Cell.votes`) with at most one
+  * entry per point it won, so the partials are
+  * O(partitions × winners × dim + points), not O(N × dim).
   */
 object GngOps {
 
@@ -46,30 +48,32 @@ object GngOps {
   }
 
   /** One winner node's running sums within a partition. */
-  private final class Cell(nNodes: Int, dim: Int) extends Serializable {
-    val votes = new Array[Long](nNodes)
+  private final class Cell(dim: Int) extends Serializable {
+    /** Second-BMU node index → vote count. */
+    val votes: mutable.TreeMap[Int, Long] = mutable.TreeMap.empty
     var errSum = 0.0
     val vecSum = new Array[Double](dim)
     var count = 0L
     var seedHits = 0L
 
     def merge(o: Cell): Unit = {
-      var i = 0
-      while (i < votes.length) { votes(i) += o.votes(i); i += 1 }
+      for ((j, c) <- o.votes) vote(j, c)
       errSum += o.errSum
-      i = 0
+      var i = 0
       while (i < vecSum.length) { vecSum(i) += o.vecSum(i); i += 1 }
       count += o.count
       seedHits += o.seedHits
     }
+
+    def vote(j: Int, c: Long): Unit = votes(j) = votes.getOrElse(j, 0L) + c
   }
 
   /** Mutable per-partition accumulator keyed by winner node. */
-  private final class Acc(nNodes: Int, dim: Int, seeds: SeedWatch) extends Serializable {
+  private final class Acc(dim: Int, seeds: SeedWatch) extends Serializable {
     val map: mutable.HashMap[Int, Cell] = mutable.HashMap.empty
     def add(bmu1: Int, bmu2: Int, dsq: Double, features: Array[Double], id: Long): Unit = {
-      val e = map.getOrElseUpdate(bmu1, new Cell(nNodes, dim))
-      e.votes(bmu2) += 1
+      val e = map.getOrElseUpdate(bmu1, new Cell(dim))
+      e.vote(bmu2, 1L)
       e.errSum += dsq
       val vs = e.vecSum
       var k = 0
@@ -88,7 +92,7 @@ object GngOps {
     }
     def result: Array[(Int, NodeStats)] =
       map.iterator.map { case (k, e) =>
-        k -> NodeStats(e.votes, e.errSum, e.vecSum, e.count, e.count - e.seedHits)
+        k -> NodeStats(SortedMap.from(e.votes), e.errSum, e.vecSum, e.count, e.count - e.seedHits)
       }.toArray.sortBy(_._1)
   }
 
@@ -101,7 +105,6 @@ object GngOps {
       seeds: SeedWatch = SeedWatch.empty): Array[(Int, NodeStats)] = {
     if (centroids.isEmpty) return Array.empty
     val dim = centroids(0).length
-    val n = centroids.length
     val sc = points.sparkSession.sparkContext
     val bc = sc.broadcast(centroids)
     try {
@@ -112,7 +115,7 @@ object GngOps {
       // only a handful of partitions (local mode / small batches)
       val depth = if (rdd.getNumPartitions > 16) 2 else 1
       rdd
-        .treeAggregate(new Acc(n, dim, seeds))(
+        .treeAggregate(new Acc(dim, seeds))(
           seqOp = (acc, p) => {
             val (b1, b2, d1) = twoNearest(p.features, bc.value)
             acc.add(b1, b2, d1, p.features, p.id)
@@ -129,7 +132,7 @@ object GngOps {
   def assignAggregateLocal(points: Iterable[Point], centroids: Array[Array[Double]],
       seeds: SeedWatch = SeedWatch.empty): Array[(Int, NodeStats)] = {
     if (centroids.isEmpty) return Array.empty
-    val acc = new Acc(centroids.length, centroids(0).length, seeds)
+    val acc = new Acc(centroids(0).length, seeds)
     for (p <- points) {
       val (b1, b2, d1) = twoNearest(p.features, centroids)
       acc.add(b1, b2, d1, p.features, p.id)

@@ -1,5 +1,6 @@
 package graft.model
 
+import scala.collection.immutable.SortedMap
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.GngOps
 
@@ -15,8 +16,8 @@ class GngModelSpec extends AnyFunSuite {
   test("init2Nodes: 2-node line graph, age 0, weights 1") {
     val m = freshModel()
     assert(m.nodeCount === 2)
-    assert(m.edges(0)(1) === 1 && m.edges(1)(0) === 1)
-    assert(m.ages(0)(1) === 0.0 && m.ages(0)(0).isNaN)
+    assert(m.neighbours(0).contains(1) && m.neighbours(1).contains(0))
+    assert(m.neighbours(0)(1) === 0.0 && !m.neighbours(0).contains(0))
     assert(m.clusterWeights.toSeq === Seq(1.0, 1.0))
     assert(m.errors.toSeq === Seq(0.0, 0.0))
     assert(m.nodes.map(_.id).toSeq === Seq(1, 2))
@@ -39,7 +40,24 @@ class GngModelSpec extends AnyFunSuite {
     assert(m.nodes(0).nAssigned === 3L)
     assert(m.nodes(1).nAssigned === 1L)
     // edge 0-1 re-linked at age 0 by the bmu2 vote (aging ran first)
-    assert(m.ages(0)(1) === 0.0)
+    assert(m.neighbours(0)(1) === 0.0)
+  }
+
+  test("voisinage = 1: adjacent winners pull each other's stats in at exp(-1/T)") {
+    val m = freshModel(GngParams(voisinage = 1))
+    // (2,0) wins node 0 and (8,0) wins node 1; the two are adjacent
+    val stats = GngOps.assignAggregateLocal(Seq(p(2, 0, 10), p(8, 0, 11)), m.centroids)
+    assert(stats.map(_._1).toSeq === Seq(0, 1))
+    m.update(stats, kk = 1)
+    val k = math.exp(-1.0 / 0.3)
+    // node 0: (0.9·[0,0] + [2,0] + k·[8,0]) / (0.9 + 1 + k·1)
+    assert(math.abs(m.nodes(0).centroid(0) - (2.0 + 8.0 * k) / (1.9 + k)) < 1e-12)
+    // node 1: (0.9·[10,0] + [8,0] + k·[2,0]) / (0.9 + 1 + k·1) — its
+    // neighbour term reads node 0's batch stats, not node 0's new centroid
+    assert(math.abs(m.nodes(1).centroid(0) - (17.0 + 2.0 * k) / (1.9 + k)) < 1e-12)
+    assert(m.nodes.forall(_.centroid(1) == 0.0))
+    // the neighbour term moves no weight
+    assert(m.clusterWeights.toSeq === Seq(1.9, 1.9))
   }
 
   test("edge aging is λ·age + 1, symmetric, and expiry drops old edges") {
@@ -47,13 +65,13 @@ class GngModelSpec extends AnyFunSuite {
     // age edge 0-1 without re-linking it: point wins node 1, bmu2 stays
     // node 0 (only other node) → link reset... so instead manipulate via
     // repeated wins by node 0 with votes toward node 1, then check reset.
-    m.ages(0)(1) = 3.0; m.ages(1)(0) = 3.0
+    m.link(0, 1, 3.0)
     val stats = GngOps.assignAggregateLocal(Seq(p(1, 0, 20)), m.centroids)
     m.update(stats, 1)
     // aged to 3*2+1=7 > maxAge → expired, then bmu2 link re-created at 0
     // (updateRule runs aging before the vote-link, removeOldEdges after)
-    assert(m.edges(0)(1) === 1)
-    assert(m.ages(0)(1) === 0.0)
+    assert(m.neighbours(0).contains(1))
+    assert(m.neighbours(0)(1) === 0.0)
   }
 
   test("removeOldEdges + removeIsolatedNodes archive isolated nodes") {
@@ -62,7 +80,7 @@ class GngModelSpec extends AnyFunSuite {
     // node 0 with bmu2=1 recreates 0-1, so push age past maxAge without a
     // second BMU vote: impossible with 2 nodes — so test the primitive
     // directly on a 3-node graph built through growth instead.
-    m.ages(0)(1) = 10.0; m.ages(1)(0) = 10.0
+    m.link(0, 1, 10.0)
     // empty stats: no aging, no vote-link; removeOldEdges sees age 10 > 0.5
     m.update(Array.empty, 1)
     assert(m.nodeCount === 0) // both nodes isolated → archived
@@ -77,7 +95,8 @@ class GngModelSpec extends AnyFunSuite {
     // midpoint of (0,0)-(10,0)
     assert(m.nodes(2).centroid.toSeq === Seq(5.0, 0.0))
     // q-f edge dropped, q-r and r-f created
-    assert(m.edges(0)(1) === 0 && m.edges(0)(2) === 1 && m.edges(1)(2) === 1)
+    assert(!m.neighbours(0).contains(1) && m.neighbours(0).contains(2) &&
+      m.neighbours(1).contains(2))
     // errors scaled by alphaErr then summed for r, then errorDecay
     assert(math.abs(m.errors(0) - 8.0 * 0.5 * 0.99) < 1e-12)
     assert(math.abs(m.errors(2) - (4.0 + 2.0) * 0.99) < 1e-12)
@@ -110,7 +129,7 @@ class GngModelSpec extends AnyFunSuite {
     // than the graph: both must be ignored/clamped, not crash — this is
     // the restart/late-stats hazard (stats computed against an older,
     // larger model)
-    val wideVotes = Array(0L, 3L, 0L, 0L, 7L)
+    val wideVotes = SortedMap(1 -> 3L, 4 -> 7L)
     val stale = Array(
       5 -> graft.model.NodeStats(wideVotes, 1.0, Array(1.0, 1.0), 1L, 1L),
       0 -> graft.model.NodeStats(wideVotes, 2.0, Array(2.0, 0.0), 1L, 1L))
@@ -119,6 +138,15 @@ class GngModelSpec extends AnyFunSuite {
     // node 0: its seed + the one in-range point; the out-of-range
     // stats change no count anywhere
     assert(m.nodes.map(_.nAssigned).toSeq === Seq(2L, 1L))
+
+    // a winner whose only vote is out of range links to node 0, as the
+    // first max of an all-zero dense vote vector did
+    val g = freshModel(GngParams(growEvery = 1, nbNodesToAdd = 1, maxNodes = 2))
+    g.update(Array.empty, 1) // grows node 2 between 0 and 1, drops 0-1
+    assert(g.nodeCount === 3 && !g.neighbours(1).contains(0))
+    g.update(Array(1 -> graft.model.NodeStats(SortedMap(5 -> 7L), 1.0, Array(9.0, 0.0), 1L, 1L)), 2)
+    assert(g.nodeCount === 3)
+    assert(g.neighbours(1).get(0) === Some(0.0) && g.neighbours(0).get(1) === Some(0.0))
   }
 
   test("save/load round-trips the full model state (SURVEY §7.4.7)") {

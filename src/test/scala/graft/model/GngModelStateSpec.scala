@@ -64,6 +64,9 @@ class GngModelStateSpec extends AnyFunSuite {
   private def nodeKey(ps: Iterable[Prototype]) =
     ps.map(p => (p.id, bits(p.centroid), p.nAssigned)).toSeq
 
+  private def edgeKey(m: GngModel) =
+    m.edgeList.map { case (i, j, age) => (i, j, java.lang.Double.doubleToLongBits(age)) }
+
   /** The first field on which two models differ, NaN-exact. */
   private def firstDifference(a: GngModel, b: GngModel): Option[String] = Seq(
     "params" -> (a.params == b.params),
@@ -71,8 +74,7 @@ class GngModelStateSpec extends AnyFunSuite {
     "nodes" -> (nodeKey(a.nodes) == nodeKey(b.nodes)),
     "outdated nodes" -> (nodeKey(a.outdatedNodes) == nodeKey(b.outdatedNodes)),
     "isolated nodes" -> (nodeKey(a.isolatedNodes) == nodeKey(b.isolatedNodes)),
-    "edges" -> (a.edges == b.edges),
-    "ages" -> (a.ages.map(bits) == b.ages.map(bits)),
+    "edges" -> (edgeKey(a) == edgeKey(b)),
     "errors" -> (bits(a.errors) == bits(b.errors)),
     "weights" -> (bits(a.clusterWeights) == bits(b.clusterWeights)))
     .collectFirst { case (what, false) => what }

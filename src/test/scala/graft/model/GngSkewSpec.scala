@@ -45,12 +45,10 @@ class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
     // ≥ 0: a freshly inserted midpoint node can sit at weight 0 until
     // its first assignment — negative or non-finite is the corruption
     m.clusterWeights.foreach(w => assert(w >= 0.0 && !w.isInfinite && !w.isNaN))
-    for (i <- m.nodes.indices; j <- m.nodes.indices) {
-      assert(m.edges(i)(j) === m.edges(j)(i), s"adjacency symmetry at ($i,$j)")
-      // NaN is the no-edge age sentinel — compare NaN-safe
-      assert(java.lang.Double.compare(m.ages(i)(j), m.ages(j)(i)) === 0,
-        s"age symmetry at ($i,$j)")
-      if (i == j) assert(m.edges(i)(j) === 0)
+    for (i <- m.nodes.indices; (j, age) <- m.neighbours(i)) {
+      assert(m.neighbours(j).get(i).map(java.lang.Double.compare(_, age)) === Some(0),
+        s"adjacency and age symmetry at ($i,$j)")
+      assert(i != j)
     }
 
     // coverage: fading must NOT have starved the rare clusters — every
@@ -84,7 +82,7 @@ class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
     assert(dist.map(_._1).toSeq === local.map(_._1).toSeq)
     dist.zip(local).foreach { case ((k1, s1), (k2, s2)) =>
       assert(k1 === k2)
-      assert(s1.votes.toSeq === s2.votes.toSeq)
+      assert(s1.votes === s2.votes)
       assert(s1.count === s2.count)
       assert(s1.nAssigned === s2.nAssigned)
       assert(math.abs(s1.errSum - s2.errSum) < 1e-6)

@@ -27,7 +27,7 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
 
   private def statsKey(s: Array[(Int, graft.model.NodeStats)]) =
     s.map { case (k, st) =>
-      (k, st.votes.toSeq, math.round(st.errSum * 1e9),
+      (k, st.votes, math.round(st.errSum * 1e9),
         st.vecSum.map(v => math.round(v * 1e9)).toSeq, st.count, st.nAssigned)
     }.toSeq
 
@@ -42,7 +42,7 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
       assert(a.map(_._1).toSeq === b.map(_._1).toSeq)
       a.zip(b).foreach { case ((k1, s1), (k2, s2)) =>
         assert(k1 === k2)
-        assert(s1.votes.toSeq === s2.votes.toSeq)
+        assert(s1.votes === s2.votes)
         assert(s1.count === s2.count)
         assert(s1.nAssigned === s2.nAssigned)
         assert(math.abs(s1.errSum - s2.errSum) < 1e-9)
@@ -67,6 +67,27 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
     val byNode = local.toMap
     assert(byNode(w1).nAssigned === byNode(w1).count - 1)
     assert(local.map(_._2.nAssigned).sum === pts.length - 1L)
+  }
+
+  test("a winner's partial holds one vote entry per second BMU drawn, not one per node") {
+    import spark.implicits._
+    // 1000 centroids on a line, 10 points (5 spread out, 5 around node
+    // 500): each winner's votes can name at most the second BMUs its
+    // points drew
+    val many = Array.tabulate(1000)(i => Array(i.toDouble, 0.0))
+    val pts = (1 to 10).map { i =>
+      Point(Array(if (i <= 5) i * 97.3 else 500 + (i - 8) * 0.3, 0.4), 0, i.toLong)
+    }
+    val local = GngOps.assignAggregateLocal(pts, many)
+    val dist = GngOps.assignAggregate(spark.createDataset(pts).repartition(3), many)
+    for (stats <- Seq(local, dist)) {
+      assert(stats.map(_._2.count).sum === 10L)
+      stats.foreach { case (k, st) =>
+        assert(st.votes.size <= 10, s"winner $k carries ${st.votes.size} vote entries")
+        assert(st.votes.values.sum === st.count)
+      }
+    }
+    assert(statsKey(dist) === statsKey(local))
   }
 
   test("assignAggregate on empty centroids or empty batch") {
