@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.model.GngParams
-import graft.queries.{QueryDef, Tables}
+import graft.queries.{PerDir, QueryDef, Tables}
 import graft.streaming.GStream
 
 /** G-Stream clustering exposed through the driver contract: deterministic
@@ -22,12 +22,12 @@ object GngQueries {
     * captures the cadence snapshots for the live-IVF bridge on the way
     * to the final model — the hook only reads the model, so the end
     * state is the one a hook-less `fitChunked` reaches. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.model.GngModel, Seq[(Int, graft.operators.LiveIvf.Snapshot)])]()
+  private val cache =
+    new PerDir[(graft.model.GngModel, Seq[(Int, graft.operators.LiveIvf.Snapshot)])]
 
   private def trainOnce(s: org.apache.spark.sql.SparkSession, d: String)
       : (graft.model.GngModel, Seq[(Int, graft.operators.LiveIvf.Snapshot)]) =
-    cache.computeIfAbsent(d, _ => {
+    cache(d) {
       val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
       val marks = snapshotMarks.toSet
       val snaps = Seq.newBuilder[(Int, graft.operators.LiveIvf.Snapshot)]
@@ -35,7 +35,7 @@ object GngQueries {
         if (marks(kk))
           snaps += kk -> m.nodes.toArray.map(p => (p.id, p.centroid.clone())))
       (model, snaps.result())
-    })
+    }
 
   /** Shared trained model per data dir (also the IVF coarse quantizer
     * for v06). */
@@ -50,10 +50,7 @@ object GngQueries {
     * (mixed dirs in one JVM — never the Verify flow) there is no
     * unambiguous model, and the queries stay rows-only. Double
     * constants round-trip exactly through toString (v03 precedent). */
-  private[graft] def soleTrainedModel: Option[graft.model.GngModel] = {
-    val models = new java.util.ArrayList(cache.values())
-    if (models.size == 1) Some(models.get(0)._1) else None
-  }
+  private[graft] def soleTrainedModel: Option[graft.model.GngModel] = cache.sole.map(_._1)
 
   private[graft] def soleTrainedCentroids: Option[Array[Array[Double]]] =
     soleTrainedModel.map(_.centroids)
@@ -73,10 +70,8 @@ object GngQueries {
       d: String): Seq[(Int, graft.operators.LiveIvf.Snapshot)] =
     trainOnce(s, d)._2
 
-  private def soleSnapshots: Option[Seq[(Int, graft.operators.LiveIvf.Snapshot)]] = {
-    val ss = new java.util.ArrayList(cache.values())
-    if (ss.size == 1) Some(ss.get(0)._2) else None
-  }
+  private def soleSnapshots: Option[Seq[(Int, graft.operators.LiveIvf.Snapshot)]] =
+    cache.sole.map(_._2)
 
   /** KEYED multi-model training per data dir: one independent model
     * per tenant key (label % 3 stands in for the tenant/source column)
@@ -84,20 +79,17 @@ object GngQueries {
     * in parallel across executors, none on the driver (the sharding
     * SURVEY §2.9 T2 names as the single-global-state limitation). */
   private val keyedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Long, graft.model.GngModel]]()
+    new PerDir[Map[Long, graft.model.GngModel]]
 
   def trainedKeyed(s: org.apache.spark.sql.SparkSession, d: String): Map[Long, graft.model.GngModel] =
-    keyedCache.computeIfAbsent(d, _ => {
+    keyedCache(d) {
       val pts = graft.streaming.GStreamKeyed.toKeyedPoints(
         Tables.embeddings(s, d).withColumn("key", col("label") % 3),
         "key", "embedding", "label", "vec_id")
       graft.streaming.GStreamKeyed.fitKeyed(pts, GngParams(), defaultChunks)
-    })
+    }
 
-  private def soleTrainedKeyed: Option[Map[Long, graft.model.GngModel]] = {
-    val ms = new java.util.ArrayList(keyedCache.values())
-    if (ms.size == 1) Some(ms.get(0)) else None
-  }
+  private def soleTrainedKeyed: Option[Map[Long, graft.model.GngModel]] = keyedCache.sole
 
   /** Squared Euclidean distance of SQL array column `arr` to one
     * centroid as an explicit left-associated term chain — the same
@@ -187,6 +179,20 @@ object GngQueries {
          |  count(*) AS n_clusters FROM agg""".stripMargin
     }
 
+  /** The one assign step of the evaluation queries: every embedding
+    * under the trained model as (vec_id, label, cluster, dsq) — its BMU
+    * by [[graft.operators.GngOps.twoNearest]] and the squared distance
+    * to it, the quantities the inlined [[nearestCtes]] re-derive. */
+  private def assigned(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(trained(s, d).centroids)
+    GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id").map { p =>
+      val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value)
+      (p.id, p.label, b1, d1)
+    }.toDF("vec_id", "label", "cluster", "dsq")
+  }
+
   /** A `def`, not a `val`: the gng_assignments/gng_purity oracles embed
     * the TRAINED centroids, which only exist after the queries run —
     * see [[soleTrainedCentroids]]. */
@@ -224,18 +230,11 @@ object GngQueries {
     // Oracled (dump-time): DuckDB re-derives the arg-min over the
     // INLINED trained centroids with the same left-assoc distance sum
     // and low-index tie-break; SQL round() on both sides.
-    QueryDef("gng_assignments", (s, d) => {
-      val m = trained(s, d)
-      import s.implicits._
-      val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
-      pts.map { p =>
-        val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value)
-        (p.id, b1, math.sqrt(d1))
-      }.toDF("vec_id", "cluster", "dist")
-        .select(col("vec_id"), col("cluster"), round(col("dist"), 4).as("dist"))
-        .orderBy(col("vec_id"))
-    }, assignmentsOracle),
+    QueryDef("gng_assignments", (s, d) =>
+      assigned(s, d)
+        .select(col("vec_id"), col("cluster"), round(sqrt(col("dsq")), 4).as("dist"))
+        .orderBy(col("vec_id")),
+      assignmentsOracle),
     // The BASELINE.md metric, measured directly: reference-shaped
     // micro-batches (200 2-D points per batch, 92 batches — the DS1-200
     // run) through the full assign+aggregate+update path. BASELINE
@@ -383,14 +382,7 @@ object GngQueries {
     // majority-label purity — the distributable evaluation the papers
     // report NMI/Rand for. Oracled (dump-time, inlined centroids).
     QueryDef("gng_purity", (s, d) => {
-      val m = trained(s, d)
-      import s.implicits._
-      val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
-      val assigned = pts.map { p =>
-        (graft.operators.GngOps.twoNearest(p.features, bc.value)._1, p.label)
-      }.toDF("cluster", "label")
-      val perCluster = assigned.groupBy(col("cluster"), col("label"))
+      val perCluster = assigned(s, d).groupBy(col("cluster"), col("label"))
         .agg(count(lit(1)).as("n"))
         .groupBy(col("cluster"))
         .agg(max(col("n")).as("majority"), sum(col("n")).as("total"))
@@ -429,18 +421,12 @@ object GngQueries {
     // inlined distSql oracle replays). +1e-9 nudge before the 4-dp
     // round on both sides (partial-avg vs sequential-avg summation
     // order differs at ~1e-13).
-    QueryDef("gng_qerror", (s, d) => {
-      val m = trained(s, d)
-      import s.implicits._
-      val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
-      pts.map(p => graft.operators.GngOps.twoNearest(p.features, bc.value)._3)
-        .toDF("dsq")
-        .agg(
-          round(avg(col("dsq")) + 1e-9, 4).as("mean_sq_dist"),
-          round(sqrt(avg(col("dsq"))) + 1e-9, 4).as("rms_dist"),
-          count(lit(1)).as("n_points"))
-    }, qerrorOracle),
+    QueryDef("gng_qerror", (s, d) =>
+      assigned(s, d).agg(
+        round(avg(col("dsq")) + 1e-9, 4).as("mean_sq_dist"),
+        round(sqrt(avg(col("dsq"))) + 1e-9, 4).as("rms_dist"),
+        count(lit(1)).as("n_points")),
+      qerrorOracle),
 
     // The reference paper's PUBLISHED quality metrics (BASELINE.md:
     // NMI and Rand index), which gng_purity approximates: mutual
@@ -454,16 +440,9 @@ object GngQueries {
     // are bit-exact; only NMI's ln-sums need the 1e-9 nudge). Oracle:
     // dump-time inlined centroids re-deriving every stage in DuckDB.
     QueryDef("gng_nmi", (s, d) => {
-      val m = trained(s, d)
-      import s.implicits._
-      val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
-      val assigned = pts
-        .map(p => (graft.operators.GngOps.twoNearest(p.features, bc.value)._1, p.label))
-        .toDF("cluster", "label")
       // the contingency table: materialized once (dimension-sized);
       // marginals, MI, and entropies all re-read these blocks
-      val pc = assigned.groupBy(col("cluster"), col("label"))
+      val pc = assigned(s, d).groupBy(col("cluster"), col("label"))
         .agg(count(lit(1)).cast("double").as("n"))
         .localCheckpoint(true)
       val ca = pc.groupBy(col("cluster")).agg(sum(col("n")).as("a"))

@@ -1142,14 +1142,8 @@ object MultimodalQueries {
     // m15's VERBATIM — slicing invariance is the claim.
     sql("s33_stream_audio_neardup", m15OracleSql) { (s, d) =>
       import s.implicits._
-      val fx = Tables.documents(s, d)
-        .filter(expr("CAST(doc_id % 8 AS INT) = 2")).select(col("doc_id"))
-      val dir = StreamingQueries.orderedArrivalDir(s, "m15-slices", Seq(
-        fx.filter(col("doc_id") % 3 === 0),
-        fx.filter(col("doc_id") % 3 === 1),
-        fx.filter(col("doc_id") % 3 === 2)))
       val stream = s.readStream.schema("doc_id BIGINT")
-        .option("maxFilesPerTrigger", 1).parquet(dir)
+        .option("maxFilesPerTrigger", 1).parquet(m15SliceDir(s, d))
       val init = Seq.empty[(String, Long, Option[Long], Option[Long], Option[Long])]
         .toDF("kind", "id_a", "id_b", "fp", "hamming")
       val folded = graft.streaming.StreamingRelational.oneShotFold(s, stream, init,
@@ -1169,14 +1163,8 @@ object MultimodalQueries {
     // exactly once. Oracle: m09's VERBATIM — slicing invariance.
     sql("s34_stream_image_neardup", m09OracleSql) { (s, d) =>
       import s.implicits._
-      val fx = Tables.documents(s, d)
-        .filter(expr("CAST(doc_id % 4 AS INT) IN (0, 1)")).select(col("doc_id"))
-      val dir = StreamingQueries.orderedArrivalDir(s, "m09-slices", Seq(
-        fx.filter(col("doc_id") % 3 === 0),
-        fx.filter(col("doc_id") % 3 === 1),
-        fx.filter(col("doc_id") % 3 === 2)))
       val stream = s.readStream.schema("doc_id BIGINT")
-        .option("maxFilesPerTrigger", 1).parquet(dir)
+        .option("maxFilesPerTrigger", 1).parquet(m09SliceDir(s, d))
       val init = Seq.empty[(String, Long, Option[Long], Option[Long], Option[Long])]
         .toDF("kind", "id_a", "id_b", "fp", "hamming")
       val folded = graft.streaming.StreamingRelational.oneShotFold(s, stream, init,
@@ -1217,17 +1205,8 @@ object MultimodalQueries {
     // Oracle: m18's VERBATIM — slicing invariance is the claim.
     sql("s36_stream_video_neardup", m18OracleSql) { (s, d) =>
       import s.implicits._
-      // ARM-granular arrivals sliced by (doc_id + arm) % 3: every
-      // re-muxed twin's two arms land in DIFFERENT micro-batches, so
-      // each pair genuinely completes across batches (the s33 "out of
-      // id order, batches apart" discipline at video granularity)
-      val fx = m17ArmRows(Tables.documents(s, d))
-      val dir = StreamingQueries.orderedArrivalDir(s, "m17-slices", Seq(
-        fx.filter((col("doc_id") + col("arm")) % 3 === 0),
-        fx.filter((col("doc_id") + col("arm")) % 3 === 2),
-        fx.filter((col("doc_id") + col("arm")) % 3 === 1)))
       val stream = s.readStream.schema("doc_id BIGINT, arm INT")
-        .option("maxFilesPerTrigger", 1).parquet(dir)
+        .option("maxFilesPerTrigger", 1).parquet(m17SliceDir(s, d))
       val inits = Seq(
         Seq.empty[(Long, Long, Long)].toDF("vid", "doc_id", "fp"),
         Seq.empty[(Long, Long, Long, Long)]
@@ -1257,4 +1236,45 @@ object MultimodalQueries {
         .orderBy(col("vid_a"), col("vid_b"))
     }
   )
+
+  /** s33's arrival fixture: the m15 audio docs (doc_id % 8 == 2) in
+    * three micro-batches sliced by doc_id % 3, so a pair's members can
+    * land two batches apart and out of id order. */
+  private val m15SliceCache = new PerDir[String]
+
+  private def m15SliceDir(s: SparkSession, d: String): String =
+    m15SliceCache(d) {
+      val fx = Tables.documents(s, d)
+        .filter(expr("CAST(doc_id % 8 AS INT) = 2")).select(col("doc_id"))
+      StreamingQueries.orderedArrivalDir(s, "m15-slices",
+        StreamingQueries.thirds(fx, col("doc_id")))
+    }
+
+  /** s34's arrival fixture: the m09 image docs (doc_id % 4 in {0, 1})
+    * sliced by doc_id % 3. */
+  private val m09SliceCache = new PerDir[String]
+
+  private def m09SliceDir(s: SparkSession, d: String): String =
+    m09SliceCache(d) {
+      val fx = Tables.documents(s, d)
+        .filter(expr("CAST(doc_id % 4 AS INT) IN (0, 1)")).select(col("doc_id"))
+      StreamingQueries.orderedArrivalDir(s, "m09-slices",
+        StreamingQueries.thirds(fx, col("doc_id")))
+    }
+
+  /** s36's arrival fixture: ARM-granular arrivals sliced by
+    * (doc_id + arm) % 3 — every re-muxed twin's two arms land in
+    * DIFFERENT micro-batches, so each pair genuinely completes across
+    * batches (the s33 "out of id order, batches apart" discipline at
+    * video granularity). */
+  private val m17SliceCache = new PerDir[String]
+
+  private def m17SliceDir(s: SparkSession, d: String): String =
+    m17SliceCache(d) {
+      val fx = m17ArmRows(Tables.documents(s, d))
+      StreamingQueries.orderedArrivalDir(s, "m17-slices", Seq(
+        fx.filter((col("doc_id") + col("arm")) % 3 === 0),
+        fx.filter((col("doc_id") + col("arm")) % 3 === 2),
+        fx.filter((col("doc_id") + col("arm")) % 3 === 1)))
+    }
 }

@@ -1741,18 +1741,16 @@ object RelationalQueries {
   /** q55's stored view: old-orders ⋈ old-customers, persisted ONCE per
     * sf-dir — at query time the view contributes only this parquet,
     * never a re-join of its inputs. */
-  private val joinViewCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val joinViewCache = new PerDir[String]
 
   private[graft] def joinViewSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    joinViewCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "join-view")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    joinViewCache(d) {
+      val dir = PerDir.scratch("join-view")
       val (aOld, _) = joinViewOrdersSplit(s, d)
       val (bOld, _) = joinViewCustomerSplit(s, d)
       aOld.join(bOld, "c_custkey").write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
 
   /** q51/s14's initial state: each user's latest (event_type, value)
     * from the low-md5 half of the log — the keyed snapshot a CDC feed
@@ -1812,33 +1810,29 @@ object RelationalQueries {
   /** q44's stored sketch state: one HLL per event_type over the
     * historical (low-md5) half, persisted once per sf-dir — the
     * mergeable-distinct counterpart of incAggSnapshot. */
-  private val hllSnapshotCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val hllSnapshotCache = new PerDir[String]
 
   private[graft] def hllSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    hllSnapshotCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "hll-state")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    hllSnapshotCache(d) {
+      val dir = PerDir.scratch("hll-state")
       Tables.events(s, d)
         .filter(Tables.inLowMd5Half($"event_id"))
         .groupBy($"event_type")
         .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
 
   /** q50's evolving table, once per sf-dir: the low-md5 half of events
     * written under the ORIGINAL schema, the high half appended later
     * WITH the new `quality` column — two file generations in one
     * directory, exactly what a column-add leaves behind on a table
     * whose history is too big to rewrite. */
-  private val evolvedDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolvedDirCache = new PerDir[String]
 
   private[graft] def evolvedEventsDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    evolvedDirCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "evolving-table")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    evolvedDirCache(d) {
+      val dir = PerDir.scratch("evolving-table")
       val ev = Tables.events(s, d)
       ev.filter(Tables.inLowMd5Half($"event_id"))
         .select($"event_id", $"user_id", $"event_type", $"value")
@@ -1848,7 +1842,7 @@ object RelationalQueries {
           round($"value" * 0.01 + 1e-9, 4).as("quality"))
         .write.mode("append").parquet(dir.toString)
       dir.toString
-    })
+    }
 
   /** q58's fixture, once per sf-dir: the documents table rendered as
     * JSONL text with the md5-'0' bucket's lines TRUNCATED by 3 chars —
@@ -1857,13 +1851,11 @@ object RelationalQueries {
     * exactly. Field rendering is plain string concat (not to_json) so
     * the oracle's SQL twin is byte-identical by construction; only
     * quote-free fields ride the lines. */
-  private val corruptJsonlCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val corruptJsonlCache = new PerDir[String]
 
   private def corruptJsonlDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    corruptJsonlCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "corrupt-jsonl")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    corruptJsonlCache(d) {
+      val dir = PerDir.scratch("corrupt-jsonl")
       Tables.documents(s, d)
         .select($"doc_id", concat(lit("{\"doc_id\":"), $"doc_id",
           lit(",\"lang\":\""), $"lang",
@@ -1874,7 +1866,7 @@ object RelationalQueries {
           .otherwise($"line").as("value"))
         .write.mode("overwrite").text(dir.toString)
       dir.toString
-    })
+    }
 
   /** q59's fixture, once per sf-dir: documents as four parquet files
     * (one per doc_id % 4 bucket, deterministically named), with bucket
@@ -1882,14 +1874,12 @@ object RelationalQueries {
     * classic interrupted upload), plus a junk text file and a
     * zero-byte file wearing .parquet names. Exactly the delivery a
     * crawl drop-zone produces; the survivors are the % 4 != 0 rows. */
-  private val corruptParquetCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val corruptParquetCache = new PerDir[String]
 
   private def corruptParquetDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    corruptParquetCache.computeIfAbsent(d, _ => {
+    corruptParquetCache(d) {
       import java.nio.file.{Files, StandardOpenOption}
-      val dir = Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "corrupt-parquet")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+      val dir = PerDir.scratch("corrupt-parquet")
       for (b <- 0 to 3) {
         val tmp = Files.createTempDirectory(
           graft.streaming.StreamingRelational.scratchBase, s"corrupt-parquet-b$b")
@@ -1911,24 +1901,22 @@ object RelationalQueries {
       Files.writeString(dir.resolve("junk.parquet"), "this is not parquet at all\n")
       Files.write(dir.resolve("empty.parquet"), Array.emptyByteArray)
       dir.toString
-    })
+    }
 
   /** q43's fixture + compaction, once per sf-dir: events re-written as
     * 64 small files (micro-batch debris), then compacted under a 4 MB
     * per-file budget into a fresh directory. */
   private val compactionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, graft.operators.Compaction.Report)]()
+    new PerDir[(String, graft.operators.Compaction.Report)]
 
   /** q47's two-phase clustered table, once per sf-dir: created from
     * the low-md5 lineitem half (3-bit cells over partkey × suppkey),
     * grown by appending the high half under the stored ranges. */
-  private val zorderTableCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val zorderTableCache = new PerDir[String]
 
   private[graft] def zorderTableDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    zorderTableCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "zorder-table")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(base))
+    zorderTableCache(d) {
+      val base = PerDir.scratch("zorder-table")
       val dir = s"$base/table"
       val cols = Seq($"l_orderkey", $"l_linenumber", $"l_partkey",
         $"l_suppkey", $"l_extendedprice")
@@ -1940,14 +1928,12 @@ object RelationalQueries {
         li.filter(!Tables.inLowMd5Half($"l_orderkey")),
         "l_partkey", "l_suppkey", dir = dir)
       dir
-    })
+    }
 
   private[graft] def compactedEvents(
       s: org.apache.spark.sql.SparkSession, d: String): (String, graft.operators.Compaction.Report) =
-    compactionCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "compact")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(base))
+    compactionCache(d) {
+      val base = PerDir.scratch("compact")
       val fragDir = s"$base/fragmented"
       val outDir = s"$base/compacted"
       Tables.events(s, d).repartition(64)
@@ -1955,20 +1941,18 @@ object RelationalQueries {
       val report = graft.operators.Compaction.compact(
         s, fragDir, outDir, targetBytes = 4L * 1024 * 1024)
       (outDir, report)
-    })
+    }
 
   /** q42's stored dimension: SCD2 state over the log's first half,
     * built once per sf-dir and persisted (q37's incAggSnapshot
     * pattern) so the merge query reads dimension PARQUET — the
     * production shape — instead of re-deriving the dim four times in
     * its own plan. */
-  private val scd2SnapshotCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val scd2SnapshotCache = new PerDir[String]
 
   private[graft] def scd2Snapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scd2SnapshotCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "scd2-dim")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    scd2SnapshotCache(d) {
+      val dir = PerDir.scratch("scd2-dim")
       graft.operators.Scd2.fromChangeLog(
           Tables.events(s, d)
             .filter($"ts" < lit("2024-01-16 00:00:00").cast("timestamp")),
@@ -1976,7 +1960,7 @@ object RelationalQueries {
           attrs = Seq("event_type"))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
 
   /** q41/q42/s11's shared oracle: SCD2 from the full change log. The
     * incremental merge (q42) and the streaming fold (s11) deliberately
@@ -2045,32 +2029,28 @@ object RelationalQueries {
     * q25/t17's RNG-free split primitive), written ONCE per data dir
     * and read back from parquet — at query time the history
     * contributes only this state table, never its raw rows. */
-  private val incAggSnapshotCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val incAggSnapshotCache = new PerDir[String]
 
   private[graft] def incAggSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    incAggSnapshotCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "incagg-state")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    incAggSnapshotCache(d) {
+      val dir = PerDir.scratch("incagg-state")
       graft.operators.IncrementalAgg.aggState(
           Tables.events(s, d).filter(Tables.inLowMd5Half($"event_id")),
           Seq($"event_type"), $"value")
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
 
   /** q60's range-laid events table, once per sf-dir: the low-md5 half
     * through [[graft.operators.RangeLayout.write]] (trains the bounds),
     * the high half through [[graft.operators.RangeLayout.append]]
     * (stored-bounds path) — so the oracled query exercises BOTH write
     * paths and still must equal the plain table. */
-  private val rangeLayoutCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val rangeLayoutCache = new PerDir[String]
 
   private def rangeLayoutDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    rangeLayoutCache.computeIfAbsent(d, _ => {
-      val parent = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "range-layout")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(parent))
+    rangeLayoutCache(d) {
+      val parent = PerDir.scratch("range-layout")
       val dir = parent.resolve("t").toString
       val ev = Tables.events(s, d)
       graft.operators.RangeLayout.write(
@@ -2078,18 +2058,16 @@ object RelationalQueries {
       graft.operators.RangeLayout.append(
         ev.filter(!Tables.inLowMd5Half($"event_id")), "ts", dir)
       dir
-    })
+    }
 
   /** q61's layout: q60's create+append fixture COMPACTED — built
     * independently (q60's instance must keep its 2-files-per-bucket
     * state; fixtures are immutable once built). */
-  private val compactedRangeCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val compactedRangeCache = new PerDir[String]
 
   private def compactedRangeLayoutDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    compactedRangeCache.computeIfAbsent(d, _ => {
-      val parent = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "range-layout-c")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(parent))
+    compactedRangeCache(d) {
+      val parent = PerDir.scratch("range-layout-c")
       val dir = parent.resolve("t").toString
       val ev = Tables.events(s, d)
       graft.operators.RangeLayout.write(
@@ -2099,19 +2077,17 @@ object RelationalQueries {
       val n = graft.operators.RangeLayout.compact(s, dir, "ts")
       require(n > 0, "q61 fixture: compaction found nothing to rewrite")
       dir
-    })
+    }
 
   /** q63's versioned state store, once per sf-dir: per-type event
     * counts maintained through EpochState with keep=10 so older
     * versions stay readable. */
-  private val timeTravelCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val timeTravelCache = new PerDir[String]
 
   private def timeTravelDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    timeTravelCache.computeIfAbsent(d, _ => {
+    timeTravelCache(d) {
       import graft.operators.EpochState
-      val parent = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "time-travel")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(parent))
+      val parent = PerDir.scratch("time-travel")
       val dir = parent.resolve("t").toString
       def slice(k: Int) = Tables.events(s, d).filter($"event_id" % 4 === k)
         .groupBy($"event_type")
@@ -2125,19 +2101,17 @@ object RelationalQueries {
       for (e <- 0 to 2)
         EpochState.commit(s, dir, epoch = e.toLong, keep = 10L)(st => merged(st, slice(e + 1)))
       dir
-    })
+    }
 
   /** q62's layout: the compacted 16-file fixture + a Bloom sidecar on
     * event_id (built independently — fixtures are immutable once
     * built; the sidecar is written AFTER compaction, the rebuild-on-
     * maintenance contract). */
-  private val bloomLayoutCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bloomLayoutCache = new PerDir[String]
 
   private def bloomLayoutDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    bloomLayoutCache.computeIfAbsent(d, _ => {
-      val parent = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "range-layout-b")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(parent))
+    bloomLayoutCache(d) {
+      val parent = PerDir.scratch("range-layout-b")
       val dir = parent.resolve("t").toString
       val ev = Tables.events(s, d)
       graft.operators.RangeLayout.write(
@@ -2148,7 +2122,7 @@ object RelationalQueries {
       val n = graft.operators.RangeLayout.writeBloomIndex(s, dir, "event_id")
       require(n == 16, s"q62 fixture: expected 16 compacted files, indexed $n")
       dir
-    })
+    }
 
   private def bucketedPair(s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
     this.synchronized {
@@ -2173,7 +2147,7 @@ object RelationalQueries {
           .option("path", base.resolve(ord).toString)
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
           .saveAsTable(ord)
-        sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(base))
+        graft.streaming.StreamingRelational.registerScratch(base)
       }
       (li, ord)
     }

@@ -201,9 +201,7 @@ object StreamingQueries {
       RelationalQueries.incrementalAggOracle) { (s, d) =>
       import graft.operators.IncrementalAgg
       val snapshot = s.read.parquet(RelationalQueries.incAggSnapshot(s, d))
-      val stateDir = java.nio.file.Files.createTempDirectory(
-        StreamingRelational.scratchBase, "incagg-epochs")
-      StreamingRelational.registerScratch(stateDir)
+      val stateDir = PerDir.scratch("incagg-epochs")
       RelationalQueries.finalizeIncAgg(
         StreamingRelational.oneShotFoldMany(s,
           StreamingRelational.eventsStream(s, d)
@@ -449,9 +447,7 @@ object StreamingQueries {
     // amortize the build are t34/t35).
     sql("s15_stream_index", TextQueries.indexAndOracle) { (s, d) =>
       import graft.operators.InvertedIndex
-      val root = java.nio.file.Files.createTempDirectory(
-        StreamingRelational.scratchBase, "stream-inv-index")
-      StreamingRelational.registerScratch(root)
+      val root = PerDir.scratch("stream-inv-index")
       // markers live in the PARENT, index data one level down: batch
       // 0's build writes mode(overwrite), which deletes the data dir
       // wholesale — markers stored inside it would be wiped mid-epoch
@@ -982,23 +978,16 @@ object StreamingQueries {
     sql("s28_stream_bloom_ingest", RelationalQueries.bloomLookupOracle) { (s, d) =>
       import graft.operators.RangeLayout
       import s.implicits._
-      val dirP = java.nio.file.Files.createTempDirectory(
-        StreamingRelational.scratchBase, "stream-bloom")
-      StreamingRelational.registerScratch(dirP)
+      val dirP = PerDir.scratch("stream-bloom")
       val dir = dirP.resolve("t").toString
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       RangeLayout.write(ev.filter(Tables.inLowMd5Half(col("event_id"))), "ts", 16, dir)
       RangeLayout.writeBloomIndex(s, dir, "event_id")
-      val high = ev.filter(!Tables.inLowMd5Half(col("event_id"))).localCheckpoint(true)
-      val slices = orderedArrivalDir(s, "bloom-ingest-slices", Seq(
-        high.filter(col("event_id") % 3 === 0),
-        high.filter(col("event_id") % 3 === 1),
-        high.filter(col("event_id") % 3 === 2)))
       val stream = s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", 1)
-        .parquet(slices)
+        .parquet(highEventSliceDir(s, d))
       val state = StreamingRelational.oneShotFoldMany(s, stream,
         Seq(Seq(0L).toDF("n_indexed")),
         (st, batch, epoch) => {
@@ -1037,22 +1026,15 @@ object StreamingQueries {
     sql("s25_stream_range_ingest", RelationalQueries.rangeWindowOracle) { (s, d) =>
       import graft.operators.RangeLayout
       import s.implicits._
-      val dirP = java.nio.file.Files.createTempDirectory(
-        StreamingRelational.scratchBase, "stream-range")
-      StreamingRelational.registerScratch(dirP)
+      val dirP = PerDir.scratch("stream-range")
       val dir = dirP.resolve("t").toString
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       RangeLayout.write(ev.filter(Tables.inLowMd5Half(col("event_id"))), "ts", 16, dir)
-      val high = ev.filter(!Tables.inLowMd5Half(col("event_id"))).localCheckpoint(true)
-      val slices = orderedArrivalDir(s, "range-ingest-slices", Seq(
-        high.filter(col("event_id") % 3 === 0),
-        high.filter(col("event_id") % 3 === 1),
-        high.filter(col("event_id") % 3 === 2)))
       val stream = s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", 1)
-        .parquet(slices)
+        .parquet(highEventSliceDir(s, d))
       val state = StreamingRelational.oneShotFoldMany(s, stream,
         Seq(Seq(0L).toDF("n_batches")),
         (st, batch, epoch) => {
@@ -1088,31 +1070,44 @@ object StreamingQueries {
     }
   )
 
+  /** s25/s28's arrival fixture: the high-md5 half of events (the
+    * range layout's columns) in three micro-batches sliced by
+    * event_id % 3 — the increment both streams append to a layout
+    * created from the low half. Read-only, so the two queries share
+    * it; each still builds its own layout, which it mutates. */
+  private val highEventSliceCache = new PerDir[String]
+
+  private def highEventSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    highEventSliceCache(d) {
+      val high = Tables.events(s, d)
+        .filter(!Tables.inLowMd5Half(col("event_id")))
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+        .localCheckpoint(true)
+      orderedArrivalDir(s, "high-event-slices", thirds(high, col("event_id")))
+    }
+
   /** s21's arrival fixture: the t41 takedown set (doc_id % 7 = 3) in
     * three ordered micro-batches sliced by doc_id % 3 — a component
     * can lose members across SEVERAL batches before the split
     * finally happens, which is exactly what the fold must absorb. */
-  private val deleteSliceCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val deleteSliceCache = new PerDir[String]
 
   private def deleteSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    deleteSliceCache.computeIfAbsent(d, _ => {
+    deleteSliceCache(d) {
       val del = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .select(col("doc_id").as("id")).localCheckpoint(true)
-      orderedArrivalDir(s, "delete-slices", Seq(
-        del.filter(col("id") % 3 === 0),
-        del.filter(col("id") % 3 === 1),
-        del.filter(col("id") % 3 === 2)))
-    })
+      orderedArrivalDir(s, "delete-slices", thirds(del, col("id")))
+    }
 
   /** s20's arrival fixture: t40's increment pair set (t25 new-old
     * pairs + new-new verified pairs) in three ordered micro-batches
     * sliced by id_a % 3 — slices are NOT closure-safe on their own
     * (a bridge pair can arrive two batches after the clusters it
     * joins), which is exactly what the associative fold must absorb. */
-  private val pairSliceCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pairSliceCache = new PerDir[String]
 
   private def pairSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    pairSliceCache.computeIfAbsent(d, _ => {
+    pairSliceCache(d) {
       import graft.operators.Dedup
       val newDocs = Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
       val incr = Dedup.incrementalNearDups(newDocs, col("text"), col("doc_id"),
@@ -1122,20 +1117,17 @@ object StreamingQueries {
           threshold = 0.5)
         .select(col("id_a"), col("id_b"))
       val pairs = incr.unionByName(nn).localCheckpoint(true)
-      orderedArrivalDir(s, "pair-slices", Seq(
-        pairs.filter(col("id_a") % 3 === 0),
-        pairs.filter(col("id_a") % 3 === 1),
-        pairs.filter(col("id_a") % 3 === 2)))
-    })
+      orderedArrivalDir(s, "pair-slices", thirds(pairs, col("id_a")))
+    }
 
   /** s14's arrival fixture: the CDC change feed in three
     * seq-CONTIGUOUS micro-batches (thirds of the seq range) — netting
     * only composes when later batches carry later log positions per
     * key, which range slicing guarantees globally. */
-  private val cdcSliceCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val cdcSliceCache = new PerDir[String]
 
   private def cdcSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    cdcSliceCache.computeIfAbsent(d, _ => {
+    cdcSliceCache(d) {
       val chg = RelationalQueries.cdcChanges(s, d)
       val bounds = chg.agg(min(col("seq")), max(col("seq"))).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -1144,15 +1136,15 @@ object StreamingQueries {
         chg.filter(col("seq") <= t1),
         chg.filter(col("seq") > t1 && col("seq") <= t2),
         chg.filter(col("seq") > t2)))
-    })
+    }
 
   /** s16's arrival fixture: the orders fact (view columns only) in
     * three orderkey-range micro-batches — insert-only single-sided
     * IVM is slicing-invariant, so any partition works. */
-  private val ordersSliceCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ordersSliceCache = new PerDir[String]
 
   private def ordersSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    ordersSliceCache.computeIfAbsent(d, _ => {
+    ordersSliceCache(d) {
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey").as("c_custkey"), col("o_totalprice"))
       val bounds = o.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
@@ -1162,35 +1154,29 @@ object StreamingQueries {
         o.filter(col("o_orderkey") <= t1),
         o.filter(col("o_orderkey") > t1 && col("o_orderkey") <= t2),
         o.filter(col("o_orderkey") > t2)))
-    })
+    }
 
   /** s13's arrival fixture: the events table (gate columns only) in
     * three id-sliced micro-batches — any slicing works; row-local
     * checks make the quarantine batch-invariant. */
-  private val eventSliceCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val eventSliceCache = new PerDir[String]
 
   private def eventSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    eventSliceCache.computeIfAbsent(d, _ => {
+    eventSliceCache(d) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      orderedArrivalDir(s, "event-slices", Seq(
-        ev.filter(col("event_id") % 3 === 0),
-        ev.filter(col("event_id") % 3 === 1),
-        ev.filter(col("event_id") % 3 === 2)))
-    })
+      orderedArrivalDir(s, "event-slices", thirds(ev, col("event_id")))
+    }
 
   /** s12's arrival fixture: the documents table in three md5-sliced
     * micro-batches (any slicing works — CMS linearity is the claim). */
-  private val docSliceCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val docSliceCache = new PerDir[String]
 
   private def documentSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    docSliceCache.computeIfAbsent(d, _ => {
+    docSliceCache(d) {
       val docs = Tables.documents(s, d)
-      orderedArrivalDir(s, "doc-slices", Seq(
-        docs.filter(col("doc_id") % 3 === 0),
-        docs.filter(col("doc_id") % 3 === 1),
-        docs.filter(col("doc_id") % 3 === 2)))
-    })
+      orderedArrivalDir(s, "doc-slices", thirds(docs, col("doc_id")))
+    }
 
   /** s09's arrival fixture, once per sf-dir: four parquet files with
     * strictly increasing mtimes so `maxFilesPerTrigger=1` under
@@ -1205,10 +1191,10 @@ object StreamingQueries {
     * real window so the final no-data micro-batch flushes them (its
     * own window stays open and never reaches the append sink —
     * eventsStreamWithSentinel's exclusion argument). */
-  private val lateArrivalCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val lateArrivalCache = new PerDir[String]
 
   private def lateArrivalDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    lateArrivalCache.computeIfAbsent(d, _ => {
+    lateArrivalCache(d) {
       import s.implicits._
       val ev = Tables.events(s, d)
       val mx = ev.agg(max(col("ts"))).head().getTimestamp(0)
@@ -1219,7 +1205,12 @@ object StreamingQueries {
         Seq((-1L, java.sql.Timestamp.valueOf("2100-01-01 00:00:00"), -1L,
           "__sentinel__", 0.0, "{}"))
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")))
-    })
+    }
+
+  /** `df` as three arrival slices: `key % 3` = 0, 1, 2, in that order. */
+  private[queries] def thirds(df: org.apache.spark.sql.DataFrame,
+      key: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.DataFrame] =
+    (0 until 3).map(k => df.filter(key % 3 === k))
 
   /** Write `slices` as one parquet file each, strictly increasing
     * mtimes, into a fresh stream-input directory — the replayable
@@ -1229,8 +1220,7 @@ object StreamingQueries {
   private[queries] def orderedArrivalDir(s: org.apache.spark.sql.SparkSession,
       tag: String, slices: Seq[org.apache.spark.sql.DataFrame]): String = {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory(StreamingRelational.scratchBase, tag)
-    StreamingRelational.registerScratch(base)
+    val base = PerDir.scratch(tag)
     val streamDir = Files.createDirectories(Paths.get(s"$base/in"))
     val t0 = System.currentTimeMillis() - 60000
     slices.zipWithIndex.foreach { case (df, k) =>
@@ -1254,10 +1244,10 @@ object StreamingQueries {
   /** s11's arrival fixture: the events log sliced into four
     * time-contiguous weeks, arriving oldest-first — the in-order
     * increment stream SCD2 maintenance consumes. */
-  private val scd2ArrivalCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val scd2ArrivalCache = new PerDir[String]
 
   private def scd2ArrivalDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scd2ArrivalCache.computeIfAbsent(d, _ => {
+    scd2ArrivalCache(d) {
       val ev = Tables.events(s, d)
       def wk(lo: String, hi: String) = ev.filter(
         col("ts") >= lit(lo).cast("timestamp") &&
@@ -1267,5 +1257,5 @@ object StreamingQueries {
         wk("2024-01-08 00:00:00", "2024-01-16 00:00:00"),
         wk("2024-01-16 00:00:00", "2024-01-24 00:00:00"),
         wk("2024-01-24 00:00:00", "2100-01-01 00:00:00")))
-    })
+    }
 }

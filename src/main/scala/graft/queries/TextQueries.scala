@@ -2235,28 +2235,24 @@ object TextQueries {
 
   /** t34's served index, built ONCE per sf-dir: distinct (term, doc_id)
     * postings hash-bucketed into 8 partition directories. */
-  private val invIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val invIndexCache = new PerDir[String]
 
   private[queries] def invertedIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    invIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "inv-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    invIndexCache(d) {
+      val dir = PerDir.scratch("inv-index")
       graft.operators.InvertedIndex.build(
         Tables.documents(s, d), col("doc_id"), col("text"),
         nBuckets = 8, dir = dir.toString)
       dir.toString
-    })
+    }
 
   /** t35's two-phase index: created from the low-md5 half, grown by
     * the high half through the metadata-validated append path. */
-  private val invIncIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val invIncIndexCache = new PerDir[String]
 
   private def incrementalIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    invIncIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "inv-index-inc")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    invIncIndexCache(d) {
+      val dir = PerDir.scratch("inv-index-inc")
       val docs = Tables.documents(s, d)
       graft.operators.InvertedIndex.build(
         docs.filter(Tables.inLowMd5Half(col("doc_id"))), col("doc_id"), col("text"),
@@ -2265,18 +2261,16 @@ object TextQueries {
         docs.filter(!Tables.inLowMd5Half(col("doc_id"))), col("doc_id"), col("text"),
         dir.toString)
       dir.toString
-    })
+    }
 
   /** t36's tombstoned index: a full build with every doc_id % 7 == 0
     * document deleted (its own directory — tombstones are state, and
     * t34's pristine index must stay pristine). */
-  private val invDelIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val invDelIndexCache = new PerDir[String]
 
   private def deletedIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    invDelIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "inv-index-del")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    invDelIndexCache(d) {
+      val dir = PerDir.scratch("inv-index-del")
       val docs = Tables.documents(s, d)
       graft.operators.InvertedIndex.build(
         docs, col("doc_id"), col("text"), nBuckets = 8, dir = dir.toString)
@@ -2284,7 +2278,7 @@ object TextQueries {
         .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
       graft.operators.InvertedIndex.delete(s, dir.toString, doomed)
       dir.toString
-    })
+    }
 
   /** t33/s12's shared eps — the merged streaming sketch must be
     * parameter-identical to the batch one or mergeInPlace refuses. */
@@ -2425,17 +2419,15 @@ object TextQueries {
     * consumer (t31/t32): the production pattern where one corpus
     * clustering feeds canonical selection, splits, and cluster stats
     * without re-running the star-contraction loop per consumer. */
-  private val componentsCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val componentsCache = new PerDir[String]
 
   private[graft] def prebuiltComponents(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = componentsCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "neardup-components")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = componentsCache(d) {
+      val dir = PerDir.scratch("neardup-components")
       Dedup.connectedComponents(prebuiltPairs(s, d))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -2446,36 +2438,32 @@ object TextQueries {
     * (BpeTrain.save/load), the shape a training run actually ships —
     * consumers serve the PERSISTED tokenizer, never a JVM-local one. */
   private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[graft.operators.BpeTrain.Merge]]()
+    new PerDir[Vector[graft.operators.BpeTrain.Merge]]
 
   private[graft] def trainedBpe(s: org.apache.spark.sql.SparkSession,
       d: String): Vector[graft.operators.BpeTrain.Merge] =
-    bpeCache.computeIfAbsent(d, _ => {
+    bpeCache(d) {
       import graft.operators.BpeTrain
       val learned = BpeTrain.train(Tables.documents(s, d), col("text"), BpeTrainRounds)
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "bpe-merges")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+      val dir = PerDir.scratch("bpe-merges")
       BpeTrain.save(s, learned, dir.toString)
       BpeTrain.load(s, dir.toString)
-    })
+    }
 
   /** Learned BYTE-level merges per data dir (t61/t63): trained once,
     * round-tripped through the persisted artifact like [[trainedBpe]]. */
   private val byteBpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[graft.operators.BpeTrain.Merge]]()
+    new PerDir[Vector[graft.operators.BpeTrain.Merge]]
 
   private[graft] def trainedByteBpe(s: org.apache.spark.sql.SparkSession,
       d: String): Vector[graft.operators.BpeTrain.Merge] =
-    byteBpeCache.computeIfAbsent(d, _ => {
+    byteBpeCache(d) {
       import graft.operators.BpeTrain
       val learned = BpeTrain.trainBytes(Tables.documents(s, d), col("text"), ByteBpeRounds)
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "byte-bpe-merges")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+      val dir = PerDir.scratch("byte-bpe-merges")
       BpeTrain.save(s, learned, dir.toString)
       BpeTrain.load(s, dir.toString)
-    })
+    }
 
   /** Prebuilt verified-pair LOG per data dir — the (id_a, id_b) edge
     * table that built [[prebuiltComponents]], persisted alongside it
@@ -2485,19 +2473,17 @@ object TextQueries {
     * re-derives surviving connectivity from. Materializing it also
     * means the MinHash kernels run ONCE per data dir across every
     * components consumer. */
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pairsCache = new PerDir[String]
 
   private[graft] def prebuiltPairs(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = pairsCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "neardup-pairs")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = pairsCache(d) {
+      val dir = PerDir.scratch("neardup-pairs")
       Dedup.minHashPairsVerified(
           Tables.documents(s, d), col("text"), col("doc_id"), threshold = 0.5)
         .select(col("id_a"), col("id_b"))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -2507,20 +2493,18 @@ object TextQueries {
     * once from the old corpus's verified pairs, then kept current by
     * [[graft.operators.Dedup.mergeComponents]] folding each
     * increment's pairs in (t40) instead of re-clustering. */
-  private val oldComponentsCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val oldComponentsCache = new PerDir[String]
 
   private[graft] def prebuiltOldComponents(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = oldComponentsCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "neardup-components-old")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = oldComponentsCache(d) {
+      val dir = PerDir.scratch("neardup-components-old")
       val pairs = Dedup.minHashPairsVerified(
         Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
         col("text"), col("doc_id"), threshold = 0.5)
       Dedup.connectedComponents(pairs.select(col("id_a"), col("id_b")))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -2529,38 +2513,34 @@ object TextQueries {
     * .spansAgainstIndex]] serves span detection from without ever
     * re-scanning the old corpus's text. Written once per data dir
     * (dedupIndex's idiom); at scale it would be bucketed by gh. */
-  private val spanIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val spanIndexCache = new PerDir[String]
 
   /** t70's stored char-gram index (old corpus = doc_id % 5 != 0),
     * built once per data dir — the [[spanGramIndex]] discipline at
     * character granularity. */
-  private val charSpanIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val charSpanIndexCache = new PerDir[String]
 
   private[queries] def charSpanIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = charSpanIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "char-span-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = charSpanIndexCache(d) {
+      val dir = PerDir.scratch("char-span-index")
       graft.operators.SpanDedup.charGramIndex(
           Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
           col("text"), col("doc_id"), L = 40)
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
   private[queries] def spanGramIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = spanIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "span-gram-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = spanIndexCache(d) {
+      val dir = PerDir.scratch("span-gram-index")
       graft.operators.SpanDedup.gramIndex(
           Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
           col("text"), col("doc_id"), k = 8)
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -2740,18 +2720,16 @@ object TextQueries {
   /** Persisted (g, c) bigram-count LM of the "existing" corpus
     * (doc_id % 5 ≠ 0) — written once per data dir; t57 merges the
     * increment's counts into it without re-scanning the old text. */
-  private val bigramLmCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bigramLmCache = new PerDir[String]
 
   private def bigramLmIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = bigramLmCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "bigram-lm-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = bigramLmCache(d) {
+      val dir = PerDir.scratch("bigram-lm-index")
       bigramCounts(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0))
         .groupBy(col("g")).agg(sum(col("bf")).as("c"))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -2763,10 +2741,10 @@ object TextQueries {
     * (PR evaluation) — the share-the-training-run idiom used for the
     * GNG model. Training is deterministic (bit-portable integer
     * gradient sums), so WHICH query triggers it is immaterial. */
-  private val classifierCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
+  private val classifierCache = new PerDir[Array[Double]]
 
   private[queries] def classifierWeights(s: org.apache.spark.sql.SparkSession, d: String): Array[Double] =
-    classifierCache.computeIfAbsent(d, _ =>
+    classifierCache(d)(
       graft.operators.TextClassifier.fit(
         Tables.documents(s, d), col("text"), classifierLabel))
 
@@ -2774,10 +2752,10 @@ object TextQueries {
     * share-the-training-run idiom; training is deterministic
     * (bit-portable integer gradient sums), so WHICH query triggers it
     * is immaterial. */
-  private val hashedCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
+  private val hashedCache = new PerDir[Array[Double]]
 
   private def hashedWeights(s: org.apache.spark.sql.SparkSession, d: String): Array[Double] =
-    hashedCache.computeIfAbsent(d, _ =>
+    hashedCache(d)(
       graft.operators.HashedClassifier.fit(
         Tables.documents(s, d), col("text"), classifierLabel))
 
@@ -3049,21 +3027,19 @@ object TextQueries {
     * (doc_id % 5 ≠ 0), written once per data dir and served from
     * parquet — s29's stored side (the t25/t51 idiom: old text never
     * re-scanned at ingestion time). */
-  private val containmentIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val containmentIndexCache = new PerDir[String]
 
   private[queries] def containmentIndex(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val path = containmentIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "containment-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = containmentIndexCache(d) {
+      val dir = PerDir.scratch("containment-index")
       val p = dir.resolve("t").toString
       Dedup.containmentFeatures(
           Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
           col("text"), col("doc_id"), n = 3)
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -3090,45 +3066,43 @@ object TextQueries {
     * counts (doc_id % 5 ≠ 0), written once per data dir and served
     * from parquet — the old text is never re-tokenized at increment
     * time (the t25/t51 stored-index idiom). */
-  private val knTriIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val knTriIndexCache = new PerDir[String]
 
   private[queries] def knTriIndex(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val path = knTriIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "kn-tri-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = knTriIndexCache(d) {
+      val dir = PerDir.scratch("kn-tri-index")
       val p = dir.resolve("t").toString
       knTriCounts(knTrigrams(
           Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 
   /** One unigram-LM fit per data dir (t73/t74) — the
     * share-the-training-run idiom; training is deterministic (integer
     * Viterbi costs, exact count re-estimation). */
-  private val unigramCache = new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
+  private val unigramCache = new PerDir[Map[String, Long]]
 
   private[queries] def unigramVocab(s: org.apache.spark.sql.SparkSession, d: String): Map[String, Long] =
-    unigramCache.computeIfAbsent(d, _ =>
+    unigramCache(d)(
       graft.operators.UnigramLm.fit(Tables.documents(s, d), col("text")))
 
 
   /** t56's warm-started weights: 30 rounds on the existing corpus
     * (doc_id % 5 ≠ 0), 10 continuation rounds on old ∪ increment. */
-  private val refreshCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
+  private val refreshCache = new PerDir[Array[Double]]
 
   private def refreshedWeights(s: org.apache.spark.sql.SparkSession, d: String): Array[Double] =
-    refreshCache.computeIfAbsent(d, _ => {
+    refreshCache(d) {
       import graft.operators.TextClassifier
       val docs = Tables.documents(s, d)
       val old = TextClassifier.fit(
         docs.filter(col("doc_id") % 5 =!= 0), col("text"), classifierLabel)
       TextClassifier.fitFrom(docs, col("text"), classifierLabel, old, rounds = 10)
-    })
+    }
 
   /** Prebuilt MinHash signature index of the "existing" corpus
     * (doc_id % 5 ≠ 0), written ONCE per data dir and served from
@@ -3137,19 +3111,17 @@ object TextQueries {
     * (v07's servedIndex precedent; at scale the table would be written
     * bucketed by band_hash so only the new batch shuffles). Shared with
     * s06, which runs the same dedup as an ingestion stream. */
-  private val dedupIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dedupIndexCache = new PerDir[String]
 
   private[queries] def dedupIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = dedupIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "minhash-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = dedupIndexCache(d) {
+      val dir = PerDir.scratch("minhash-index")
       Dedup.minHashIndex(
           Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
           col("text"), col("doc_id"))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 }

@@ -32,21 +32,18 @@ object VectorQueries {
   }
 
   private val annCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnnConfig]()
+    new PerDir[AnnConfig]
 
   private[graft] def annConfig(s: org.apache.spark.sql.SparkSession, d: String): AnnConfig =
-    annCache.computeIfAbsent(d, _ => {
+    annCache(d) {
       val n = kmBlocking(s, d).n
       AnnConfig(n, graft.operators.AnnParams.nBits(n),
         graft.operators.AnnParams.pqM(EmbDim), graft.operators.AnnParams.pqCodes(n))
-    })
+    }
 
   /** Dump-time config for the oracles — unambiguous only when exactly
     * one dir ran in this JVM (the Verify flow; pqCache precedent). */
-  private[graft] def soleAnnConfig: Option[AnnConfig] = {
-    val cs = new java.util.ArrayList(annCache.values())
-    if (cs.size == 1) Some(cs.get(0)) else None
-  }
+  private[graft] def soleAnnConfig: Option[AnnConfig] = annCache.sole
 
   /** Corpus-derived IVF probe width for the v11/v16/v17/v18/v21/v22
     * family: enough of the trained coarse lists to cover the candidate
@@ -68,18 +65,16 @@ object VectorQueries {
     * buckets' partitions (PartitionFilters, asserted in
     * PlanQualitySpec) instead of re-deriving signatures corpus-wide.
     * Built lazily per JVM; the scratch dir is removed on exit. */
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val indexCache = new PerDir[String]
 
   private[graft] def servedIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = indexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "lsh-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = indexCache(d) {
+      val dir = PerDir.scratch("lsh-index")
       Similarity.lshBuckets(Tables.embeddings(s, d), col("embedding"), col("vec_id"),
           nBits = annConfig(s, d).nBits, dim = EmbDim)
         .write.mode("overwrite").partitionBy("bucket").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -89,19 +84,17 @@ object VectorQueries {
     * ranking scan streams stored codes (raw vectors never written).
     * Depends on BOTH trained models (GNG coarse centroids + PQ
     * codebook), so it is keyed on the dir like them. */
-  private val ivfPqIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqIndexCache = new PerDir[String]
 
   /** v21's two-phase index: built from the even vec_ids, grown by the
     * odd half through the fingerprint-validated
     * [[graft.operators.Pq.ivfPqIncrement]] append path — same layout,
     * same serving plan, provably the same answers as [[servedIvfPqIndex]]. */
-  private val ivfPqIncIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqIncIndexCache = new PerDir[String]
 
   private[graft] def servedIvfPqIncrementalIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = ivfPqIncIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "ivfpq-inc-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = ivfPqIncIndexCache(d) {
+      val dir = PerDir.scratch("ivfpq-inc-index")
       val emb = Tables.embeddings(s, d)
       val cs = graft.GngQueries.trained(s, d).centroids
       val cb = pqCodebook(s, d)
@@ -112,7 +105,7 @@ object VectorQueries {
           emb.filter(col("vec_id") % 2 === 1), col("embedding"), col("vec_id"), cs, cb)
         .write.mode("append").partitionBy("list").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -123,13 +116,11 @@ object VectorQueries {
     * serving exercises the live-view set-minus. Serving it must be
     * indistinguishable from an index rebuilt without either delete
     * wave (the parameterized v11 oracle). */
-  private val ivfPqDelIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqDelIndexCache = new PerDir[String]
 
   private[graft] def servedIvfPqDeletedIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = ivfPqDelIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "ivfpq-del-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = ivfPqDelIndexCache(d) {
+      val dir = PerDir.scratch("ivfpq-del-index")
       val emb = Tables.embeddings(s, d)
       val cs = graft.GngQueries.trained(s, d).centroids
       val cb = pqCodebook(s, d)
@@ -152,7 +143,7 @@ object VectorQueries {
           emb.filter(col("vec_id") % 10 === 7), col("vec_id"))
         .write.mode("append").partitionBy("list").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -161,13 +152,11 @@ object VectorQueries {
     * [[Similarity.lshLive]] must equal the multiprobe oracle over the
     * corpus minus the deleted ids (histogram, radius, and ranking all
     * shrink together). */
-  private val lshDelIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val lshDelIndexCache = new PerDir[String]
 
   private[graft] def servedDeletedIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = lshDelIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "lsh-del-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = lshDelIndexCache(d) {
+      val dir = PerDir.scratch("lsh-del-index")
       val emb = Tables.embeddings(s, d)
       Similarity.lshBuckets(emb, col("embedding"), col("vec_id"),
           nBits = annConfig(s, d).nBits, dim = EmbDim)
@@ -176,20 +165,18 @@ object VectorQueries {
           emb.filter(col("vec_id") % 10 === 3), col("vec_id"))
         .write.mode("append").partitionBy("bucket").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
   private[graft] def servedIvfPqIndex(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = ivfPqIndexCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "ivfpq-index")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = ivfPqIndexCache(d) {
+      val dir = PerDir.scratch("ivfpq-index")
       graft.operators.Pq.ivfPqIndex(Tables.embeddings(s, d), col("embedding"),
           col("vec_id"), graft.GngQueries.trained(s, d).centroids, pqCodebook(s, d))
         .write.mode("overwrite").partitionBy("list").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -307,22 +294,19 @@ object VectorQueries {
     * lowest-id sample, fixed Lloyd iterations — [[graft.operators.Pq.train]]),
     * shared between the v10 query run and its dump-time oracle. */
   private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+    new PerDir[Array[Array[Array[Double]]]]
 
   private def pqCodebook(s: org.apache.spark.sql.SparkSession, d: String) =
-    pqCache.computeIfAbsent(d, _ => {
+    pqCache(d) {
       val cfg = annConfig(s, d)
       graft.operators.Pq.train(Tables.embeddings(s, d), col("embedding"),
         col("vec_id"), m = cfg.pqM, k = cfg.pqCodes)
-    })
+    }
 
   /** Dump-time codebook for the oracle — unambiguous only when exactly
     * one dir trained in this JVM (the Verify flow; GngQueries
     * precedent). */
-  private def solePqCodebook: Option[Array[Array[Array[Double]]]] = {
-    val cbs = new java.util.ArrayList(pqCache.values())
-    if (cbs.size == 1) Some(cbs.get(0)) else None
-  }
+  private def solePqCodebook: Option[Array[Array[Array[Double]]]] = pqCache.sole
 
   /** v19/v32/v34's k-means seeds per data dir (deterministic: the k
     * lowest-id vectors, k CORPUS-DERIVED via [[graft.operators.KMeans
@@ -333,23 +317,20 @@ object VectorQueries {
   private final case class KmBlocking(n: Long, seeds: Array[Array[Double]])
 
   private val kmSeedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, KmBlocking]()
+    new PerDir[KmBlocking]
 
   private def kmBlocking(s: org.apache.spark.sql.SparkSession, d: String): KmBlocking =
-    kmSeedCache.computeIfAbsent(d, _ => {
+    kmSeedCache(d) {
       val emb = Tables.embeddings(s, d)
       val n = emb.count()
       KmBlocking(n, graft.operators.KMeans.seeds(emb, col("embedding"),
         col("vec_id"), graft.operators.KMeans.deriveK(n)))
-    })
+    }
 
   private def kmSeeds(s: org.apache.spark.sql.SparkSession, d: String): Array[Array[Double]] =
     kmBlocking(s, d).seeds
 
-  private def soleKmSeeds: Option[Array[Array[Double]]] = {
-    val ss = new java.util.ArrayList(kmSeedCache.values())
-    if (ss.size == 1) Some(ss.get(0).seeds) else None
-  }
+  private def soleKmSeeds: Option[Array[Array[Double]]] = kmSeedCache.sole.map(_.seeds)
 
   /** v32/s31's shared verdict assembly: per component keep the member
     * FARTHEST from its cluster centroid (lowest 4-dp cent_sim, id
@@ -407,18 +388,16 @@ object VectorQueries {
 
   /** v35's materialized verdict table, written once per data dir. */
   private val semVerdictCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new PerDir[String]
 
   private def prebuiltSemVerdicts(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val path = semVerdictCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "sem-verdicts")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = semVerdictCache(d) {
+      val dir = PerDir.scratch("sem-verdicts")
       val p = dir.resolve("t").toString
       semDedupVerdicts(s, d).write.mode("overwrite").parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -427,17 +406,15 @@ object VectorQueries {
     * members can arrive two batches apart, which is exactly what the
     * incremental pair discovery + component fold must absorb. */
   private val embSliceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new PerDir[String]
 
   private def embeddingSliceDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    embSliceCache.computeIfAbsent(d, _ => {
+    embSliceCache(d) {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), asDouble(col("embedding")).as("embedding"))
-      StreamingQueries.orderedArrivalDir(s, "emb-slices", Seq(
-        e.filter(col("vec_id") % 3 === 0),
-        e.filter(col("vec_id") % 3 === 1),
-        e.filter(col("vec_id") % 3 === 2)))
-    })
+      StreamingQueries.orderedArrivalDir(s, "emb-slices",
+        StreamingQueries.thirds(e, col("vec_id")))
+    }
 
   /** v32's dump-time oracle: k-means assignment from the inlined seeds
     * (the kmeansOracle CTEs), exhaustive within-cluster cosine pairs at
@@ -1337,13 +1314,11 @@ object VectorQueries {
     * TextQueries.prebuiltComponents twin on the vector side): LSH
     * pair generation + star contraction run once, written to scratch
     * parquet, served to every consumer. */
-  private val embClustersCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val embClustersCache = new PerDir[String]
 
   private def prebuiltEmbClusters(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val path = embClustersCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.streaming.StreamingRelational.scratchBase, "emb-components")
-      sys.addShutdownHook(graft.streaming.StreamingRelational.deleteRecursively(dir))
+    val path = embClustersCache(d) {
+      val dir = PerDir.scratch("emb-components")
       val pairs = Similarity.cosineNearDupPairs(
         Tables.embeddings(s, d), col("embedding"), col("vec_id"),
         threshold = 0.2, nBits = 3, nBands = 1, centered = false)
@@ -1351,7 +1326,7 @@ object VectorQueries {
           pairs.select(col("id_a"), col("id_b")))
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
     s.read.parquet(path)
   }
 

@@ -19,6 +19,14 @@ import graft.model.GngParams
   * with their existing arguments unchanged; `DSname` and `nbWind` keep
   * their reference roles (output labeling / total-window count used for
   * the snapshot cadence).
+  *
+  * A restart with the same `dirSortie` resumes: the Spark checkpoint
+  * lives in `dirSortie/_model/_ckpt`, next to the model's recovery
+  * point `dirSortie/_model/model-latest.bin` (batch ids are relative to
+  * the checkpoint, so the two move together). The stored model and its
+  * batch counter replace the `nodes2.txt` bootstrap, and files the
+  * checkpoint already consumed — or that were rotated away — are never
+  * trained on again.
   */
 object GStreamRun {
 
@@ -45,19 +53,35 @@ object GStreamRun {
     import spark.implicits._
     val params = GngParams(decayFactor = decayFactor, lambdaAge = lambdaAge,
       nbNodesToAdd = nbNodesToAdd)
-    // bootstrap scan: first two rows of nodes2.txt (reference takes
-    // exactly 2; batchStream.scala:72-78)
-    val seed = GStream.parseCsvPoints(
-      spark.read.text(s"$dirData/nodes2.txt").limit(2), separator)
-    val model = GStream.bootstrap(seed, params)
+    val modelDir = java.nio.file.Paths.get(dirSortie, "_model")
+    val ckpt = modelDir.resolve("_ckpt")
+    val recoveryPoint = modelDir.resolve("model-latest.bin")
+    val (model, startKk) =
+      if (java.nio.file.Files.exists(recoveryPoint)) {
+        require(java.nio.file.Files.isDirectory(ckpt),
+          s"GStreamRun: $recoveryPoint exists but its Spark checkpoint $ckpt does not; " +
+            "without it the stream cannot tell which files the model already absorbed")
+        val (stored, kk) = graft.model.GngModel.loadState(recoveryPoint)
+        require(stored.params == params,
+          s"GStreamRun: $recoveryPoint was trained with ${stored.params}, not $params")
+        (stored, kk)
+      } else {
+        // bootstrap scan: first two rows of nodes2.txt (reference takes
+        // exactly 2; batchStream.scala:72-78)
+        val seed = GStream.parseCsvPoints(
+          spark.read.text(s"$dirData/nodes2.txt").limit(2), separator)
+        (GStream.bootstrap(seed, params), 0)
+      }
     // reference-exact snapshot cadence (batchStream.scala:95):
     // kk ∈ {1, ⌊nbWind/9⌋·{1..8}, every 10th past 8⌊nbWind/9⌋+10, ≥nbWind−2}
     GStream.trainStreaming(spark, dirData, model, separator,
       outDir = Some(dirSortie),
       snapshotAt = GStream.referenceCadence(nbWind),
-      modelCheckpoint = Some(s"$dirSortie/_model"),
+      modelCheckpoint = Some(modelDir.toString),
       // the seed file is never re-ingested as a batch (textFileStream
       // parity for the one pre-existing file the reference layout has)
-      excludeFiles = Seq("nodes2.txt"))
+      excludeFiles = Seq("nodes2.txt"),
+      checkpointLocation = Some(ckpt.toString),
+      startKk = startKk)
   }
 }

@@ -109,13 +109,8 @@ object StreamingRelational {
 
   /** One sentinel parquet file per (JVM, sentinelTs): re-writing it per
     * call was measured at ~0.4 s/call, ×3 bench reps per streaming
-    * query. Cleaned up by a shutdown hook. */
-  private val sentinelCache = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-  sys.addShutdownHook {
-    import scala.jdk.CollectionConverters._
-    sentinelCache.values.asScala.foreach(d =>
-      deleteRecursively(java.nio.file.Paths.get(d)))
-  }
+    * query. Keyed by the sentinel's epoch millis, not a data dir. */
+  private val sentinelCache = new graft.queries.PerDir[String]
 
   /** [[eventsStream]] unioned with a one-row sentinel stream whose
     * event time is far beyond any real event. Once the sentinel batch
@@ -150,14 +145,14 @@ object StreamingRelational {
       "eventsStreamWithSentinel needs spark.sql.streaming.noDataMicroBatches.enabled=true: " +
         "the no-data micro-batch after the sentinel commits is what flushes the finalized " +
         "windows to the append sink; without it the one-shot result is silently empty")
-    val tmp = sentinelCache.computeIfAbsent(sentinelTs.getTime, _ => {
+    val tmp = sentinelCache(sentinelTs.getTime.toString) {
       import spark.implicits._
-      val dirPath = java.nio.file.Files.createTempDirectory("graft-sentinel")
+      val dirPath = graft.queries.PerDir.scratch("graft-sentinel")
       Seq((-1L, sentinelTs, -1L, "__sentinel__", 0.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.mode("overwrite").parquet(dirPath.toString)
       dirPath.toString
-    })
+    }
     val sentinel = spark.readStream
       .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
       .parquet(tmp)
@@ -223,10 +218,7 @@ object StreamingRelational {
   def oneShotServe(spark: SparkSession, streamed: DataFrame,
       serve: DataFrame => DataFrame): DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-ckpt")
-    val out = java.nio.file.Files.createTempDirectory(scratchBase, "graft-serve")
-    // one static hook owns every serve dir (sentinelCache's pattern) —
-    // a hook per call would accumulate hook threads over a long harness
-    serveDirs.add(out)
+    val out = graft.queries.PerDir.scratch("graft-serve")
     runOneShot(spark, ckpt) { () =>
       streamed.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -252,14 +244,18 @@ object StreamingRelational {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], streamed.schema))
   }
 
-  private val serveDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   sys.addShutdownHook {
-    serveDirs.forEach(d => deleteRecursively(d))
+    scratchDirs.forEach(d => deleteRecursively(d))
   }
 
-  /** Register a scratch path for exit-time cleanup under the single
-    * static hook (a hook per call would accumulate hook threads). */
-  private[graft] def registerScratch(p: java.nio.file.Path): Unit = serveDirs.add(p)
+  /** Register a scratch path for exit-time cleanup under the one static
+    * hook (a hook per fixture or call would accumulate hook threads).
+    * [[graft.queries.PerDir.scratch]] creates and registers a fixture
+    * dir in one step. */
+  private[graft] def registerScratch(p: java.nio.file.Path): Unit = scratchDirs.add(p)
+
+  private[graft] def isRegisteredScratch(p: java.nio.file.Path): Boolean = scratchDirs.contains(p)
 
   /** Streaming STATE MAINTENANCE: fold every micro-batch into an
     * accumulated state table — `state := step(state, batch)` — and

@@ -25,9 +25,7 @@ class EpochStateSpec extends AnyFunSuite with SparkTestSupport {
     EpochState.state(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(
-      graft.streaming.StreamingRelational.scratchBase, tag).toString
+  private def tmpDir(tag: String): String = graft.queries.PerDir.scratch(tag).toString
 
   test("replay after a COMPLETED commit is a no-op (epoch guard)") {
     val dir = tmpDir("epoch-replay")

@@ -48,8 +48,7 @@ class GStreamCrashSpec extends AnyFunSuite with SparkTestSupport {
     new GngModel(GngParams(), 2).init2Nodes(byId(0), byId(1))
   }
 
-  private def scratch(prefix: String): Path =
-    Files.createTempDirectory(StreamingRelational.scratchBase, prefix)
+  private def scratch(prefix: String): Path = graft.queries.PerDir.scratch(prefix)
 
   private def drain(q: StreamingQuery): Unit = try q.processAllAvailable() finally q.stop()
 

@@ -47,8 +47,7 @@ class GStreamRestartSpec extends AnyFunSuite with SparkTestSupport {
     new GngModel(GngParams(), 2).init2Nodes(byId(0), byId(1))
   }
 
-  private def scratch(prefix: String): Path =
-    Files.createTempDirectory(StreamingRelational.scratchBase, prefix)
+  private def scratch(prefix: String): Path = graft.queries.PerDir.scratch(prefix)
 
   test("kill at batch 46 + resume from (kk, model) ends bit-identical to a continuous run") {
     // ---- run A: all 92 files, never killed

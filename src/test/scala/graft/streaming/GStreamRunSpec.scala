@@ -164,4 +164,55 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
     assert(counts(restarted) === counts(once))
     assert(restarted.prototypeLines === once.prototypeLines)
   }
+
+  test("start() on the same dirSortie resumes from the recovery point, not nodes2.txt") {
+    val base = System.currentTimeMillis() - 60000
+    def batch(dir: java.nio.file.Path, b: Int): Unit = {
+      val lines = (1 to 40).map { i =>
+        val (cx, cy) = if (i % 2 == 0) (0.0, 0.0) else (80.0, 80.0)
+        f"${cx + (i % 9) + b}%.1f,${cy + (i % 7) - b}%.1f,${i % 2},${b * 100 + i}"
+      }
+      val f = dir.resolve(s"b$b.csv")
+      Files.write(f, lines.mkString("\n").getBytes)
+      // strictly increasing mtimes: every run sees the batches in order
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(base + b * 1000L))
+    }
+    def input(batches: Int*) = {
+      val dir = Files.createTempDirectory("gsr3-in")
+      Files.write(dir.resolve("nodes2.txt"), "0,0,0,1\n80,80,1,2".getBytes)
+      batches.foreach(batch(dir, _))
+      dir
+    }
+    def start(in: java.nio.file.Path, out: String, decayFactor: Double = 0.9) =
+      GStreamRun.start(spark, in.toString, out, ",",
+        decayFactor = decayFactor, lambdaAge = 1.2, nbNodesToAdd = 3, nbWind = 4)
+    def run(in: java.nio.file.Path, out: String) = {
+      val q = start(in, out)
+      try q.processAllAvailable() finally q.stop()
+      graft.model.GngModel.loadState(Paths.get(out, "_model", "model-latest.bin"))
+    }
+
+    // files 1-2, stop; they rotate away and files 3-4 arrive; restart
+    val dirData = input(1, 2)
+    val dirSortie = Files.createTempDirectory("gsr3-out").toString
+    assert(run(dirData, dirSortie)._2 === 2)
+    Files.delete(dirData.resolve("b1.csv")); Files.delete(dirData.resolve("b2.csv"))
+    batch(dirData, 3); batch(dirData, 4)
+    val (resumed, kk) = run(dirData, dirSortie)
+    assert(kk === 4, "the restart continues the batch counter over files 3-4")
+
+    val (once, kkOnce) = run(input(1, 2, 3, 4), Files.createTempDirectory("gsr3-once").toString)
+    assert(kkOnce === 4)
+    assert(resumed.prototypeLines === once.prototypeLines)
+    assert(resumed.edgeLines === once.edgeLines)
+    assert(resumed.weightLines === once.weightLines)
+
+    // a recovery point trained under other params, or one whose Spark
+    // checkpoint is gone, fails at start instead of training on
+    val wrong = intercept[IllegalArgumentException](start(dirData, dirSortie, decayFactor = 0.5))
+    assert(wrong.getMessage.contains("was trained with"))
+    StreamingRelational.deleteRecursively(Paths.get(dirSortie, "_model", "_ckpt"))
+    val orphan = intercept[IllegalArgumentException](start(dirData, dirSortie))
+    assert(orphan.getMessage.contains("Spark checkpoint"))
+  }
 }

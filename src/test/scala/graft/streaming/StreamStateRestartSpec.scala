@@ -30,9 +30,7 @@ import graft.operators.{Dedup, EpochState, QuantileState}
 class StreamStateRestartSpec extends AnyFunSuite with SparkTestSupport {
   import spark.implicits._
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(
-      graft.streaming.StreamingRelational.scratchBase, tag).toString
+  private def tmpDir(tag: String): String = graft.queries.PerDir.scratch(tag).toString
 
   /** Drive `step` over `slices` twice: (a) one continuous run with
     * every slice visible; (b) a killed run — slice 1, restart, slice 2,
