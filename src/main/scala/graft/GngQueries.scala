@@ -93,10 +93,9 @@ object GngQueries {
 
   /** Squared Euclidean distance of SQL array column `arr` to one
     * centroid as an explicit left-associated term chain — the same
-    * sequential accumulation order as
-    * [[graft.operators.GngOps.twoNearest]]'s loop (and
-    * VectorOpsImpl.nearestCentroid's), so both engines compute
-    * bit-identical doubles and arg-min ties can't flake. Shared by the
+    * sequential accumulation order as [[graft.expressions.Nearest.dist2]],
+    * so both engines compute bit-identical doubles and arg-min ties
+    * can't flake. Shared by the
     * gng_assignments/gng_purity and v06 oracles — ONE definition, so
     * the accumulation order can't silently diverge between them. */
   private[graft] def distSql(arr: String, c: Array[Double]): String =
@@ -105,8 +104,9 @@ object GngQueries {
       .mkString(" + ")
 
   /** CTEs ending in `win(vec_id, cluster, dsq)`: each vector's nearest
-    * centroid by squared distance, ties to the lowest index (twoNearest
-    * keeps the FIRST strict minimum). */
+    * centroid by squared distance, ties to the lowest index — DuckDB's
+    * `ORDER BY dsq, cluster` (NaN last) is [[graft.expressions.Nearest]]'s
+    * order. */
   private def nearestCtes(cs: Array[Array[Double]]): String = {
     val perCentroid = cs.zipWithIndex
       .map { case (c, i) => s"SELECT vec_id, $i AS cluster, ${distSql("v", c)} AS dsq FROM e" }
@@ -181,14 +181,14 @@ object GngQueries {
 
   /** The one assign step of the evaluation queries: every embedding
     * under the trained model as (vec_id, label, cluster, dsq) — its BMU
-    * by [[graft.operators.GngOps.twoNearest]] and the squared distance
+    * by [[graft.expressions.Nearest.twoNearest]] and the squared distance
     * to it, the quantities the inlined [[nearestCtes]] re-derive. */
   private def assigned(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val bc = s.sparkContext.broadcast(trained(s, d).centroids)
     GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id").map { p =>
-      val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value)
+      val (b1, _, d1) = graft.expressions.Nearest.twoNearest(p.features, bc.value)
       (p.id, p.label, b1, d1)
     }.toDF("vec_id", "label", "cluster", "dsq")
   }
@@ -408,7 +408,7 @@ object GngQueries {
         "key", "embedding", "label", "vec_id")
       val bc = s.sparkContext.broadcast(models.map { case (k, m) => k -> m.centroids })
       pts.map { p =>
-        val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value(p.key))
+        val (b1, _, d1) = graft.expressions.Nearest.twoNearest(p.features, bc.value(p.key))
         (p.id, p.key, b1, math.sqrt(d1))
       }.toDF("vec_id", "key", "cluster", "dist")
         .select(col("vec_id"), col("key"), col("cluster"), round(col("dist"), 4).as("dist"))

@@ -15,9 +15,11 @@ import org.apache.spark.sql.types._
   * `m` slice+argmin chains. */
 object PqOps {
   /** `array<int>` of `codebook.length` codes: per subspace, the index
-    * of the nearest codeword (squared Euclidean over that subspace's
-    * slice, strict `<` keeps the lowest index on ties — the same
-    * winner as [[VectorOpsImpl.nearestCentroid]]). */
+    * of the nearest codeword by squared Euclidean distance over that
+    * subspace's slice, in [[Nearest]]'s one order (Double's total
+    * order on the distance, NaN last, then the lower index — the
+    * winner [[VectorOpsImpl.nearestCentroid]] picks). A subspace with
+    * any codeword never yields -1. */
   def pqEncode(a: Column, codebook: Array[Array[Array[Double]]]): Column =
     graftx.column(PqEncode(graftx.expr(a), codebook))
 
@@ -50,29 +52,12 @@ object PqOpsImpl {
     if (v.length != m * sub)
       throw new IllegalArgumentException(
         s"pq_encode: vector length ${v.length} != $m subspaces x $sub dims")
-    val out = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      val words = cb(j)
-      val base = j * sub
-      var best = -1
-      var bd = Double.PositiveInfinity
-      var c = 0
-      while (c < words.length) {
-        val w = words(c)
-        if (w.length != sub)
-          throw new IllegalArgumentException(
-            s"pq_encode: codeword length ${w.length} != subspace width $sub")
-        var d = 0.0
-        var t = 0
-        while (t < sub) { val x = v(base + t) - w(t); d += x * x; t += 1 }
-        if (d < bd) { bd = d; best = c }
-        c += 1
-      }
-      out(j) = best
-      j += 1
-    }
-    new GenericArrayData(out)
+    cb.foreach(_.foreach { w =>
+      if (w.length != sub)
+        throw new IllegalArgumentException(
+          s"pq_encode: codeword length ${w.length} != subspace width $sub")
+    })
+    new GenericArrayData(Array.tabulate(m)(j => Nearest.nearest(v, j * sub, cb(j))))
   }
 
   def pqAdc(codes: ArrayData, lut: Array[Array[Double]]): Double = {
@@ -85,9 +70,9 @@ object PqOpsImpl {
     s
   }
 
-  /** LUT-free ADC: per subspace, squared distance of the query's slice
-    * to the SELECTED codeword (the t-loop [[graft.operators.Pq.adcLut]]
-    * runs for every codeword, here only for code_j), accumulated in
+  /** LUT-free ADC: per subspace, [[Nearest.dist2]] of the query's slice
+    * to the SELECTED codeword ([[graft.operators.Pq.adcLut]] takes it
+    * for every codeword, here only for code_j), accumulated in
     * subspace order — bit-identical to `adcLut` + [[pqAdc]]. */
   def pqAdcDirect(codes: ArrayData, q: ArrayData,
       cb: Array[Array[Array[Double]]]): Double = {
@@ -99,6 +84,7 @@ object PqOpsImpl {
     if (q.numElements() != m * sub)
       throw new IllegalArgumentException(
         s"pq_adc_direct: query length ${q.numElements()} != $m x $sub")
+    val v = q.toDoubleArray()
     var s = 0.0
     var j = 0
     while (j < m) {
@@ -107,12 +93,7 @@ object PqOpsImpl {
       if (code < 0 || code >= words.length)
         throw new IllegalArgumentException(
           s"pq_adc_direct: code $code out of range for subspace $j (k=${words.length})")
-      val w = words(code)
-      val base = j * sub
-      var d = 0.0
-      var t = 0
-      while (t < sub) { val x = q.getDouble(base + t) - w(t); d += x * x; t += 1 }
-      s += d
+      s += Nearest.dist2(v, j * sub, words(code))
       j += 1
     }
     s

@@ -26,15 +26,18 @@ object VectorOps {
     graftx.column(CosineSimilarity(graftx.expr(a), graftx.expr(b)))
   def norm2(a: Column): Column =
     graftx.column(L2Norm(graftx.expr(a)))
-  /** Index of the nearest centroid (squared Euclidean, lowest-index
-    * tie-break — same winner as [[graft.operators.GngOps.twoNearest]]). */
+  /** Index of the nearest centroid by squared Euclidean distance, in
+    * [[Nearest]]'s one order: Double's total order on the distance
+    * (NaN last), then the lower index. A non-empty matrix never yields
+    * -1; an empty one is an error. */
   def nearestCentroid(a: Column, centroids: Array[Array[Double]]): Column =
     graftx.column(NearestCentroid(graftx.expr(a), centroids))
-  /** Indices of the `nProbe` nearest centroids, ascending by squared
-    * Euclidean with lowest-index tie-break — the engine-side twin of
-    * [[graft.operators.Pq.probeLists]] (same distance loop, stable
-    * selection), so a batched query set derives its IVF probe sets in
-    * the plan instead of one driver scan per query. */
+  /** Indices of the `nProbe` nearest centroids in [[Nearest]]'s one
+    * order (Double's total order on the squared distance, NaN last,
+    * then the lower index; never -1 for a non-empty matrix) — the
+    * engine-side twin of the driver's probe sets, so a batched query
+    * set derives its IVF probe sets in the plan instead of one driver
+    * scan per query. */
   def nearestLists(a: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
     graftx.column(NearestLists(graftx.expr(a), centroids, nProbe))
   /** All LSH band signatures in one fused pass (see [[LshBandSignatures]]).
@@ -102,89 +105,35 @@ object VectorOpsImpl {
     }
     ab / (math.sqrt(aa) * math.sqrt(bb))
   }
-  /** Arg-min squared distance over the (broadcast-referenced) centroid
-    * matrix; strict `<` keeps the lowest index on ties — the same
-    * winner as GngOps.twoNearest's bmu1, so an IVF index built here is
-    * consistent with the G-Stream assignment that trained it. */
+  /** Index of the nearest centroid in [[Nearest]]'s order — the same
+    * winner as G-Stream's bmu1, so an IVF index built here is consistent
+    * with the G-Stream assignment that trained it. */
   def nearestCentroid(a: ArrayData, cents: Array[Array[Double]]): Int = {
     if (cents.isEmpty)
       throw new IllegalArgumentException(
         "nearest_centroid: empty centroid matrix (untrained model?) — " +
           "every row would silently land in list -1")
     val v = a.toDoubleArray()
-    var best = -1
-    var bd = Double.PositiveInfinity
-    var i = 0
-    while (i < cents.length) {
-      val c = cents(i)
-      if (c.length != v.length)
-        throw new IllegalArgumentException(
-          s"nearest_centroid: vector length ${v.length} != centroid length ${c.length}")
-      var d = 0.0
-      var k = 0
-      while (k < c.length) { val t = v(k) - c(k); d += t * t; k += 1 }
-      if (d < bd) { bd = d; best = i }
-      i += 1
-    }
-    best
+    checkCentroids(v, cents, "nearest_centroid")
+    Nearest.nearest(v, 0, cents)
   }
-  /** Top-`nProbe` nearest centroid indices, ascending (d, index) —
-    * strict-`<` selection per slot, so ties keep the lower index:
-    * the same ordering [[graft.operators.Pq.probeLists]]'s stable
-    * sortBy produces, with the same query-minus-centroid distance
-    * loop, so engine-side probe sets are bit-identical to the
-    * driver-side ones. */
+  /** The first `nProbe` centroid indices in [[Nearest]]'s order — the
+    * order of the driver-side probe sets ([[Nearest.nearestN]] on the
+    * query), so engine-side probe sets are bit-identical to them. */
   def nearestLists(a: ArrayData, cents: Array[Array[Double]], nProbe: Int): ArrayData = {
     if (cents.isEmpty)
       throw new IllegalArgumentException(
         "nearest_lists: empty centroid matrix (untrained model?)")
     val v = a.toDoubleArray()
-    val n = cents.length
-    val ds = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val c = cents(i)
+    checkCentroids(v, cents, "nearest_lists")
+    new GenericArrayData(Nearest.nearestN(v, cents, nProbe))
+  }
+  private def checkCentroids(v: Array[Double], cents: Array[Array[Double]], fn: String): Unit =
+    cents.foreach { c =>
       if (c.length != v.length)
         throw new IllegalArgumentException(
-          s"nearest_lists: vector length ${v.length} != centroid length ${c.length}")
-      var d = 0.0
-      var k = 0
-      while (k < c.length) { val t = v(k) - c(k); d += t * t; k += 1 }
-      ds(i) = d
-      i += 1
+          s"$fn: vector length ${v.length} != centroid length ${c.length}")
     }
-    val take = math.min(nProbe, n)
-    val out = new Array[Int](take)
-    val used = new Array[Boolean](n)
-    var r = 0
-    while (r < take) {
-      var best = -1
-      var bd = Double.PositiveInfinity
-      var j = 0
-      while (j < n) {
-        if (!used(j) && ds(j) < bd) { bd = ds(j); best = j }
-        j += 1
-      }
-      if (best < 0) {
-        // strict `<` against a +Infinity floor selects nothing, so the
-        // unused entries are exactly {+Inf, NaN}. The driver twin's
-        // sortBy uses Double's TOTAL order (+Inf before NaN, index
-        // order within each): take the lowest unused non-NaN (+Inf)
-        // index first, then the lowest unused (NaN) index.
-        var k2 = 0
-        while (best < 0 && k2 < n) {
-          if (!used(k2) && !java.lang.Double.isNaN(ds(k2))) best = k2
-          k2 += 1
-        }
-        k2 = 0
-        while (best < 0 && k2 < n) { if (!used(k2)) best = k2; k2 += 1 }
-      }
-      used(best) = true
-      out(r) = best
-      r += 1
-    }
-    new GenericArrayData(out)
-  }
   /** All `planes.length / nBits` LSH band signatures in ONE pass over
     * the embedding: band b's bit i is sign(v · planes(b·nBits+i) −
     * offset(b·nBits+i)) — bit-identical to evaluating
@@ -408,9 +357,7 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
 /** [[NearestCentroid]] generalized to the top `nProbe` lists —
   * per-query IVF probe selection as a plan expression (centroid
   * matrix as a plan constant), so a batched query DataFrame derives
-  * every probe set engine-side in one pass. Same distance loop and
-  * lowest-index tie semantics as [[graft.operators.Pq.probeLists]]
-  * (strict-`<` selection == stable sort on (d, index)). */
+  * every probe set engine-side in one pass, in [[Nearest]]'s order. */
 case class NearestLists(child: Expression, centroids: Array[Array[Double]],
     nProbe: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Dataset
 import scala.collection.immutable.SortedMap
 import scala.collection.mutable
+import graft.expressions.Nearest.twoNearest
 import graft.model.{NodeStats, Point, SeedWatch}
 
 /** The distributed half of the G-Stream micro-batch update: nearest-
@@ -16,7 +17,9 @@ import graft.model.{NodeStats, Point, SeedWatch}
   *    each partition (no per-point rows emitted, no shuffle at all —
   *    the reference paid a full `aggregateByKey` shuffle);
   *  - partials merge via `treeAggregate` (depth 2), so 10⁴ partitions
-  *    on a real cluster funnel through executors, not the driver.
+  *    on a real cluster funnel through executors, not the driver;
+  *  - each point's two winners come from [[graft.expressions.Nearest]]
+  *    (the reference's `(dist, idx)` order, batchStreamModel.scala:117-119).
   *
   * Per batch this is exactly one narrow stage over the points — the
   * only part of the pipeline that touches all the data, and it is
@@ -27,25 +30,6 @@ import graft.model.{NodeStats, Point, SeedWatch}
   * O(partitions × winners × dim + points), not O(N × dim).
   */
 object GngOps {
-
-  /** Top-2 nearest centroids by squared Euclidean distance; ties broken
-    * by lowest index (the reference's lexicographic (dist, idx) sort,
-    * batchStreamModel.scala:117-119). Returns (bmu1, bmu2, dist1²). */
-  def twoNearest(features: Array[Double], centroids: Array[Array[Double]]): (Int, Int, Double) = {
-    var b1 = -1; var b2 = -1
-    var d1 = Double.PositiveInfinity; var d2 = Double.PositiveInfinity
-    var i = 0
-    while (i < centroids.length) {
-      val c = centroids(i)
-      var d = 0.0
-      var k = 0
-      while (k < c.length) { val t = features(k) - c(k); d += t * t; k += 1 }
-      if (d < d1) { d2 = d1; b2 = b1; d1 = d; b1 = i }
-      else if (d < d2) { d2 = d; b2 = i }
-      i += 1
-    }
-    (b1, if (b2 >= 0) b2 else b1, d1)
-  }
 
   /** One winner node's running sums within a partition. */
   private final class Cell(dim: Int) extends Serializable {

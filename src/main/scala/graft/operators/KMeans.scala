@@ -29,7 +29,7 @@ import graft.functions.VectorFunctions.asDouble
   * Seeds are the k lowest-id vectors (k rows to the driver — the same
   * deterministic init family as [[Pq.train]]'s first-k-distinct).
   * Empty clusters keep their previous centroid. Assignment ties break
-  * to the lowest cluster index (the kernel's strict-< winner).
+  * to the lowest cluster index ([[graft.expressions.Nearest]]'s order).
   */
 object KMeans {
 

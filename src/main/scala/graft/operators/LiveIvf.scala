@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import graft.expressions.Nearest
 import graft.model.Point
 
 /** A LIVE IVF index whose coarse quantizer is an EVOLVING prototype
@@ -13,7 +14,7 @@ import graft.model.Point
   * Exactness argument (IncrementalIvfSpec asserts equality with full
   * re-assignment at every snapshot):
   *  - a cell row caches (node_id, dsq) where dsq is the EXACT squared
-  *    distance [[GngOps.twoNearest]] computed — distances to
+  *    distance [[Nearest.twoNearest]] computed — distances to
   *    prototypes that did not move stay valid bit-for-bit;
   *  - a vector must fully re-score ONLY when its own prototype moved
   *    or died (its cached dsq is stale) — these are exactly the
@@ -26,8 +27,9 @@ import graft.model.Point
   *    positions but preserve the relative order of survivors, and
   *    births append at the end, so the cached winner's
   *    lowest-index-tie claim over unchanged prototypes holds under
-  *    the new indexing, and the (dsq, index) lexicographic compare
-  *    against the challenger set reproduces the full argmin exactly.
+  *    the new indexing, and [[Nearest.before]] — the full argmin's
+  *    own (dsq, index) order, NaN included — against the challenger
+  *    set reproduces the full argmin exactly.
   *
   * Scale shape: the index (vec_id, features, node_id, dsq) is the
   * partition-resident state; every snapshot advance is ONE narrow map
@@ -49,15 +51,14 @@ object LiveIvf {
 
   /** Full assignment — the index BUILD (and the correctness reference
     * for [[advance]]): every vector's nearest prototype by
-    * [[GngOps.twoNearest]] (squared Euclidean, lowest index wins
-    * ties). */
+    * [[Nearest.twoNearest]]. */
   def assignFull(points: Dataset[Point], snap: Snapshot): Dataset[Cell] = {
     val sess = points.sparkSession
     import sess.implicits._
     val bcC = sess.sparkContext.broadcast(snap.map(_._2))
     val bcId = sess.sparkContext.broadcast(snap.map(_._1))
     points.map { p =>
-      val (b1, _, d1) = GngOps.twoNearest(p.features, bcC.value)
+      val (b1, _, d1) = Nearest.twoNearest(p.features, bcC.value)
       Cell(p.id, p.features, bcId.value(b1), d1)
     }
   }
@@ -72,8 +73,8 @@ object LiveIvf {
     val prevById = prev.iterator.map(p => p._1 -> p._2).toMap
     val nextIdxById = next.iterator.zipWithIndex.map { case ((id, _), i) => id -> i }.toMap
     // challengers: prototypes that moved or were born, in ascending
-    // NEXT-index order so twoNearest's first-strict-minimum tie-break
-    // picks the lowest new index among equals
+    // NEXT-index order so twoNearest's tie-break picks the lowest new
+    // index among equals
     val challengers = next.zipWithIndex.collect {
       case ((id, c), i) if !prevById.get(id).exists(java.util.Arrays.equals(_, c)) =>
         (id, i, c)
@@ -93,14 +94,13 @@ object LiveIvf {
     index.map { cell =>
       if (bcInvalid.value.contains(cell.node_id)) {
         // changed cell: the only rows that pay a full argmin
-        val (b1, _, d1) = GngOps.twoNearest(cell.features, bcNextC.value)
+        val (b1, _, d1) = Nearest.twoNearest(cell.features, bcNextC.value)
         Cell(cell.vec_id, cell.features, bcNextId.value(b1), d1)
       } else if (bcChalC.value.isEmpty) cell // nothing moved: identity
       else {
-        val (cb, _, cd) = GngOps.twoNearest(cell.features, bcChalC.value)
+        val (cb, _, cd) = Nearest.twoNearest(cell.features, bcChalC.value)
         val curIdx = bcNextIdx.value(cell.node_id)
-        // (dsq, index) lexicographic — exactly full argmin's order
-        if (cd < cell.dsq || (cd == cell.dsq && bcChalIdx.value(cb) < curIdx))
+        if (Nearest.before(cd, bcChalIdx.value(cb), cell.dsq, curIdx))
           Cell(cell.vec_id, cell.features, bcChalId.value(cb), cd)
         else cell
       }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.expressions.PqOps
+import graft.expressions.{Nearest, PqOps}
 import graft.functions.VectorFunctions.asDouble
 
 /** Product quantization — the memory side of 100 TB ANN. IVF (v06)
@@ -51,8 +51,8 @@ object Pq {
 
   /** Driver-side Lloyd's: first-k-distinct init (cycling if the sample
     * has fewer distinct points than k — the duplicates tie to the
-    * lower index and simply stay empty), strict-< lowest-index
-    * assignment (the [[graft.expressions.PqOpsImpl.pqEncode]] winner),
+    * lower index and simply stay empty), [[Nearest]] assignment (the
+    * [[graft.expressions.PqOpsImpl.pqEncode]] winner, never -1),
     * sample-order mean accumulation. Deterministic end to end. */
   private def lloyd(pts: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
     val distinct = scala.collection.mutable.LinkedHashSet.empty[Seq[Double]]
@@ -64,16 +64,7 @@ object Pq {
       val sums = Array.fill(k, sub)(0.0)
       val counts = new Array[Long](k)
       pts.foreach { p =>
-        var best = -1
-        var bd = Double.PositiveInfinity
-        var c = 0
-        while (c < k) {
-          var d = 0.0
-          var t = 0
-          while (t < sub) { val x = p(t) - cents(c)(t); d += x * x; t += 1 }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
+        val best = Nearest.nearest(p, 0, cents)
         var t = 0
         while (t < sub) { sums(best)(t) += p(t); t += 1 }
         counts(best) += 1
@@ -91,24 +82,16 @@ object Pq {
       codebook: Array[Array[Array[Double]]]): DataFrame =
     df.select(idCol.as("id"), PqOps.pqEncode(asDouble(vecCol), codebook).as("codes"))
 
-  /** The query-side ADC lookup table: lut(j)(c) = squared distance of
-    * the query's subspace-j slice to codeword c, accumulated in the
-    * same element order as the encode kernel (and the oracle's
-    * left-associated SQL chain). */
+  /** The query-side ADC lookup table: lut(j)(c) = [[Nearest.dist2]] of
+    * the query's subspace-j slice to codeword c — the encode kernel's
+    * distance (and the oracle's left-associated SQL chain). */
   def adcLut(codebook: Array[Array[Array[Double]]],
       query: Array[Double]): Array[Array[Double]] = {
     val m = codebook.length
     val sub = codebook(0)(0).length
     require(query.length == m * sub,
       s"pq lut: query length ${query.length} != $m x $sub")
-    Array.tabulate(m) { j =>
-      codebook(j).map { w =>
-        var d = 0.0
-        var t = 0
-        while (t < sub) { val x = query(j * sub + t) - w(t); d += x * x; t += 1 }
-        d
-      }
-    }
+    Array.tabulate(m)(j => codebook(j).map(Nearest.dist2(query, j * sub, _)))
   }
 
   /** Approximate top-k by ADC distance (ascending; ties to the lower
@@ -128,19 +111,6 @@ object Pq {
       .limit(k)
   }
 
-  /** Query-side probe selection, shared by the online and served
-    * IVFADC paths: the `nProbe` nearest coarse centroids to the query
-    * (squared euclid, ties to the lower list) — a driver-side scan of
-    * the ≤maxNodes centroid array, zero jobs. */
-  def probeLists(centroids: Array[Array[Double]], query: Array[Double],
-      nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < c.length) { val t = query(j) - c(j); d += t * t; j += 1 }
-      (d, i)
-    }.sortBy(_._1).take(nProbe).map(_._2).toSeq
-
   /** IVFADC — the FAISS composition of the two ANN halves this library
     * already has: IVF (coarse centroids, [[Similarity.ivfIndex]])
     * prunes WHICH vectors the query scans to `nProbe` inverted lists;
@@ -157,7 +127,7 @@ object Pq {
       query: Array[Double], k: Int, nProbe: Int = 2): DataFrame = {
     val lut = adcLut(codebook, query)
     Similarity.ivfIndex(df, vecCol, idCol, centroids)
-      .filter(col("list").isin(probeLists(centroids, query, nProbe): _*))
+      .filter(col("list").isin(Nearest.nearestN(query, centroids, nProbe).toSeq: _*))
       .select(col("id"),
         round(PqOps.pqAdc(
           PqOps.pqEncode(graft.functions.VectorFunctions.asDouble(col("emb")), codebook),
@@ -252,7 +222,7 @@ object Pq {
   def ivfPqKnnOnIndex(index: DataFrame,
       centroids: Array[Array[Double]], codebook: Array[Array[Array[Double]]],
       query: Array[Double], k: Int, nProbe: Int = 2): DataFrame =
-    adcRank(index.filter(col("list").isin(probeLists(centroids, query, nProbe): _*)),
+    adcRank(index.filter(col("list").isin(Nearest.nearestN(query, centroids, nProbe).toSeq: _*)),
       codebook, query, k)
 
   /** The shared ADC scoring tail: stored codes → m LUT lookups →
@@ -334,7 +304,8 @@ object Pq {
   def ivfPqKnnOnIndexLive(index: DataFrame,
       centroids: Array[Array[Double]], codebook: Array[Array[Array[Double]]],
       query: Array[Double], k: Int, nProbe: Int = 2): DataFrame = {
-    val probed = index.filter(col("list").isin(probeLists(centroids, query, nProbe): _*))
+    val probed =
+      index.filter(col("list").isin(Nearest.nearestN(query, centroids, nProbe).toSeq: _*))
     adcRank(ivfPqLive(probed), codebook, query, k)
   }
 

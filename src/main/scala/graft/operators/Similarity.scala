@@ -701,19 +701,15 @@ object Similarity {
       graft.expressions.VectorOps.nearestCentroid(asDouble(embCol), centroids).as("list"))
 
   /** IVF approximate kNN: rank by exact cosine within the `nProbe`
-    * lists whose centroids are nearest the query. Recall grows with
+    * lists whose centroids are nearest the query (in
+    * [[graft.expressions.Nearest]]'s order). Recall grows with
     * nProbe; nProbe = number of lists gives exact brute force. */
   def ivfKnn(df: DataFrame, embCol: Column, idCol: Column,
       centroids: Array[Array[Double]], query: Array[Double],
       k: Int, nProbe: Int = 2): DataFrame = {
-    val probed = centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < c.length) { val t = query(j) - c(j); d += t * t; j += 1 }
-      (d, i)
-    }.sortBy(_._1).take(nProbe).map(_._2)
     ivfIndex(df, embCol, idCol, centroids)
-      .filter(col("list").isin(probed.toSeq: _*))
+      .filter(col("list").isin(
+        graft.expressions.Nearest.nearestN(query, centroids, nProbe).toSeq: _*))
       .select($"id", round(cosineSimilarity(asDouble($"emb"),
         array(query.toIndexedSeq.map(lit): _*)), 4).as("score"))
       .orderBy($"score".desc, $"id")

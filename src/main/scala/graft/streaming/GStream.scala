@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.{GngModel, GngParams, NodeStats, Point}
@@ -139,17 +139,22 @@ object GStream {
     // is EXACT — an all-numeric line of the wrong width would otherwise
     // build a wrong-dimension Point and crash the distance loop
     // downstream, the same one-poison-line fatality in a new costume.
+    // A NaN or ±Infinity feature is dropped too (it would poison the
+    // winning prototype), and so is a label or id that does not fit its
+    // type (NaN, 3e10 as an int): try_cast yields NULL where cast throws.
     val arityOk =
       if (expectedDim > 0) size(col("arr")) === expectedDim + 2
       else size(col("arr")) >= 3
+    val finite = (x: Column) => x.isNotNull && !isnan(x) && abs(x) < Double.PositiveInfinity
     raw
       .select(split(col("value"), sepRe).as("parts"))
       .select(expr("transform(parts, t -> try_cast(t AS DOUBLE))").as("arr"))
-      .filter(arityOk && forall(col("arr"), x => x.isNotNull))
+      .filter(arityOk)
       .select(
         expr("slice(arr, 1, size(arr) - 2)").as("features"),
-        element_at(col("arr"), -2).cast("int").as("label"),
-        element_at(col("arr"), -1).cast("long").as("id"))
+        element_at(col("arr"), -2).try_cast("int").as("label"),
+        element_at(col("arr"), -1).try_cast("long").as("id"))
+      .filter(forall(col("features"), finite) && col("label").isNotNull && col("id").isNotNull)
       .as[Point]
   }
 

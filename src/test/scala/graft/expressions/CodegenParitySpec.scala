@@ -206,10 +206,10 @@ class CodegenParitySpec extends AnyFunSuite with SparkTestSupport {
     val (g, i) = bothWays(vecs.select(col("id"),
       graft.expressions.VectorOps.nearestCentroid(col("a"), cents)))
     assert(g === i)
-    // same winner as the GNG assignment kernel (strict <, lowest index)
+    // same winner as the one nearest-centroid kernel G-Stream assigns with
     g.foreach { r =>
       val emb = if (r.getLong(0) == 1L) Array(1.0, 2.0, 3.0) else Array(0.0, 0.0, 0.0)
-      assert(r.getInt(1) === graft.operators.GngOps.twoNearest(emb, cents)._1)
+      assert(r.getInt(1) === Nearest.nearest(emb, 0, cents))
     }
   }
 
@@ -266,7 +266,7 @@ class CodegenParitySpec extends AnyFunSuite with SparkTestSupport {
 
   test("PqEncode/PqAdc: codegen == interpreted") {
     // 3-d vectors → 3 subspaces of 1 dim, 2 codewords each (incl. a tie
-    // at 0.5 between codewords 0.0 and 1.0 → strict < keeps index 0)
+    // at 0.5 between codewords 0.0 and 1.0 → the lower index 0 wins)
     val cb = Array.fill(3)(Array(Array(0.0), Array(1.0)))
     val lut = Array.fill(3)(Array(0.25, 4.0))
     val (g, i) = bothWays(vecs.select(col("id"),
@@ -286,8 +286,8 @@ class CodegenParitySpec extends AnyFunSuite with SparkTestSupport {
     assert(g === i)
     g.foreach { r =>
       val emb = if (r.getLong(0) == 1L) Array(1.0, 2.0, 3.0) else Array(0.0, 0.0, 0.0)
-      // same probe set as the driver-side selection (stable (d, index))
-      assert(r.getSeq[Int](1) === graft.operators.Pq.probeLists(cents, emb, 2),
+      // same probe set as the driver-side selection
+      assert(r.getSeq[Int](1) === Nearest.nearestN(emb, cents, 2).toSeq,
         s"id=${r.getLong(0)}")
       // direct ADC == LUT build + lookup (bit-identical IEEE adds)
       val codes = Array.tabulate(3)(j =>

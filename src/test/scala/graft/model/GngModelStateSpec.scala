@@ -239,7 +239,7 @@ class GngModelStateSpec extends AnyFunSuite {
       val cents = m.centroids
       val idAt = m.nodes.map(_.id).toArray
       for (p <- pts) {
-        val w = idAt(GngOps.twoNearest(p.features, cents)._1)
+        val w = idAt(graft.expressions.Nearest.twoNearest(p.features, cents)._1)
         sets(w) = sets.getOrElse(w, Set.empty) + p.id
         wins += w -> p.id
       }

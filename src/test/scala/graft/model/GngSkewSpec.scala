@@ -2,6 +2,7 @@ package graft.model
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSupport
+import graft.expressions.Nearest
 import graft.streaming.GStream
 
 /** Hot-cluster skew stress for the full GNG loop — the reference's own
@@ -74,7 +75,7 @@ class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
     val cents = Array(Array(100.0, 100.0), Array(400.0, 100.0), Array(100.0, 400.0))
     val pts = skewed(4000)
     // watch point 0 as its own winner's seed: one hit, on the hot node
-    val seeds = SeedWatch(Array(GngOps.twoNearest(pts(0).features, cents)._1), Array(pts(0).id))
+    val seeds = SeedWatch(Array(Nearest.twoNearest(pts(0).features, cents)._1), Array(pts(0).id))
     val dist = GngOps.assignAggregate(
       spark.createDataset(pts).repartition(32), cents, seeds)
     val local = GngOps.assignAggregateLocal(pts, cents, seeds)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSupport
+import graft.expressions.Nearest
 import graft.model.{Point, SeedWatch}
 
 /** The distributed assign+aggregate step: top-2 selection semantics and
@@ -14,14 +15,14 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
   private val cents = Array(Array(0.0, 0.0), Array(10.0, 0.0), Array(0.0, 10.0))
 
   test("twoNearest picks the two closest with lowest-index tie-break") {
-    val (b1, b2, d1) = GngOps.twoNearest(Array(1.0, 0.0), cents)
+    val (b1, b2, d1) = Nearest.twoNearest(Array(1.0, 0.0), cents)
     assert((b1, b2) === (0, 1))
     assert(d1 === 1.0)
   }
 
   test("twoNearest with equal distances keeps first-seen (reference sort order)") {
     val eq = Array(Array(1.0, 0.0), Array(-1.0, 0.0))
-    val (b1, b2, _) = GngOps.twoNearest(Array(0.0, 0.0), eq)
+    val (b1, b2, _) = Nearest.twoNearest(Array(0.0, 0.0), eq)
     assert((b1, b2) === (0, 1))
   }
 
@@ -58,8 +59,8 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
     }
     // point 1 watched as its own winner's seed (a hit), point 2 as
     // another node's (a miss)
-    val w1 = GngOps.twoNearest(pts(0).features, cents)._1
-    val w2 = GngOps.twoNearest(pts(1).features, cents)._1
+    val w1 = Nearest.twoNearest(pts(0).features, cents)._1
+    val w2 = Nearest.twoNearest(pts(1).features, cents)._1
     val seeds = SeedWatch(Array(w1, (w2 + 1) % cents.length), Array(1L, 2L))
     val dist = GngOps.assignAggregate(spark.createDataset(pts).repartition(5), cents, seeds)
     val local = GngOps.assignAggregateLocal(pts, cents, seeds)

@@ -38,6 +38,27 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkTestSupport {
     1L -> Array(0.0, 0.0), 2L -> Array(1.0, 0.0), 3L -> Array(5.0, 0.0),
     4L -> Array(6.0, 0.0), 5L -> Array(10.0, 0.0))
 
+  test("an index holding NaN and overflowing rows advances exactly like full re-assignment") {
+    // every distance of row 9 is NaN and of row 10 +Infinity: both sit in
+    // the lowest-index cell, and a move, a birth and a death keep them
+    // where full re-assignment puts them
+    val vs = pts(vectors ++ Seq(9L -> Array(Double.NaN, 0.0), 10L -> Array(1e200, 0.0)): _*)
+    def bitsOf(ds: org.apache.spark.sql.Dataset[Cell]) =
+      ds.collect().map(c => c.vec_id -> (c.node_id, java.lang.Double.doubleToLongBits(c.dsq))).toMap
+    val steps = Seq(
+      snap(7 -> Array(0.0, 0.0), 8 -> Array(6.0, 0.0)),
+      snap(7 -> Array(0.0, 0.0), 8 -> Array(6.0, 0.0), 9 -> Array(10.0, 0.0)),
+      snap(7 -> Array(1.0, 0.0), 8 -> Array(6.0, 0.0), 9 -> Array(10.0, 0.0)),
+      snap(8 -> Array(6.0, 0.0), 9 -> Array(10.0, 0.0)))
+    var index = LiveIvf.assignFull(vs, steps.head)
+    for (Seq(prev, next) <- steps.sliding(2)) {
+      index = LiveIvf.advance(index, prev, next)
+      val full = bitsOf(LiveIvf.assignFull(vs, next))
+      assert(bitsOf(index) === full)
+      assert(full(9L)._1 === next(0)._1 && full(10L)._1 === next(0)._1)
+    }
+  }
+
   test("identity: nothing moved → assignments and cached distances unchanged") {
     val s = snap(7 -> Array(0.0, 0.0), 8 -> Array(6.0, 0.0))
     val m = assertAdvanceEqualsFull(vectors, s, s)

@@ -369,8 +369,30 @@ class PqSpec extends AnyFunSuite with SparkTestSupport {
       val nProbe = 1 + rng.nextInt(n + 1)
       val got = graft.expressions.VectorOpsImpl
         .nearestLists(new GenericArrayData(q), cents, nProbe).toIntArray.toSeq
-      assert(got === Pq.probeLists(cents, q, nProbe), s"trial $trial")
+      assert(got === graft.expressions.NearestOracle.ranked(q, 0, cents).take(nProbe).map(_._2),
+        s"trial $trial")
     }
+  }
+
+  /** anchored(n) plus row 1000, whose first coordinate is NaN */
+  private def withNaNRow(n: Int) =
+    anchored(n).union(Seq((1000L, Seq(Double.NaN) ++ Seq.fill(7)(1.0))).toDF("vec_id", "embedding"))
+
+  test("train finishes on a sample with a NaN coordinate") {
+    val cb = Pq.train(withNaNRow(30), col("embedding"), col("vec_id"), m = 2, k = 4, iters = 3)
+    assert(cb.length === 2 && cb.forall(_.length === 4))
+  }
+
+  test("pq_encode then pq_adc finish on a row with a NaN coordinate") {
+    val cb = Pq.train(anchored(30), col("embedding"), col("vec_id"), m = 2, k = 4, iters = 3)
+    val lut = Pq.adcLut(cb, Array.tabulate(8)(_.toDouble))
+    val got = Pq.encode(withNaNRow(30), col("embedding"), col("vec_id"), cb)
+      .filter(col("id") === 1000L)
+      .select(col("codes"), graft.expressions.PqOps.pqAdc(col("codes"), lut))
+      .collect()
+    assert(got.length === 1)
+    // the NaN subspace goes to codeword 0, never -1
+    assert(got(0).getSeq[Int](0).head === 0)
   }
 
   test("adc lut + kernel equal driver-side table lookups") {

@@ -31,6 +31,12 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
       "1.0,2.0",       // arity 2: would have read label=1, id=2 (!)
       "",              // empty
       "3.0,4.0,x,9",   // non-numeric label slot
+      "NaN,0.0,0,3",   // non-finite feature: would poison its winner
+      "Infinity,0.0,0,4",
+      "1.0,2.0,NaN,7", // label / id that a cast cannot fit: CAST_OVERFLOW
+      "1.0,2.0,3e10,8",
+      "1.0,2.0,0,1e200",
+      "1.0,2.0,0,NaN",
       "5.0,6.0,1,2")   // good
     val got = GStream.parseCsvPoints(lines.toDF("value")).collect()
       .map(p => (p.features.toSeq, p.label, p.id)).sortBy(_._3)
@@ -109,6 +115,18 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     }.min
     assert(nearest(0, 0) < 15.0)
     assert(nearest(100, 100) < 15.0)
+  }
+
+  test("fitChunkedLocal absorbs a point whose every distance overflows: it goes to node 0") {
+    val poison = Point(Array(1e200, 0.0), 0, 41L)
+    // chunk 0 (ids ≡ 0 mod 4) runs as kk = 1; chunk 1 holds the point
+    var before: Array[Array[Double]] = null
+    val m = GStream.fitChunkedLocal((clusterPoints(40) :+ poison).toArray, GngParams(), 4,
+      (kk, model) => if (kk == 1) before = model.centroids.map(_.clone()))
+    assert(m.nodeCount >= 2)
+    val stats = graft.operators.GngOps.assignAggregateLocal(Seq(poison), before)
+    assert(stats.map(_._1).toSeq === Seq(0))
+    assert(stats(0)._2.votes.toSeq === Seq(1 -> 1L))
   }
 
   test("parseCsvPoints parses the reference CSV shape (features..., label, id)") {
