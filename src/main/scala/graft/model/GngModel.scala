@@ -65,7 +65,7 @@ object SeedWatch {
   *
   * Semantics ported from SURVEY.md §2.9 T2-T10 / §3.3 with the §7.4
   * decisions: canonical stats order (sorted by node index), monotonic
-  * node ids, `upGlobalErrors` as documented no-op.
+  * node ids, and no A5 (`upGlobalErrors`: its guard can never hold).
   */
 final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
 
@@ -140,7 +140,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     updateRule(stats)
     removeOldEdges()
     removeIsolatedNodes()
-    upGlobalErrors(stats)
+    // A5 (upGlobalErrors) is omitted: its guard can never hold (SURVEY §7.4.3)
     if (kk % params.fadeEvery == 0 && nbNodesPre > params.fadeMinNodes) fading()
     removeIsolatedNodes()
     if (kk % params.growEvery == 0 && nbNodesPre <= params.maxNodes)
@@ -226,12 +226,6 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       i -= 1
     }
   }
-
-  /** A5: effectively a no-op in the reference — its guard
-    * `errors.size < er._1` can never hold for valid node indices
-    * (batchStreamModel.scala:254-260, SURVEY §7.4.3). Errors are really
-    * accumulated in updateRule. Kept for structural fidelity. */
-  private def upGlobalErrors(stats: Array[(Int, NodeStats)]): Unit = ()
 
   /** T8: evict THE single min-weight node if its weight undercuts
     * minWeight; archive to outdatedNodes (batchStreamModel.scala:309-327). */

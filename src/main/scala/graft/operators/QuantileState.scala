@@ -30,7 +30,7 @@ object QuantileState {
       eps: Double = 0.001): State = {
     require(eps > 0 && eps < 0.5, s"quantileState: eps out of range: $eps")
     val rows = df.select(col(keyCol).cast("string"), col(valueCol).cast("double")).rdd
-    // per-partition MUTABLE accumulator (the GngOps/BloomPrune
+    // per-partition MUTABLE accumulator (the BloomPrune
     // treeAggregate idiom): an immutable-map `updated` per row would
     // allocate an O(log n) node path for every input value
     rows.treeAggregate(scala.collection.mutable.HashMap.empty[String, QuantileSummaries])(

@@ -11,11 +11,13 @@ import graft.operators.{EpochState, GngOps}
 /** G-Stream: micro-batching Growing Neural Gas over Spark.
   *
   * Batch and streaming entry points share one training step: assign+
-  * aggregate ([[GngOps.assignAggregate]] or its driver-local twin)
-  * feeding the guarded driver-side graph update ([[GngModel.step]]),
-  * from a model built by [[GngModel.bootstrap]] — the Structured
-  * Streaming re-expression of the reference's DStream `foreachRDD` loop
-  * (batchStream.scala:82-118; SURVEY §2.9 T1/T2).
+  * aggregate feeding the guarded driver-side graph update
+  * ([[GngModel.step]]), from a model built by [[GngModel.bootstrap]] —
+  * the Structured Streaming re-expression of the reference's DStream
+  * `foreachRDD` loop (batchStream.scala:82-118; SURVEY §2.9 T1/T2).
+  * A streamed batch runs exactly one Spark job,
+  * [[GngOps.assignAggregate]]; a fit whose input fits on the driver
+  * runs its driver-local twin.
   */
 object GStream {
 
@@ -37,21 +39,12 @@ object GStream {
   def bootstrap(points: Dataset[Point], params: GngParams): GngModel =
     GngModel.bootstrap(points.orderBy(col("id")).limit(2).collect(), params)
 
-  /** Inputs at or below this many rows take the driver-local update path
-    * (no per-batch Spark job). The GNG stats step is O(rows × nodes ×
-    * dim) driver work — trivially cheap at this size — while a Spark job
-    * costs fixed scheduling per micro-batch (the round-2 measured
-    * bottleneck: 92 jobs ≈ 100+ ms each of pure overhead). Above the
-    * threshold the distributed path is identical in semantics
-    * (GngOpsSpec proves the two paths equal). */
+  /** [[fitChunked]] inputs at or below this many rows run the whole
+    * chunk loop driver-local: one collect job instead of one Spark job
+    * per chunk. The GNG stats step is O(rows × nodes × dim) driver work,
+    * trivially cheap at this size. Above it the distributed path is
+    * identical in semantics (GngOpsSpec proves the two paths equal). */
   val localPathMaxRows: Int = 100000
-
-  /** Companion BYTE bound for probes that ship row data: the streaming
-    * fast-path probe collects up to this many CELLS (rows × dim), so the
-    * driver never holds more than ~16 MB of probed points regardless of
-    * embedding width (100k 64-d points would be ~50 MB under a
-    * rows-only cap). */
-  val localPathMaxCells: Long = 2L * 1000 * 1000
 
   /** Deterministic batch-mode training: chunk `points` into `nChunks`
     * micro-batches by `id % nChunks` and run the full step per chunk.
@@ -139,13 +132,18 @@ object GStream {
     // is EXACT — an all-numeric line of the wrong width would otherwise
     // build a wrong-dimension Point and crash the distance loop
     // downstream, the same one-poison-line fatality in a new costume.
-    // A NaN or ±Infinity feature is dropped too (it would poison the
-    // winning prototype), and so is a label or id that does not fit its
-    // type (NaN, 3e10 as an int): try_cast yields NULL where cast throws.
+    // A label or id that does not fit its type (NaN, 3e10 as an int) is
+    // dropped too: try_cast yields NULL where cast throws.
     val arityOk =
       if (expectedDim > 0) size(col("arr")) === expectedDim + 2
       else size(col("arr")) >= 3
-    val finite = (x: Column) => x.isNotNull && !isnan(x) && abs(x) < Double.PositiveInfinity
+    // Every feature within 1e100 keeps squared distances, and the error
+    // sums built from them, far from overflow: one 1e200 feature would
+    // overflow every distance, make its winner's error +Infinity, and T9
+    // would grow from that node at every growth step. The one comparison
+    // also drops NULL (it yields NULL), NaN (Spark orders NaN above every
+    // number) and ±Infinity.
+    val bounded = (x: Column) => abs(x) <= 1e100
     raw
       .select(split(col("value"), sepRe).as("parts"))
       .select(expr("transform(parts, t -> try_cast(t AS DOUBLE))").as("arr"))
@@ -154,7 +152,7 @@ object GStream {
         expr("slice(arr, 1, size(arr) - 2)").as("features"),
         element_at(col("arr"), -2).try_cast("int").as("label"),
         element_at(col("arr"), -1).try_cast("long").as("id"))
-      .filter(forall(col("features"), finite) && col("label").isNotNull && col("id").isNotNull)
+      .filter(forall(col("features"), bounded) && col("label").isNotNull && col("id").isNotNull)
       .as[Point]
   }
 
@@ -212,18 +210,7 @@ object GStream {
     val timeUpdates = scala.collection.mutable.ArrayBuffer[Long](0L)
     def applyBatch(batch: Dataset[Point], batchId: Long, query: java.util.UUID): Unit = {
       val t0 = System.currentTimeMillis()
-      // small batches (the common micro-batch case) collect + update
-      // locally — no Spark job beyond the probe; the limit-probe IS
-      // the whole batch when it comes back under the threshold. The
-      // cap is dimension-aware (localPathMaxCells) so the one-job
-      // probe ships a bounded number of BYTES, not just rows — a
-      // wide-embedding stream can't balloon the driver heap.
-      val cap = math.min(localPathMaxRows.toLong,
-        localPathMaxCells / math.max(model.dim, 1)).toInt
-      val probe = batch.limit(cap + 1).collect()
-      val stats =
-        if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids, model.seedWatch)
-        else GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
+      val stats = GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
       val next = model.step(stats, kk)
       if (next != kk) {
         kk = next

@@ -11,9 +11,9 @@ import graft.streaming.GStream
   * ones. Fading (kk%3 min-weight eviction) and growth (kk%5 max-error
   * insertion) must still converge to a model that covers BOTH regimes,
   * the adjacency/age/weight state must stay well-formed, and the
-  * distributed assign pass must stay bit-compatible with the local
-  * reference under maximal assignment skew at treeAggregate depth 2
-  * (>16 partitions — the funnel the 1000-executor deployment uses). */
+  * distributed assign pass must match the local reference under
+  * maximal assignment skew across 32 partitions, and replay bit for bit
+  * over the same partitions. */
 class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
 
   private val hot = (100.0, 100.0)
@@ -67,17 +67,17 @@ class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
       "all nodes collapsed onto the hot cluster")
   }
 
-  test("assignAggregate under maximal skew at depth 2 equals the local reference") {
+  test("assignAggregate under skew across 32 partitions equals the local reference") {
     import spark.implicits._
     import graft.operators.GngOps
     // centroids such that ~all points elect node 0 — the worst-case
-    // reducer-hot-key shape; 32 partitions forces the depth-2 funnel
+    // reducer-hot-key shape, spread over 32 partials
     val cents = Array(Array(100.0, 100.0), Array(400.0, 100.0), Array(100.0, 400.0))
     val pts = skewed(4000)
     // watch point 0 as its own winner's seed: one hit, on the hot node
     val seeds = SeedWatch(Array(Nearest.twoNearest(pts(0).features, cents)._1), Array(pts(0).id))
-    val dist = GngOps.assignAggregate(
-      spark.createDataset(pts).repartition(32), cents, seeds)
+    val ds = spark.createDataset(pts).repartition(32)
+    val dist = GngOps.assignAggregate(ds, cents, seeds)
     val local = GngOps.assignAggregateLocal(pts, cents, seeds)
     assert(local.map(_._2.nAssigned).sum === pts.length - 1L)
     assert(dist.map(_._1).toSeq === local.map(_._1).toSeq)
@@ -89,6 +89,13 @@ class GngSkewSpec extends AnyFunSuite with SparkTestSupport {
       assert(math.abs(s1.errSum - s2.errSum) < 1e-6)
       s1.vecSum.zip(s2.vecSum).foreach { case (x, y) => assert(math.abs(x - y) < 1e-6) }
     }
+    // the partials merge in partition order: a second run over the same
+    // 32 partitions gives the same bits
+    def bits(stats: Array[(Int, NodeStats)]) = stats.toSeq.map { case (k, st) =>
+      (k, st.votes, java.lang.Double.doubleToLongBits(st.errSum),
+        st.vecSum.toSeq.map(java.lang.Double.doubleToLongBits), st.count, st.nAssigned)
+    }
+    assert(bits(GngOps.assignAggregate(ds, cents, seeds)) === bits(dist))
     // the skew really is extreme: node 0 owns ≥ 90% of the batch
     val hotCount = dist.find(_._1 == 0).map(_._2.count).getOrElse(0L)
     assert(hotCount >= 3600, s"fixture lost its skew: $hotCount/4000")

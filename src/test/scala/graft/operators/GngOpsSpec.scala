@@ -6,7 +6,7 @@ import graft.expressions.Nearest
 import graft.model.{Point, SeedWatch}
 
 /** The distributed assign+aggregate step: top-2 selection semantics and
-  * the combiner laws `treeAggregate` relies on (the same contract the
+  * the combiner laws the partition merge relies on (the same contract the
   * reference's `mergeContribs` assumes for `aggregateByKey` — SURVEY §5).
   * Property-style checks use a seeded RNG (scalatestplus-scalacheck is
   * not in the offline cache). */
@@ -89,6 +89,17 @@ class GngOpsSpec extends AnyFunSuite with SparkTestSupport {
       }
     }
     assert(statsKey(dist) === statsKey(local))
+  }
+
+  test("assignAggregate rejects a wrongly typed column, naming the point builders") {
+    import org.apache.spark.sql.functions.{array, lit}
+    import spark.implicits._
+    // `.as[Point]` upcasts an int id for its own reads, but the planned
+    // rows the assign folds still hold an int
+    val intIds = spark.range(3).select(array(lit(1.0)).as("features"), lit(0).as("label"),
+      lit(7).as("id")).as[Point]
+    val e = intercept[IllegalArgumentException](GngOps.assignAggregate(intIds, cents))
+    assert(e.getMessage.contains("GStream.toPoints"), e.getMessage)
   }
 
   test("assignAggregate on empty centroids or empty batch") {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import graft.SparkTestSupport
-import graft.model.{GngParams, Point}
+import graft.model.{GngModel, GngParams, Point}
 
 /** End-to-end G-Stream: batch (fitChunked) determinism and the
   * Structured Streaming file-source path (trainStreaming), mirroring the
@@ -37,6 +37,7 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
       "1.0,2.0,3e10,8",
       "1.0,2.0,0,1e200",
       "1.0,2.0,0,NaN",
+      "1e200,0.0,0,401", // finite, but every distance from it overflows
       "5.0,6.0,1,2")   // good
     val got = GStream.parseCsvPoints(lines.toDF("value")).collect()
       .map(p => (p.features.toSeq, p.label, p.id)).sortBy(_._3)
@@ -97,16 +98,7 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     val params = GngParams()
     val m1 = GStream.fitChunked(pts, params, nChunks = 10)
     val m2 = GStream.fitChunked(pts, params, nChunks = 10)
-    assert(m1.nodeCount === m2.nodeCount)
-    // ε-compare: treeAggregate partial-merge order varies run to run, so
-    // centroid BITS may differ by an ulp (SURVEY §7.4.2); the graph
-    // structure and values must agree to float tolerance
-    m1.nodes.zip(m2.nodes).foreach { case (a, b) =>
-      a.centroid.zip(b.centroid).foreach { case (x, y) =>
-        assert(math.abs(x - y) < 1e-9, s"centroid drift: $x vs $y")
-      }
-    }
-    assert(m1.edgeLines === m2.edgeLines)
+    assert(GngModel.toBytes(m1, 0).toSeq === GngModel.toBytes(m2, 0).toSeq)
     // growth ran (kk=5,10): 2 + 2*3 = 8 nodes unless pruned
     assert(m1.nodeCount > 2)
     // some centroid near each cluster center
@@ -129,6 +121,19 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     assert(stats(0)._2.votes.toSeq === Seq(1 -> 1L))
   }
 
+  test("a parsed 1e200 feature cannot take over growth: the fit stays finite") {
+    import spark.implicits._
+    // if kept, every distance from it overflows: its winner's error
+    // becomes +Infinity and T9 grows from that node at every growth step
+    val lines = clusterPoints(400).map(p => s"${p.features(0)},${p.features(1)},${p.label},${p.id}") :+
+      "1e200,0.0,0,401"
+    val pts = GStream.parseCsvPoints(lines.toDF("value")).collect()
+    val m = GStream.fitChunkedLocal(pts, GngParams(), 10)
+    assert(m.nodeCount > 2)
+    m.nodes.foreach(p => assert(p.centroid.forall(java.lang.Double.isFinite), s"node ${p.id}"))
+    assert(m.errors.forall(java.lang.Double.isFinite), m.errors)
+  }
+
   test("parseCsvPoints parses the reference CSV shape (features..., label, id)") {
     import spark.implicits._
     val df = Seq("1.5,2.5,0,7", "3.0,4.0,1,8").toDF("value")
@@ -137,12 +142,15 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     assert(pts(1).features.toSeq === Seq(3.0, 4.0) && pts(1).label === 1 && pts(1).id === 8L)
   }
 
-  test("trainStreaming: a batch wider than the probe cap takes the distributed step, equal to the local one") {
-    // 40,000-d rows: the probe cap is localPathMaxCells / dim = 50 rows,
-    // so each 60-point batch runs GngOps.assignAggregate, not the local twin
+  test("trainStreaming: one job per batch, byte-equal to the local replay") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
+    // wide rows: 40,000-d, 60 points a batch, ~4.8 MB a file. Each file
+    // is one batch, and with minPartitionNum 1 the file source reads it
+    // as one partition (by default it splits to fill the 4 cores), so
+    // the batch's one partial is the local replay's sum
     val dim = 40000
     val perBatch = 60
-    assert(perBatch > GStream.localPathMaxCells / dim)
     // small-integer coordinates keep the CSV compact and parse exactly
     def point(i: Int): Point = {
       val base = if (i % 2 == 0) 0 else 6
@@ -161,45 +169,47 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     val seeds = Seq(point(1001), point(1002))
     val params = GngParams(growEvery = 2)
 
-    // the distributed step is one treeAggregate stage per batch; the
-    // local one runs no job beyond the probe. Stage names carry the
-    // query's call site, so count by the RDDs' operation scope.
-    val treeAggregates = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.scope.exists(_.name == "treeAggregate")))
-          treeAggregates.incrementAndGet()
+    // Spark jobs grouped by the micro-batch that ran them, with each
+    // job's task count. Listener events arrive asynchronously and in
+    // order, so a marker job run after the stream stops flushes them.
+    val sc = spark.sparkContext
+    val jobs = scala.collection.mutable.Map.empty[String, Seq[Int]]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty(MicroBatchExecution.BATCH_ID_KEY))).foreach { id =>
+          jobs.synchronized(jobs(id) = jobs.getOrElse(id, Nil) :+ e.stageInfos.map(_.numTasks).sum)
+        }
+        if (props.exists(_.getProperty("gstream.spec.flush") != null)) flushed.countDown()
+      }
     }
-    val streamed = graft.model.GngModel.bootstrap(seeds, params)
+    val streamed = GngModel.bootstrap(seeds, params)
     val lastKk = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
+    // the stream clones the session's conf when it starts
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
     try {
       val q = GStream.trainStreaming(spark, inDir.toString, streamed,
         triggerMs = 50L, onBatch = (k, _) => lastKk.set(k))
       try q.processAllAvailable() finally q.stop()
-      // listener events arrive asynchronously
-      val deadline = System.currentTimeMillis() + 10000
-      while (treeAggregates.get < batches.size && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(treeAggregates.get === batches.size)
+      sc.setLocalProperty("gstream.spec.flush", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("gstream.spec.flush", null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+      sc.removeSparkListener(listener)
+    }
+    // one job of one task per batch, and no probe job before it
+    assert(jobs.synchronized(jobs.toMap) === (0 until batches.size).map(_.toString -> Seq(1)).toMap)
 
-    val local = graft.model.GngModel.bootstrap(seeds, params)
+    val local = GngModel.bootstrap(seeds, params)
     var kk = 0
     for (pts <- batches)
       kk = local.step(graft.operators.GngOps.assignAggregateLocal(pts, local.centroids, local.seedWatch), kk)
     assert(kk === 3)
     assert(lastKk.get === kk)
-    assert(streamed.nodes.map(p => (p.id, p.nAssigned)) === local.nodes.map(p => (p.id, p.nAssigned)))
-    assert(streamed.edgeLines === local.edgeLines)
-    // the distributed partials merge in task-completion order, so sums
-    // may differ by an ulp (SURVEY §7.4.2): values to float tolerance
-    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
-    streamed.nodes.zip(local.nodes).foreach { case (a, b) =>
-      assert(a.centroid.corresponds(b.centroid)(close), s"node ${a.id} centroid")
-    }
-    assert(streamed.clusterWeights.corresponds(local.clusterWeights)(close))
-    assert(streamed.errors.corresponds(local.errors)(close))
+    assert(java.util.Arrays.equals(GngModel.toBytes(streamed, kk), GngModel.toBytes(local, kk)))
   }
 
   test("trainStreaming consumes files as micro-batches and snapshots the model") {
