@@ -161,7 +161,22 @@ object GStream {
     * Mirrors batchStreamRun wiring: 100 ms trigger, snapshot dirs
     * `Prototypes-kk`/`OutdatedProtos-kk`/`Edges-kk`/`Weights-kk`/
     * `timeUpdates-kk` under `outDir` at each kk where `snapshotAt`
-    * holds (default: kk = 1 and every 10th). */
+    * holds (default: kk = 1 and every 10th).
+    *
+    * `stateDir` holds the stream's durable state, in one local
+    * directory (the recovery point is published through NIO): the Spark
+    * checkpoint `<stateDir>/_ckpt` and the recovery point
+    * `<stateDir>/model-latest.bin`, the (model, kk) pair after the last
+    * non-empty batch (codec version 2, stamped with the query id and the
+    * batch id). Read the trained model from it with
+    * [[GngModel.loadState]]. When the recovery point exists, the stream
+    * resumes from it: the stored model and kk replace `model`, which is
+    * only the starting model of a dir without state (EpochState.init's
+    * rule), and files the checkpoint already consumed are not trained on
+    * again. A resume whose stored params differ from `model.params`, or
+    * whose `_ckpt` is gone, fails at this call. A stream that did not
+    * resume trains `model` in place; without `stateDir` its checkpoint
+    * goes to a temp dir and nothing survives a restart. */
   def trainStreaming(
       spark: SparkSession,
       inputDir: String,
@@ -169,13 +184,31 @@ object GStream {
       separator: String = ",",
       outDir: Option[String] = None,
       triggerMs: Long = 100L,
-      modelCheckpoint: Option[String] = None,
+      stateDir: Option[String] = None,
       excludeFiles: Seq[String] = Nil,
       snapshotAt: Int => Boolean = k => k == 1 || k % 10 == 0,
-      onBatch: (Int, Long) => Unit = (_, _) => (),
-      checkpointLocation: Option[String] = None,
-      startKk: Int = 0): StreamingQuery = {
+      onBatch: (Int, Long) => Unit = (_, _) => ()): StreamingQuery = {
     import spark.implicits._
+    val recoveryPoint = stateDir.map(java.nio.file.Paths.get(_, "model-latest.bin"))
+    val ckpt = stateDir.map(java.nio.file.Paths.get(_, "_ckpt"))
+    // Resume: the stored (model, kk, stamp), loaded once. Batch ids are
+    // relative to the checkpoint, so a recovery point without its
+    // checkpoint cannot tell which files the model already absorbed.
+    val stored = recoveryPoint.filter(java.nio.file.Files.exists(_)).map { p =>
+      require(java.nio.file.Files.isDirectory(ckpt.get),
+        s"trainStreaming: $p exists but its Spark checkpoint ${ckpt.get} does not; " +
+          "without it the stream cannot tell which files the model already absorbed")
+      val s = GngModel.loadStamped(p)
+      require(s._1.params == model.params,
+        s"trainStreaming: $p was trained with ${s._1.params}, not ${model.params}")
+      s
+    }
+    val live = stored.fold(model)(_._1)
+    // the 1-based non-empty batch counter: fading (kk % 3) and the
+    // snapshot cadence stay aligned with a never-killed run across a
+    // restart (GStreamRestartSpec proves bit-identical ends)
+    var kk = stored.fold(0)(_._2)
+
     // excludeFiles keeps bootstrap/seed files out of the stream (the
     // reference's textFileStream only saw files created after start —
     // batchStreamRun.scala:40; the structured file source reads
@@ -187,22 +220,14 @@ object GStream {
       val fn = input_file_name()
       raw = raw.filter(!excludeFiles.map(e => fn.endsWith("/" + e)).reduce(_ || _))
     }
-    val pts = parseCsvPoints(raw, separator, expectedDim = model.dim)
+    val pts = parseCsvPoints(raw, separator, expectedDim = live.dim)
 
-    // startKk: a restart resuming from [[GngModel.loadState]] continues
-    // the 1-based non-empty batch counter where the killed run left it —
-    // fading (kk % 3) and the snapshot cadence stay aligned with a
-    // never-killed run (GStreamRestartSpec proves bit-identical ends).
-    var kk = startKk
     // Exactly-once (§7.4.7): the recovery point is stamped with the
     // query id and the batch id it absorbed, and moved into place before
     // Spark writes `commits/<id>`. A batch the SAME query delivers again
     // after a crash in between is skipped (EpochState's rule); a fresh
     // checkpoint has a new query id and never skips (GStreamCrashSpec).
-    val recoveryPoint = modelCheckpoint.map(java.nio.file.Paths.get(_, "model-latest.bin"))
-    var committed: Option[(GngModel.Stamp, Int)] = recoveryPoint
-      .filter(java.nio.file.Files.exists(_)).map(GngModel.loadStamped)
-      .flatMap { case (_, storedKk, stamp) => stamp.map(_ -> storedKk) }
+    var committed: Option[GngModel.Stamp] = stored.flatMap(_._3)
     // cumulative per-batch update milliseconds, ring-buffered at 100
     // entries — the reference's timeUpdates telemetry, its ONLY
     // published baseline numbers (batchStream.scala:84,88,92-93;
@@ -210,8 +235,8 @@ object GStream {
     val timeUpdates = scala.collection.mutable.ArrayBuffer[Long](0L)
     def applyBatch(batch: Dataset[Point], batchId: Long, query: java.util.UUID): Unit = {
       val t0 = System.currentTimeMillis()
-      val stats = GngOps.assignAggregate(batch, model.centroids, model.seedWatch)
-      val next = model.step(stats, kk)
+      val stats = GngOps.assignAggregate(batch, live.centroids, live.seedWatch)
+      val next = live.step(stats, kk)
       if (next != kk) {
         kk = next
         val updateMs = System.currentTimeMillis() - t0
@@ -219,38 +244,33 @@ object GStream {
         if (timeUpdates.length > 100) timeUpdates.remove(0)
         onBatch(kk, updateMs) // per-batch telemetry (bench/monitoring)
         outDir.foreach { dir =>
-          if (snapshotAt(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
+          if (snapshotAt(kk)) writeSnapshots(spark, dir, live, kk, timeUpdates.toSeq)
         }
         // (kk, model, stamp) in one file: a restart resumes kk too
         recoveryPoint.foreach { p =>
           java.nio.file.Files.createDirectories(p.getParent)
           val stamp = GngModel.Stamp(query, batchId)
-          EpochState.publish(p, GngModel.toBytes(model, kk, Some(stamp)))
-          committed = Some(stamp -> kk)
+          EpochState.publish(p, GngModel.toBytes(live, kk, Some(stamp)))
+          committed = Some(stamp)
         }
       }
     }
     // Spark's streaming WAL (offsets + commits) fsyncs per micro-batch;
-    // with no explicit checkpointLocation it lands in java.io.tmpdir,
-    // and on a contended disk those fsyncs dominate small-batch
-    // training (measured: 92-batch runs inflating 3x under host I/O
-    // load). Callers that need restartability pass a durable dir;
-    // harnesses pass tmpfs scratch.
+    // without a stateDir it lands in java.io.tmpdir, and on a contended
+    // disk those fsyncs dominate small-batch training (measured: 92-batch
+    // runs inflating 3x under host I/O load). Callers that need
+    // restartability pass a durable dir; harnesses pass tmpfs scratch.
     val base = pts.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
-    checkpointLocation.foreach(c => base.option("checkpointLocation", c))
+    ckpt.foreach(c => base.option("checkpointLocation", c.toString))
     base
       .foreachBatch { (batch: Dataset[Point], batchId: Long) =>
         // StreamExecution sets this on the stream thread; the id persists
         // in the checkpoint, so it names the query across restarts
         val query = java.util.UUID.fromString(
           spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
-        val ours = committed.filter(_._1.query == query)
-        for ((_, storedKk) <- ours) require(storedKk == kk,
-          s"trainStreaming: this query's recovery point ${recoveryPoint.get} holds kk " +
-            s"$storedKk, but the stream is at startKk $kk; resume with the stored (model, kk)")
-        if (!ours.exists(c => EpochState.replayed(batchId, c._1.batchId)))
+        if (!committed.exists(c => c.query == query && EpochState.replayed(batchId, c.batchId)))
           applyBatch(batch, batchId, query)
       }
       .start()

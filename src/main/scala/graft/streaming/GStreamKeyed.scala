@@ -43,23 +43,8 @@ object GStreamKeyed {
   final case class KeyedGngUpdate(key: Long, kk: Int, nodeCount: Int, model: Array[Byte])
 
   /** Streaming state per key: points buffered before the 2-point
-    * bootstrap (Java-serialized), then the model ([[GngModel.toBytes]])
-    * + batch counter. */
-  final case class KeyedGngState(pending: Array[Byte], model: Array[Byte], kk: Int)
-
-  /** Java serialization — only for the pre-bootstrap `Array[Point]`
-    * buffer; models use [[GngModel.toBytes]]. */
-  private[graft] def serialize(obj: AnyRef): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.ObjectOutputStream(bos)
-    try out.writeObject(obj) finally out.close()
-    bos.toByteArray
-  }
-
-  private[graft] def deserialize[T](bytes: Array[Byte]): T = {
-    val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
-    try in.readObject().asInstanceOf[T] finally in.close()
-  }
+    * bootstrap, then the model ([[GngModel.toBytes]]) + batch counter. */
+  final case class KeyedGngState(pending: Array[Point], model: Array[Byte], kk: Int)
 
   /** Tag a dense-row DataFrame into [[KeyedPoint]]s ([[GStream.toPoints]]
     * with a key column). */
@@ -120,20 +105,19 @@ object GStreamKeyed {
 
   /** The ONE per-key G-Stream step both keyed streaming paths run.
     * `model` is the key's stored model ([[GngModel.toBytes]], its kk
-    * inside) or null; `pending` its Java-serialized pre-bootstrap
-    * buffer or null; `arrived` the batch, ascending id. A stored model
-    * takes one [[GngModel.step]]. Without one, the buffer plus the
+    * inside) or null; `pending` its pre-bootstrap buffer or null;
+    * `arrived` the batch, ascending id. A stored model takes one
+    * [[GngModel.step]]. Without one, the buffer plus the
     * arrivals stay buffered below two points; otherwise the two lowest
     * ids bootstrap ([[GngModel.bootstrap]]) and the rest form batch 1. */
-  private def advanceKey(model: Array[Byte], pending: Array[Byte],
+  private def advanceKey(model: Array[Byte], pending: Array[Point],
       arrived: Array[Point], params: GngParams): KeyAdvance =
     if (model != null) {
       val (m, kk) = GngModel.fromBytes(model)
       val next = m.step(GngOps.assignAggregateLocal(arrived, m.centroids, m.seedWatch), kk)
       if (next == kk) Unchanged else Trained(m, next)
     } else {
-      val buffered = if (pending == null) Array.empty[Point] else deserialize[Array[Point]](pending)
-      val all = (buffered ++ arrived).sortBy(_.id)
+      val all = (Option(pending).getOrElse(Array.empty[Point]) ++ arrived).sortBy(_.id)
       if (all.length < 2) Buffered(all)
       else {
         val m = GngModel.bootstrap(all, params)
@@ -163,8 +147,9 @@ object GStreamKeyed {
     * design, and the property that lets tenant count scale with the
     * cluster. Run with a checkpointLocation for restartability: the
     * state store versions per batch, so a restart resumes each key's
-    * model exactly (the mechanism GStreamRestartSpec proves for the
-    * single-model path via explicit saveState). */
+    * model exactly (GStreamRestartSpec proves the same for the
+    * single-model path, which resumes from its state dir's recovery
+    * point). */
   def trainKeyedStreaming(streamed: Dataset[KeyedPoint],
       params: GngParams): Dataset[KeyedGngUpdate] = {
     val spark = streamed.sparkSession
@@ -180,11 +165,11 @@ object GStreamKeyed {
           advanceKey(prev.map(_.model).orNull, prev.map(_.pending).orNull, arrived, params) match {
             case Unchanged => Iterator.empty
             case Buffered(all) =>
-              state.update(KeyedGngState(serialize(all), null, 0))
+              state.update(KeyedGngState(all, null, 0))
               Iterator.empty
             case Trained(model, kk) =>
               val bytes = GngModel.toBytes(model, kk)
-              state.update(KeyedGngState(Array.emptyByteArray, bytes, kk))
+              state.update(KeyedGngState(null, bytes, kk))
               Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, bytes))
           }
         }
@@ -220,7 +205,7 @@ object GStreamKeyed {
         // Canonical order — group iterators deliver in shuffle order.
         var kk = 0
         val m = GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks, (k, _) => kk = k)
-        (key, kk, m.nodeCount, GngModel.toBytes(m, kk), null: Array[Byte])
+        (key, kk, m.nodeCount, GngModel.toBytes(m, kk), null: Array[Point])
       }
       .toDF("key", "kk", "node_count", "model", "pending")
   }
@@ -258,7 +243,7 @@ object GStreamKeyed {
     val st = state
       .select(col("key").cast("long"), col("kk").cast("int"),
         col("node_count").cast("int"), col("model"), col("pending"))
-      .as[(Long, Int, Int, Array[Byte], Array[Byte])]
+      .as[(Long, Int, Int, Array[Byte], Array[Point])]
     st.groupByKey(_._1)
       .cogroup(batch.groupByKey(_.key)) { (key, stIt, ptsIt) =>
         val pts = ptsIt.map(kp => Point(kp.features, kp.label, kp.id))
@@ -267,9 +252,9 @@ object GStreamKeyed {
         if (pts.isEmpty) existing.iterator
         else advanceKey(existing.map(_._4).orNull, existing.map(_._5).orNull, pts, params) match {
           case Unchanged => existing.iterator
-          case Buffered(all) => Iterator.single((key, 0, 0, null: Array[Byte], serialize(all)))
+          case Buffered(all) => Iterator.single((key, 0, 0, null: Array[Byte], all))
           case Trained(model, kk) =>
-            Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk), null: Array[Byte]))
+            Iterator.single((key, kk, model.nodeCount, GngModel.toBytes(model, kk), null: Array[Point]))
         }
       }
       .toDF("key", "kk", "node_count", "model", "pending")

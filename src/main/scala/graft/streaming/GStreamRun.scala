@@ -20,13 +20,12 @@ import graft.model.GngParams
   * their reference roles (output labeling / total-window count used for
   * the snapshot cadence).
   *
-  * A restart with the same `dirSortie` resumes: the Spark checkpoint
-  * lives in `dirSortie/_model/_ckpt`, next to the model's recovery
-  * point `dirSortie/_model/model-latest.bin` (batch ids are relative to
-  * the checkpoint, so the two move together). The stored model and its
-  * batch counter replace the `nodes2.txt` bootstrap, and files the
-  * checkpoint already consumed — or that were rotated away — are never
-  * trained on again.
+  * A restart with the same `dirSortie` resumes: `dirSortie/_model` is
+  * the stream's state dir ([[GStream.trainStreaming]]'s `stateDir`), with
+  * the Spark checkpoint in `_ckpt` next to the recovery point
+  * `model-latest.bin`. The stored model and its batch counter replace
+  * the `nodes2.txt` bootstrap, and files the checkpoint already
+  * consumed — or that were rotated away — are never trained on again.
   */
 object GStreamRun {
 
@@ -50,38 +49,22 @@ object GStreamRun {
   def start(spark: SparkSession, dirData: String, dirSortie: String,
       separator: String, decayFactor: Double, lambdaAge: Double,
       nbNodesToAdd: Int, nbWind: Int): StreamingQuery = {
-    import spark.implicits._
     val params = GngParams(decayFactor = decayFactor, lambdaAge = lambdaAge,
       nbNodesToAdd = nbNodesToAdd)
-    val modelDir = java.nio.file.Paths.get(dirSortie, "_model")
-    val ckpt = modelDir.resolve("_ckpt")
-    val recoveryPoint = modelDir.resolve("model-latest.bin")
-    val (model, startKk) =
-      if (java.nio.file.Files.exists(recoveryPoint)) {
-        require(java.nio.file.Files.isDirectory(ckpt),
-          s"GStreamRun: $recoveryPoint exists but its Spark checkpoint $ckpt does not; " +
-            "without it the stream cannot tell which files the model already absorbed")
-        val (stored, kk) = graft.model.GngModel.loadState(recoveryPoint)
-        require(stored.params == params,
-          s"GStreamRun: $recoveryPoint was trained with ${stored.params}, not $params")
-        (stored, kk)
-      } else {
-        // bootstrap scan: first two rows of nodes2.txt (reference takes
-        // exactly 2; batchStream.scala:72-78)
-        val seed = GStream.parseCsvPoints(
-          spark.read.text(s"$dirData/nodes2.txt").limit(2), separator)
-        (GStream.bootstrap(seed, params), 0)
-      }
+    // bootstrap scan: first two rows of nodes2.txt (reference takes
+    // exactly 2; batchStream.scala:72-78; it scans them at every start,
+    // batchStreamRun.scala:37). A restart resumes from the state dir and
+    // ignores this model.
+    val seed = GStream.parseCsvPoints(
+      spark.read.text(s"$dirData/nodes2.txt").limit(2), separator)
     // reference-exact snapshot cadence (batchStream.scala:95):
     // kk ∈ {1, ⌊nbWind/9⌋·{1..8}, every 10th past 8⌊nbWind/9⌋+10, ≥nbWind−2}
-    GStream.trainStreaming(spark, dirData, model, separator,
+    GStream.trainStreaming(spark, dirData, GStream.bootstrap(seed, params), separator,
       outDir = Some(dirSortie),
       snapshotAt = GStream.referenceCadence(nbWind),
-      modelCheckpoint = Some(modelDir.toString),
+      stateDir = Some(java.nio.file.Paths.get(dirSortie, "_model").toString),
       // the seed file is never re-ingested as a batch (textFileStream
       // parity for the one pre-existing file the reference layout has)
-      excludeFiles = Seq("nodes2.txt"),
-      checkpointLocation = Some(ckpt.toString),
-      startKk = startKk)
+      excludeFiles = Seq("nodes2.txt"))
   }
 }

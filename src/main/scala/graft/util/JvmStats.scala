@@ -1,7 +1,6 @@
 package graft.util
 
-/** JVM-level measurement helpers shared by the bench and profiling
-  * mains ([[graft.Bench]], [[graft.tools.ProfT05]]). */
+/** JVM-level measurement helpers for the bench main ([[graft.Bench]]). */
 object JvmStats {
   /** Total GC time (ms) summed over all collectors since JVM start. */
   def gcMs(): Long = {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, StandardCopyOption}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+import org.apache.spark.sql.streaming.StreamingQuery
 import scala.jdk.CollectionConverters._
 import graft.SparkTestSupport
 import graft.model.{GngModel, GngParams, Point}
@@ -76,19 +76,20 @@ class GStreamCrashSpec extends AnyFunSuite with SparkTestSupport {
 
   test("a batch delivered again after a crash applies exactly once, in both halves of the window") {
     val in = scratch("gsc-in")
-    val ckpt = scratch("gsc-ckpt")
-    val mdl = scratch("gsc-mdl")
-    val latest = mdl.resolve("model-latest.bin")
+    val state = scratch("gsc-state")
+    val ckpt = state.resolve("_ckpt")
+    val latest = state.resolve("model-latest.bin")
     val before = scratch("gsc-before").resolve("model-before.bin")
     writeBatches(in, nBatches)
-    def train(model: GngModel, startKk: Int, onBatch: (Int, Long) => Unit) =
-      GStream.trainStreaming(spark, in.toString, model, triggerMs = 1L,
-        modelCheckpoint = Some(mdl.toString), checkpointLocation = Some(ckpt.toString),
-        startKk = startKk, onBatch = onBatch)
+    // every run passes the fresh model; a restart ignores it and resumes
+    // from the state dir
+    def train(onBatch: (Int, Long) => Unit) =
+      GStream.trainStreaming(spark, in.toString, freshModel, triggerMs = 1L,
+        stateDir = Some(state.toString), onBatch = onBatch)
 
     // the never-killed run; onBatch fires before a batch's recovery point
     // is published, so at the last kk the file still holds the batch before
-    drain(train(freshModel, 0, (kk, _) => if (kk == nBatches) Files.copy(latest, before)))
+    drain(train((kk, _) => if (kk == nBatches) Files.copy(latest, before)))
     val full = GngModel.loadState(latest)
     assert(full._2 === nBatches)
     val last = lastCommitted(ckpt)
@@ -97,41 +98,19 @@ class GStreamCrashSpec extends AnyFunSuite with SparkTestSupport {
     // the file holds the batch before, and the last batch is uncommitted
     uncommit(ckpt, last)
     Files.copy(before, latest, StandardCopyOption.REPLACE_EXISTING)
-    val (mB, kkB) = GngModel.loadState(latest)
-    assert(kkB === nBatches - 1)
+    assert(GngModel.loadState(latest)._2 === nBatches - 1)
     val seenB = scala.collection.mutable.ArrayBuffer[Int]()
-    drain(train(mB, kkB, (kk, _) => seenB += kk))
+    drain(train((kk, _) => seenB += kk))
     assert(seenB.toSeq === Seq(nBatches), "the uncommitted batch applies once")
     assertSame(full, GngModel.loadState(latest))
 
     // (a) the crash came after the recovery point moved into place and
     // before Spark wrote commits/<last>: the batch arrives again, skipped
     uncommit(ckpt, last)
-    val (mA, kkA) = GngModel.loadState(latest)
     val seenA = scala.collection.mutable.ArrayBuffer[Int]()
-    drain(train(mA, kkA, (kk, _) => seenA += kk))
+    drain(train((kk, _) => seenA += kk))
     assert(Files.exists(ckpt.resolve(s"commits/$last")), "Spark delivered the batch again")
     assert(seenA.isEmpty, s"the delivered-again batch was applied a second time: kk $seenA")
     assertSame(full, GngModel.loadState(latest))
-  }
-
-  test("a restart of the same query whose startKk differs from the stored kk fails fast") {
-    val in = scratch("gsc-kk-in")
-    val ckpt = scratch("gsc-kk-ckpt")
-    val mdl = scratch("gsc-kk-mdl")
-    writeBatches(in, 3)
-    def train(model: GngModel, startKk: Int) =
-      GStream.trainStreaming(spark, in.toString, model, triggerMs = 1L,
-        modelCheckpoint = Some(mdl.toString), checkpointLocation = Some(ckpt.toString),
-        startKk = startKk)
-    drain(train(freshModel, 0))
-    val (m, kk) = GngModel.loadState(mdl.resolve("model-latest.bin"))
-    assert(kk === 3)
-    uncommit(ckpt, lastCommitted(ckpt))
-    val e = intercept[StreamingQueryException](drain(train(m, kk - 1)))
-    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(_.getMessage).mkString(" | ")
-    assert(msg.contains(s"holds kk $kk") && msg.contains(s"startKk ${kk - 1}"), msg)
-    assert(GngModel.loadState(mdl.resolve("model-latest.bin"))._2 === kk, "nothing applied")
   }
 }

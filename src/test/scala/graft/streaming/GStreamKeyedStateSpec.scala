@@ -134,7 +134,8 @@ class GStreamKeyedStateSpec extends AnyFunSuite with SparkTestSupport {
     assert(GStreamKeyed.keyedModel(spark, dir, 7L) === None, "one point must only buffer")
     val st = EpochState.state(spark, dir).filter($"key" === 7L).head()
     assert(st.getAs[Array[Byte]]("model") == null)
-    assert(st.getAs[Array[Byte]]("pending") != null)
+    assert(st.getSeq[org.apache.spark.sql.Row](st.fieldIndex("pending"))
+      .map(_.getAs[Long]("id")) === Seq(kp(7L, 0).id))
     GStreamKeyed.commitKeyedBatch(spark, dir,
       spark.createDataset((1 until 50).map(i => kp(7L, i))), params, epoch = 1L)
     val served = GStreamKeyed.keyedModel(spark, dir, 7L)

@@ -7,9 +7,9 @@ import graft.model.{GngModel, GngParams, Point}
 
 /** Kill-and-restart at the gng_throughput scale (92 files × 200 2-D
   * points — the DS1-200 run shape): a run killed mid-stream and resumed
-  * from the (kk, model) recovery point over the SAME Spark streaming
-  * checkpoint must end bit-identical to a never-killed run. This is the
-  * restart contract at the scale the BASELINE.md measurement runs, not
+  * on the SAME state dir (the (kk, model) recovery point and the Spark
+  * streaming checkpoint) must end bit-identical to a never-killed run.
+  * This is the restart contract at the scale the BASELINE.md measurement runs, not
   * just the unit-scale case in GStreamRunSpec. */
 class GStreamRestartSpec extends AnyFunSuite with SparkTestSupport {
 
@@ -52,36 +52,31 @@ class GStreamRestartSpec extends AnyFunSuite with SparkTestSupport {
   test("kill at batch 46 + resume from (kk, model) ends bit-identical to a continuous run") {
     // ---- run A: all 92 files, never killed
     val dirA = scratch("gsr92-a-in")
-    val ckptA = scratch("gsr92-a-ckpt")
-    val mdlA = scratch("gsr92-a-mdl").toString
+    val mdlA = scratch("gsr92-a-state").toString
     writeBatches(dirA, 0, nBatches)
     val qA = GStream.trainStreaming(spark, dirA.toString, freshModel,
-      triggerMs = 1L, modelCheckpoint = Some(mdlA),
-      checkpointLocation = Some(ckptA.toString))
+      triggerMs = 1L, stateDir = Some(mdlA))
     try qA.processAllAvailable() finally qA.stop()
     val (modelA, kkA) = GngModel.loadState(Paths.get(mdlA, "model-latest.bin"))
     assert(kkA === nBatches)
 
     // ---- run B: first 46 files, stop (the "kill") ...
     val dirB = scratch("gsr92-b-in")
-    val ckptB = scratch("gsr92-b-ckpt")
-    val mdlB = scratch("gsr92-b-mdl").toString
+    val mdlB = scratch("gsr92-b-state").toString
     writeBatches(dirB, 0, 46)
     val qB1 = GStream.trainStreaming(spark, dirB.toString, freshModel,
-      triggerMs = 1L, modelCheckpoint = Some(mdlB),
-      checkpointLocation = Some(ckptB.toString))
+      triggerMs = 1L, stateDir = Some(mdlB))
     try qB1.processAllAvailable() finally qB1.stop()
-    val (midModel, midKk) = GngModel.loadState(Paths.get(mdlB, "model-latest.bin"))
+    val midKk = GngModel.loadState(Paths.get(mdlB, "model-latest.bin"))._2
     assert(midKk === 46, "the recovery point carries the batch counter")
 
-    // ... then RESTART from the recovery point: same streaming
-    // checkpoint (the source WAL skips the 46 consumed files), resumed
-    // model object, resumed kk; the remaining files arrive
+    // ... then RESTART on the same state dir with a fresh model: the
+    // stream resumes the stored model and kk, the source WAL skips the
+    // 46 consumed files, and the remaining files arrive
     writeBatches(dirB, 46, nBatches)
     val batchesSeen = scala.collection.mutable.ArrayBuffer[Int]()
-    val qB2 = GStream.trainStreaming(spark, dirB.toString, midModel,
-      triggerMs = 1L, modelCheckpoint = Some(mdlB),
-      checkpointLocation = Some(ckptB.toString), startKk = midKk,
+    val qB2 = GStream.trainStreaming(spark, dirB.toString, freshModel,
+      triggerMs = 1L, stateDir = Some(mdlB),
       onBatch = (kk, _) => batchesSeen += kk)
     try qB2.processAllAvailable() finally qB2.stop()
     val (modelB, kkB) = GngModel.loadState(Paths.get(mdlB, "model-latest.bin"))

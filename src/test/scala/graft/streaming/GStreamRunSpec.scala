@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import graft.SparkTestSupport
 
 /** The reference-compatible CLI wiring: seed from nodes2.txt, stream
-  * files arriving AFTER start (textFileStream parity via modifiedAfter),
-  * snapshot + model checkpoint under dirSortie. */
+  * the other files of dirData (textFileStream parity: the seed file is
+  * excluded by name), snapshot + model checkpoint under dirSortie. */
 class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
 
   test("start(): seeds from nodes2.txt, trains on post-start files, snapshots") {
@@ -101,7 +101,7 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
   test("a restarted stream resumes training from the model checkpoint") {
     val dirData = Files.createTempDirectory("gsr2-in").toString
     val outDir = Files.createTempDirectory("gsr2-out").toString
-    val ckpt = s"$outDir/_model"
+    val state = s"$outDir/_model"
     import spark.implicits._
     val base = System.currentTimeMillis() - 60000
     def batch(dir: String, b: Int): Unit = {
@@ -126,26 +126,25 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
     // phase 1: fresh model, two batches
     batch(dirData, 0); batch(dirData, 1)
     val q1 = GStream.trainStreaming(spark, dirData, freshModel,
-      modelCheckpoint = Some(ckpt), triggerMs = 50L)
+      stateDir = Some(state), triggerMs = 50L)
     val deadline1 = System.currentTimeMillis() + 30000
-    while (!Files.exists(Paths.get(ckpt, "model-latest.bin")) &&
+    while (!Files.exists(Paths.get(state, "model-latest.bin")) &&
       System.currentTimeMillis() < deadline1) Thread.sleep(200)
     q1.processAllAvailable(); q1.stop()
     val (afterPhase1, kkPhase1) = graft.model.GngModel.loadState(
-      Paths.get(ckpt, "model-latest.bin"))
+      Paths.get(state, "model-latest.bin"))
     assert(kkPhase1 === 2)
     val totalPhase1 = total(afterPhase1)
     assert(totalPhase1 === 2L + 80L, "both seeds + every phase-1 point, each once")
 
-    // phase 2: RESTART from the checkpoint, new files arrive
+    // phase 2: RESTART on the same state dir, new files arrive; the
+    // fresh model is ignored, and the checkpoint skips b0 and b1
     batch(dirData, 2); batch(dirData, 3)
-    val q2 = GStream.trainStreaming(spark, dirData, afterPhase1,
-      modelCheckpoint = Some(ckpt), triggerMs = 50L,
-      excludeFiles = Seq("b0.csv", "b1.csv"), // already-consumed batches
-      startKk = kkPhase1)
+    val q2 = GStream.trainStreaming(spark, dirData, freshModel,
+      stateDir = Some(state), triggerMs = 50L)
     q2.processAllAvailable(); q2.stop()
     val (restarted, kkRestarted) = graft.model.GngModel.loadState(
-      Paths.get(ckpt, "model-latest.bin"))
+      Paths.get(state, "model-latest.bin"))
     assert(kkRestarted === 4)
     // the resumed model added exactly the 80 valid phase-2 points to the
     // phase-1 counts — nothing lost, nothing counted twice
@@ -154,12 +153,12 @@ class GStreamRunSpec extends AnyFunSuite with SparkTestSupport {
     // a never-killed run over the same four batches: identical per-node
     // counts, live and archived
     val dirOnce = Files.createTempDirectory("gsr2-once").toString
-    val ckptOnce = Files.createTempDirectory("gsr2-once-out").toString
+    val stateOnce = Files.createTempDirectory("gsr2-once-out").toString
     (0 until 4).foreach(batch(dirOnce, _))
     val qOnce = GStream.trainStreaming(spark, dirOnce, freshModel,
-      modelCheckpoint = Some(ckptOnce), triggerMs = 50L)
+      stateDir = Some(stateOnce), triggerMs = 50L)
     qOnce.processAllAvailable(); qOnce.stop()
-    val (once, kkOnce) = graft.model.GngModel.loadState(Paths.get(ckptOnce, "model-latest.bin"))
+    val (once, kkOnce) = graft.model.GngModel.loadState(Paths.get(stateOnce, "model-latest.bin"))
     assert(kkOnce === 4)
     assert(counts(restarted) === counts(once))
     assert(restarted.prototypeLines === once.prototypeLines)

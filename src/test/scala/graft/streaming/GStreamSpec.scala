@@ -109,6 +109,21 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     assert(nearest(100, 100) < 15.0)
   }
 
+  test("fitChunked above localPathMaxRows: the distributed path equals fitChunkedLocal") {
+    import spark.implicits._
+    val pts = clusterPoints(GStream.localPathMaxRows + 1)
+    // one partition: the per-partition partials merge left to right into
+    // exactly the local sums, so the two fits agree byte for byte
+    val ds = spark.createDataset(pts).coalesce(1)
+    val kks, localKks = scala.collection.mutable.ArrayBuffer[Int]()
+    val m = GStream.fitChunked(ds, GngParams(), nChunks = 10, (kk, _) => kks += kk)
+    val local = GStream.fitChunkedLocal(pts.toArray, GngParams(), nChunks = 10,
+      (kk, _) => localKks += kk)
+    assert(kks.toSeq === (1 to 10))
+    assert(kks.toSeq === localKks.toSeq)
+    assert(GngModel.toBytes(m, kks.last).toSeq === GngModel.toBytes(local, localKks.last).toSeq)
+  }
+
   test("fitChunkedLocal absorbs a point whose every distance overflows: it goes to node 0") {
     val poison = Point(Array(1e200, 0.0), 0, 41L)
     // chunk 0 (ids ≡ 0 mod 4) runs as kk = 1; chunk 1 holds the point
